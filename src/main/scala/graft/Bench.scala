@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import scala.collection.immutable.{ListMap, TreeMap}
+import scala.collection.mutable
+
+import graft.core.{Engine, Json}
 
 /** Benchmark main: times the headline query set on SPARK_GRAFT_SF_DIR,
   * writes the full record to `bench_out.json`, and prints a COMPACT one-line
@@ -103,83 +109,17 @@ object Bench {
     // sampled at start AND end of the run: a poisoner present at either
     // edge (or both) is named in the artifact's "concurrent" field
     val concurrentAtStart = concurrentGraftJvms()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // Shuffle width is POLICY now, not a knob: derived from the tier's
-    // input bytes (Engine.shuffleWidth — one partition per 16 MB of input,
-    // floored at cores), because the sf10 probe measured d2 spill-bound at
-    // 23x/decade when width was pinned to core count vs 10x/decade
-    // (linear) when width scaled with data; see SCALE.md.
-    // SPARK_GRAFT_SHUFFLE remains an explicit A/B override for probes.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      graft.core.Engine.shuffleWidth(sfDir, cpus.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the bench tiers are SINGLE parquet files; without sub-file splits
-      // every scan (and the partial agg riding it) is one task, which
-      // serializes the map side exactly where a real cluster would fan out
-      // over row groups. 16m keeps the sf1 probe's 120 MB lineitem at ~8
-      // scan partitions; the library default (128m) stays untouched — at
-      // 100 TB files arrive pre-split and bigger tasks are correct.
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      // aggressive periodic GC so the ContextCleaner actually releases
-      // finished queries' shuffle files: at a large bench heap (sf100 runs
-      // 64g) ordinary GC pressure is too low to ever collect the shuffle
-      // references, the cleaner never fires, and tens of GB of dead
-      // shuffle data accumulate until the disk fills — measured: the first
-      // sf100 attempt died ENOSPC mid-warmup with ~50 GB of orphaned
-      // shuffle dirs. Long-lived real deployments run exactly this knob.
-      // 1min after the THIRD sf100 attempt: the GC can only reclaim DEAD
-      // shuffle, and at a 5 GB/min production rate a 2min dwell stacks one
-      // rep's garbage under the next rep's live writes.
-      // SPARK_GRAFT_GC_INTERVAL: scratch-pressure override for the scale
-      // tiers. d2's sf100 recording produced dead shuffle at ~6 GB/min
-      // while the PREVIOUS execution's ~30 GB corpse was still inside the
-      // 1min reclaim lag - the disk bottomed at 204 MB and 143 tasks took
-      // ENOSPC before the cleaner caught up. 20s reclaim lag is the
-      // difference between riding the dwell curve and falling off it.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_GC_INTERVAL", "1min"))
-      // single-JVM local mode: an executor heartbeat is a self-ping, and
-      // "losing" the only executor to a missed one is fatal chaos, not
-      // fault tolerance. The sf100 fourth attempt died exactly so: a 149s
-      // stop-the-world full GC (the periodic System.gc() at a 64g heap,
-      // see run_tool.sh's ExplicitGCInvokesConcurrent) crossed the 120s
-      // default and HeartbeatReceiver removed the driver-executor. A
-      // cluster deployment keeps the defaults - there a dead-silent
-      // executor really is lost.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      // tier-keyed codec + compressed checkpoints, same policy (and
-      // rationale) as Engine.session / Engine.ioCodec: attempt 3 died
-      // ENOSPC under q21's ~3x-lineitem live lz4 shuffle+spill plus 8 GB
-      // of uncompressed durable-Stage checkpoint blocks on the ~94 GB
-      // volume; zstd above the tier threshold, lz4 below it (where its
-      // per-stream constants are a measured 3x wall regression).
-      .config("spark.io.compression.codec", graft.core.Engine.ioCodec(sfDir))
-      .config("spark.checkpoint.compress", "true")
-      // stateful streaming entries run on the POLICY state store
-      // (Engine.stateStoreProvider): in-memory while projected state fits
-      // the heap, RocksDB above that — measured constants in SCALE.md
-      .config("spark.sql.streaming.stateStore.providerClass",
-        graft.core.Engine.stateStoreProvider(sfDir))
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        "false")
-      .getOrCreate()
+    // the same session (and physical policy) as Verify and the CLI: shuffle
+    // width, split size, codec, state store and staging all derive from
+    // the tier inside Engine.session
+    val spark = Engine.session("graft-bench", dataDir = Some(sfDir))
     spark.sparkContext.setLogLevel("WARN")
-    // staging policy (core.Stage): Bench builds its own session (bench-
-    // specific knobs above), so it must apply the durable-stage policy
-    // itself — the second sf100 attempt died in the localCheckpoint
-    // eviction-vs-shuffle-GC race precisely because the round-13 policy
-    // lived only in Engine.session and Bench never set the flag
-    graft.core.Engine.applyDurableStage(spark,
-      graft.core.Engine.durableStagePolicy(sfDir))
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    // every swallowed failure lands here as "class: message", keyed by what
+    // failed, and is written to bench_out.json
+    val errors = mutable.LinkedHashMap.empty[String, String]
+    def fail(key: String, e: Throwable): Unit =
+      errors(key) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
     val fns = SparkEntry.queries
     // optional name filter (dev loop / scale probes — e.g. BENCH_sf10 runs
     // only the subquadratic set, leaving out the quadratic-by-spec d5 and
@@ -208,13 +148,15 @@ object Bench {
     // the amortization stays auditable per run (a large value = this run
     // paid the build; a small one = cache hit; absent = tier warm-up
     // skipped, the build lands visibly in rep 1's rep_times instead).
+    // The dirs are deduplicated: a warm-up dir equal to the tier would
+    // otherwise run a second, cache-hit pass over the recorded build time.
     val indexBacked = Set("sim2_ivf_knn", "sim6_ivfpq")
-    val indexBuildSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    (if (skipTierWarmup) Seq(warmupDir) else Seq(warmupDir, sfDir)).foreach { dir =>
+    val indexBuildSecs = mutable.LinkedHashMap.empty[String, Double]
+    (if (skipTierWarmup) Seq(warmupDir) else Seq(warmupDir, sfDir)).distinct.foreach { dir =>
       queries.Headline.benchNames.filter(keep).foreach { name =>
         val t0 = System.nanoTime()
         try { fns(name)(spark, dir).count() }
-        catch { case _: Throwable => () }
+        catch { case e: Throwable => fail(s"$name/warmup ${new java.io.File(dir).getName}", e) }
         if (dir == sfDir && indexBacked(name))
           indexBuildSecs(name) = (System.nanoTime() - t0) / 1e9
       }
@@ -225,7 +167,7 @@ object Bench {
     def timeReps(name: String, n: Int): Seq[Double] = (1 to n).flatMap { _ =>
       val t0 = System.nanoTime()
       try { fns(name)(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case _: Throwable => None }
+      catch { case e: Throwable => fail(s"$name/rep", e); None }
     }
     def spread(ts: Seq[Double]): Double =
       if (ts.size < 2 || ts.min <= 0) 1.0 else ts.max / ts.min
@@ -260,13 +202,13 @@ object Bench {
     // streaming policy (state-commit IO is per-partition-fixed — see
     // Engine.streamShuffleWidth) for the stream entries, restore after
     val streamWidth = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      graft.core.Engine.streamShuffleWidth(sfDir, cpus.toInt).toString)
+      Engine.streamShuffleWidth(sfDir, spark.sparkContext.defaultParallelism).toString)
     spark.conf.set("spark.sql.shuffle.partitions", streamWidth)
     // per-entry state-store evidence from the last completed run: which
     // provider the policy chose, summed state-commit time, peak state
     // memory, rows updated — so the artifact shows WHAT the state machinery
     // cost, not just the wall time it rode in
-    val streamStateInfo = scala.collection.mutable.Map.empty[String, String]
+    val streamStateInfo = mutable.Map.empty[String, Map[String, Any]]
     def streamOnce(name: String,
         build: () => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
@@ -281,13 +223,13 @@ object Bench {
           val provider =
             if (spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
               .contains("RocksDB")) "rocksdb" else "memory"
-          streamStateInfo(name) =
-            s""""$name":{"provider":"$provider","commit_ms":${ops.map(_.commitTimeMs).sum},""" +
-            s""""mem_bytes":${ops.map(_.memoryUsedBytes).max},""" +
-            s""""rows_updated":${ops.map(_.numRowsUpdated).sum}}"""
+          streamStateInfo(name) = ListMap("provider" -> provider,
+            "commit_ms" -> ops.map(_.commitTimeMs).sum,
+            "mem_bytes" -> ops.map(_.memoryUsedBytes).max,
+            "rows_updated" -> ops.map(_.numRowsUpdated).sum)
         }
         Some((System.nanoTime() - t0) / 1e9)
-      } catch { case _: Throwable => None }
+      } catch { case e: Throwable => fail(s"$name/rep", e); None }
     }
     // Feed shape: the JOIN-BUFFERED entry (st6) replays a time-ordered
     // multi-file feed when the chunking policy says state depth is the
@@ -297,7 +239,7 @@ object Bench {
     // reported separately (`stream_feed`), not folded into the per-query
     // wall: a live feed arrives time-ordered for free.
     val feedChunks = sys.env.get("SPARK_GRAFT_FEED_CHUNKS").map(_.toInt)
-      .getOrElse(graft.core.Engine.streamFeedChunks(sfDir, joinBuffered = true))
+      .getOrElse(Engine.streamFeedChunks(sfDir, joinBuffered = true))
     val (feedDir, feedPrepSec): (Option[String], Double) =
       if (feedChunks > 1 && keep("st6_stream_interval_join")) {
         val t0 = System.nanoTime()
@@ -320,13 +262,7 @@ object Bench {
         (n, ts, spread(ts) > NoisyRatio)
       }
     spark.conf.set("spark.sql.shuffle.partitions", shuffle)
-    val streamEps = streamResults.collect { case (n, ts, _) if ts.nonEmpty =>
-      "\"" + n + "\":" + (eventsRows / ts.min).toLong
-    }.mkString("{", ",", "}")
     val all = results ++ streamResults
-    val noisy = all.collect {
-      case (name, _, isNoisy) if isNoisy => "\"" + name + "\""
-    }.mkString("[", ",", "]")
     // per-query physical-plan fingerprint: md5 of the CANONICALIZED plan
     // (expression-id-free) with run-local artifacts masked (scan paths,
     // checkpoint RDD args — see maskPlan), so plan drift across rounds is
@@ -334,19 +270,17 @@ object Bench {
     // environment; a changed plan_sha is a real plan change. This is
     // planning work only for most queries, but index-backed ones (sim2,
     // sim6) run their small probe/build jobs while constructing the frame.
-    val planShaPairs: Seq[(String, String)] =
+    val planShas: Seq[(String, String)] =
       queries.Headline.benchNames.filter(keep).map { name =>
         val sha = try {
           val plan = maskPlan(fns(name)(spark, sfDir).queryExecution.executedPlan
             .canonicalized.toString)
           java.security.MessageDigest.getInstance("MD5")
-            .digest(plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            .digest(plan.getBytes(StandardCharsets.UTF_8))
             .take(6).map(b => f"$b%02x").mkString
-        } catch { case _: Throwable => "error" }
+        } catch { case e: Throwable => fail(s"$name/plan_sha", e); "error" }
         name -> sha
       }
-    val planSha = planShaPairs.map { case (n, s) => "\"" + n + "\":\"" + s + "\"" }
-      .mkString("{", ",", "}")
     // plan-regression gate: diff each fingerprint against the committed
     // per-tier baseline (`bench_plans.json` in cwd) and name every changed
     // plan in the output, so plan drift is machine-flagged the round it
@@ -359,73 +293,72 @@ object Bench {
     // are masked per maskPlan, so a flip here is a REAL plan change, not a
     // path or session artifact. The baseline updates in place each run:
     // committing it alongside the round's code is what arms the next
-    // round's diff.
+    // round's diff. An unreadable baseline is reported and left untouched.
     val tierKey = new java.io.File(sfDir).getName
-    val plansPath = java.nio.file.Paths.get("bench_plans.json")
-    val prevPlansTxt: String = try {
-      new String(java.nio.file.Files.readAllBytes(plansPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-    } catch { case _: Throwable => "{}" }
-    val tierRe = ("\"" + java.util.regex.Pattern.quote(tierKey) + "\":\\{([^}]*)\\}").r
-    val prevShas: Map[String, String] =
-      tierRe.findFirstMatchIn(prevPlansTxt).map(_.group(1))
-        .map { body =>
-          """"([^"]+)":"([^"]+)"""".r.findAllMatchIn(body)
-            .map(g => g.group(1) -> g.group(2)).toMap
-        }.getOrElse(Map.empty)
-    val planChanged = planShaPairs.collect {
-      case (n, s) if prevShas.get(n).exists(_ != s) => "\"" + n + "\""
-    }.mkString("[", ",", "]")
+    val plansPath = Paths.get("bench_plans.json")
+    val prevPlans: Option[Map[String, Map[String, String]]] =
+      if (!Files.exists(plansPath)) Some(Map.empty)
+      else try Some(Json.read[Map[String, Map[String, String]]](Files.readString(plansPath)))
+      catch { case e: Throwable => fail("bench_plans.json/read", e); None }
+    val prevShas = prevPlans.flatMap(_.get(tierKey)).getOrElse(Map.empty)
+    val planChanged = planShas.collect {
+      case (n, s) if prevShas.get(n).exists(_ != s) => n
+    }
     // write back this tier's fingerprints, preserving the other tiers' maps
     // AND this tier's entries for queries outside the current name filter —
     // a SPARK_GRAFT_BENCH_ONLY probe must refresh only what it measured,
     // not clobber the full-set baseline down to its subset
-    try {
-      val otherTiers = """"([^"]+)":(\{[^}]*\})""".r.findAllMatchIn(prevPlansTxt)
-        .map(g => g.group(1) -> g.group(2)).toMap - tierKey
-      val tierMerged = (prevShas ++ planShaPairs.toMap).toSeq.sortBy(_._1)
-        .map { case (n, s) => "\"" + n + "\":\"" + s + "\"" }.mkString("{", ",", "}")
-      val merged = (otherTiers + (tierKey -> tierMerged)).toSeq.sortBy(_._1)
-        .map { case (t, m) => "\"" + t + "\":" + m }.mkString("{", ",", "}")
-      java.nio.file.Files.write(plansPath,
-        (merged + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    prevPlans.foreach { plans =>
+      val merged = (plans + (tierKey -> (prevShas ++ planShas)))
+        .map { case (tier, shas) => tier -> TreeMap(shas.toSeq: _*) }
+      try Files.writeString(plansPath, Json.write(TreeMap(merged.toSeq: _*)) + "\n")
+      catch { case e: Throwable => fail("bench_plans.json/write", e) }
+    }
     // headline stays min-of-reps; rep_times persists EVERY rep so a
     // round-over-round swing is attributable (did the reps agree, or did
     // one environmental outlier poison the min?)
-    def fmt(d: Double): String = BigDecimal(d)
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = all.map { case (k, ts, _) =>
-      "\"" + k + "\":" + (if (ts.nonEmpty) fmt(ts.min) else "null")
-    }.mkString("{", ",", "}")
-    val repTimes = all.map { case (k, ts, _) =>
-      "\"" + k + "\":[" + ts.mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    def fmt(d: Double): Double =
+      BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     // the headline total stays the BATCH query set (comparable round over
     // round); the streaming micro-bench reports its own total beside the
     // per-entry times and events/s
     val total = results.filter(_._2.nonEmpty).map(_._2.min).sum
     val streamTotal = streamResults.filter(_._2.nonEmpty).map(_._2.min).sum
-    val failed = all.collect { case (k, ts, _) if ts.isEmpty => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val streamState = streamDefs.map(_._1).flatMap(streamStateInfo.get)
-      .mkString("{", ",", "}")
-    val concurrent = (concurrentAtStart ++ concurrentGraftJvms()).distinct
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val indexBuild = indexBuildSecs
-      .map { case (n, t) => "\"" + n + "\":" + fmt(t) }.mkString("{", ",", "}")
-    val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"noisy":$noisy,"stream_total_sec":${fmt(streamTotal)},"stream_events_per_sec":$streamEps,"stream_state":$streamState,"stream_feed":{"chunks":$feedChunks,"prep_sec":${fmt(feedPrepSec)}},"index_build_sec":$indexBuild,"failed":$failed,"plan_changed":$planChanged,"concurrent":$concurrent,"reps":$reps,"shuffle":$shuffle,"sf":"$sfDir""""
-    val full = s"""{$head,"rep_times":$repTimes,"plan_sha":$planSha}"""
+    val head = ListMap[String, Any](
+      "metric" -> "total",
+      "value" -> fmt(total),
+      "unit" -> "sec",
+      "queries" -> ListMap(all.map { case (k, ts, _) =>
+        k -> (if (ts.nonEmpty) Some(fmt(ts.min)) else None) }: _*),
+      "noisy" -> all.collect { case (name, _, true) => name },
+      "stream_total_sec" -> fmt(streamTotal),
+      "stream_events_per_sec" -> ListMap(streamResults.collect {
+        case (n, ts, _) if ts.nonEmpty => n -> (eventsRows / ts.min).toLong }: _*),
+      "stream_state" -> ListMap(streamDefs.map(_._1)
+        .flatMap(n => streamStateInfo.get(n).map(n -> _)): _*),
+      "stream_feed" -> ListMap("chunks" -> feedChunks, "prep_sec" -> fmt(feedPrepSec)),
+      "index_build_sec" -> ListMap(indexBuildSecs.toSeq.map { case (n, t) => n -> fmt(t) }: _*),
+      "failed" -> all.collect { case (k, ts, _) if ts.isEmpty => k },
+      "plan_changed" -> planChanged,
+      "concurrent" -> (concurrentAtStart ++ concurrentGraftJvms()).distinct,
+      "reps" -> reps,
+      "shuffle" -> shuffle.toInt,
+      "sf" -> sfDir)
+    val full = head ++ ListMap(
+      "rep_times" -> ListMap(all.map { case (k, ts, _) => k -> ts }: _*),
+      "plan_sha" -> ListMap(planShas: _*),
+      "errors" -> errors)
     // capture-proof artifact first, THEN the stdout line the driver tails.
     // The stdout line is the COMPACT form — totals, per-query min, noisy /
-    // failed — WITHOUT rep_times/plan_sha: the full line is several KB and
-    // the driver's tail-capture front-truncated it two rounds running
-    // ("parsed": null); the ~1 KB summary always survives, and the full
-    // record lives in bench_out.json.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
-      (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
-    println(s"""{$head,"detail":"bench_out.json"}""")
+    // failed — WITHOUT rep_times/plan_sha/errors: the full line is several
+    // KB and the driver's tail-capture front-truncated it two rounds
+    // running ("parsed": null); the ~1 KB summary always survives, and the
+    // full record lives in bench_out.json.
+    try Files.writeString(Paths.get("bench_out.json"), Json.write(full) + "\n")
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] bench_out.json not written: ${e.getClass.getName}: ${e.getMessage}")
+    }
+    println(Json.write(head + ("detail" -> "bench_out.json")))
     spark.stop()
   }
 }

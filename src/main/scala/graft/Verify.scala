@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.core.{Engine, Json}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,18 +11,10 @@ object Verify {
     // the driver always invokes with exactly two args → full dump)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // width ∝ tier bytes (Engine.shuffleWidth policy; floor = cores, so
-      // the driver's sf0.01 gate keeps its geometry — this matters only
-      // when Verify replays the gate on a big generated tier)
-      .config("spark.sql.shuffle.partitions",
-        graft.core.Engine.shuffleWidth(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's session: the oracle gate checks results under the same
+    // physical policy (width, splits, codec, state store, staging) that
+    // the bench times
+    val spark = Engine.session("graft-verify", dataDir = Some(sfDir))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries
@@ -52,24 +45,9 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.write(SparkEntry.oracleSql))
     // failure manifest beside the outputs (empty object when all green)
-    Files.writeString(Paths.get(s"$outDir/errors.json"),
-      failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), Json.write(failures))
     spark.stop()
     // Surface-shrinkage tripwire: every selected query must have left an
     // output directory (a real result or the error artifact). If any is

@@ -228,16 +228,9 @@ object Main {
       // so a changed table set between runs remaps ids — a name mismatch
       // (or a legacy manifest with no name) re-extracts instead of silently
       // attributing another table's artifacts and count to this one.
-      val recorded: Option[Long] =
-        if (Ctl.exists(conf, dir + ".manifest.json")) {
-          val mdf = Extract.readManifest(spark, dir)
-          if (!mdf.columns.contains("table")) None
-          else {
-            val m = mdf.select(col("complete"), col("rows"), col("table")).head()
-            if (m.getBoolean(0) && m.getString(2) == w.name) Some(m.getLong(1))
-            else None
-          }
-        } else None
+      // A missing, truncated or unparseable manifest re-extracts too.
+      val recorded: Option[Long] = Extract.readManifest(conf, dir)
+        .filter(m => m.complete && m.table.contains(w.name)).map(_.rows)
       // format planner (migration.py:2115-2208): LOB-bearing tables are
       // FORCED onto the per-row-file path (scalar CSV + one file per LOB
       // cell); other CSV-incompatible columns (arrays/structs) → parquet;

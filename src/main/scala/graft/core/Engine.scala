@@ -222,13 +222,16 @@ object Engine {
     * reads and (when durable) a checkpoint dir. Called at session CREATION
     * only — flipping the flag on a live session would change the staging
     * policy under other code mid-run. */
-  def applyDurableStage(sp: SparkSession, durable: Boolean): Unit = {
+  private def applyDurableStage(sp: SparkSession, durable: Boolean): Unit = {
     sp.conf.set("spark.graft.durableStage", durable.toString)
     if (durable && sp.sparkContext.getCheckpointDir.isEmpty)
       sp.sparkContext.setCheckpointDir(
         s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-${sp.sparkContext.applicationId}")
   }
 
+  /** The engine's only session builder: the CLI, Bench, Verify, the tools
+    * and the test suite all get their physical policy here, so correctness
+    * and performance are checked under the same config. */
   def session(appName: String = "graft", cpus: Option[String] = None,
       dataDir: Option[String] = None): SparkSession = {
     val n = cpus.orElse(sys.env.get("SPARK_GRAFT_CPUS"))
@@ -248,23 +251,37 @@ object Engine {
     val sp = SparkSession.builder()
       .master(s"local[$n]")
       .appName(appName)
+      // TopK planner strategy + rolling_hash / dot_product SQL functions,
+      // installed once at creation (sessions forked with newSession keep them)
+      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", width)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the bench tiers are SINGLE parquet files; without sub-file splits
+      // every scan (and the partial agg riding it) is one task, which
+      // serializes the map side exactly where a real cluster would fan out
+      // over row groups. Spark splits at min(maxPartitionBytes, max(4 MB,
+      // bytes/cores)), so 16m only bites above ~64 MB scanned on 4 cores
+      // (the sf1 tier's 120 MB lineitem reads as ~8 scan partitions).
+      .config("spark.sql.files.maxPartitionBytes", "16m")
       // release finished queries' shuffle files promptly: big heaps GC so
       // rarely that the ContextCleaner otherwise never fires and dead
-      // shuffle data accumulates until the disk fills (measured at the
-      // sf100 bench tier — see Bench.scala). 1min, not 5min: dead-shuffle
-      // DWELL TIME is what stacks rep N's garbage under rep N+1's live
-      // writes — the third sf100 attempt ENOSPC'd with most of the dead
-      // bytes still inside the 5min window.
-      .config("spark.cleaner.periodicGC.interval", "1min")
+      // shuffle data accumulates until the disk fills (the first sf100
+      // bench attempt died ENOSPC mid-warmup with ~50 GB of orphaned
+      // shuffle dirs). 1min, not 5min: dead-shuffle DWELL TIME is what
+      // stacks rep N's garbage under rep N+1's live writes — the third
+      // sf100 attempt ENOSPC'd with most of the dead bytes still inside the
+      // 5min window. SPARK_GRAFT_GC_INTERVAL overrides it for the scale
+      // tiers: d2's sf100 recording produced dead shuffle at ~6 GB/min and
+      // needed a 20s reclaim lag (tools/bench_sf100.sh sets it).
+      .config("spark.cleaner.periodicGC.interval",
+        sys.env.getOrElse("SPARK_GRAFT_GC_INTERVAL", "1min"))
       // single-JVM local mode: losing the only executor to a missed
       // heartbeat is fatal, and the periodic System.gc() above can pause
       // a large heap past the 120s default (measured 149s at 64g — see
-      // Bench.scala / run_tool.sh's ExplicitGCInvokesConcurrent). Cluster
+      // run_tool.sh's ExplicitGCInvokesConcurrent). Cluster
       // deployments keep the defaults; local mode self-pings.
       .config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeatInterval", "60s")

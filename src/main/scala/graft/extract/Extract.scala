@@ -1,7 +1,14 @@
 package graft.extract
 
+import com.fasterxml.jackson.annotation.{JsonInclude, JsonProperty}
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.ChecksumException
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.{Ctl, Json}
 
 /** Extraction phase: planner + executors (SURVEY §2.1 S6-S11, §2.6 O3-O4,
   * §4 physical policy).
@@ -112,51 +119,71 @@ object Extract {
   def extractGzipCsv(df: DataFrame, outDir: String, numFiles: Int = 8,
       table: String = ""): Long = {
     val cnt = writeCounted(df, numFiles)(
-      _.write.mode(SaveMode.Overwrite)
-        .option("compression", "gzip")
-        .option("header", "true")
-        .option("timestampFormat", CsvTimestampFormat)
-        .csv(outDir))
+      _.write.mode(SaveMode.Overwrite).options(GzipCsvWriteOptions).csv(outDir))
     writeManifest(outDir, cnt, "gzip_csv",
       df.sparkSession.sparkContext.hadoopConfiguration, df.schema.toDDL,
       table = table)
     cnt
   }
 
+  /** One extract file as the manifest lists it. */
+  final case class ManifestFile(name: String, bytes: Long)
+
   /** S11 + O5: per-extract manifest with a completeness sentinel — replaces
     * the reference's `extractinfo` token scraping (migration.py:1445-1458)
-    * and its last-line sentinel check (migration.py:1301-1310). Listing and
-    * write go through the path's Hadoop FileSystem so the manifest lands
-    * beside extracts on hdfs:///object-store dirs, not just file://. */
+    * and its last-line sentinel check (migration.py:1301-1310).
+    *
+    * `table` pins the manifest to ITS table: resume keys extract dirs by
+    * positional table id, so an id remap (table set changed between runs
+    * against one out dir) must not silently attribute this extract — and
+    * its recorded row count — to a different table. `lobFiles` records the
+    * per-LOB-column file census so the load verify covers the LOB plane,
+    * not just the scalar row count. Both are omitted from the file when
+    * unset, so the on-disk form is
+    * `{"table":…,"lob_files":{…},"rows":…,"format":…,"schema":…,"files":[…],"complete":true}`. */
+  final case class ExtractManifest(
+      table: Option[String],
+      @JsonProperty("lob_files") @JsonInclude(JsonInclude.Include.NON_EMPTY)
+      @JsonDeserialize(keyAs = classOf[Integer], contentAs = classOf[java.lang.Long])
+      lobFiles: Map[Int, Long] = Map.empty,
+      rows: Long,
+      format: String,
+      schema: String,
+      files: Seq[ManifestFile],
+      complete: Boolean)
+
+  private def manifestPath(outDir: String): String = outDir + ".manifest.json"
+
+  /** Write `outDir`'s manifest. Listing and write go through the path's
+    * Hadoop FileSystem so the manifest lands beside extracts on
+    * hdfs:///object-store dirs, not just file://. The manifest is a sibling
+    * file, not inside the dir: underscore-prefixed files are invisible to
+    * Spark readers, and a non-underscore file inside the directory would
+    * pollute the data scan. */
   def writeManifest(outDir: String, rows: Long, format: String,
-      conf: org.apache.hadoop.conf.Configuration =
-        new org.apache.hadoop.conf.Configuration(),
+      conf: Configuration = new Configuration(),
       schemaDdl: String = "", table: String = "",
       lobFiles: Map[Int, Long] = Map.empty): Unit = {
     val dirPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = dirPath.getFileSystem(conf)
-    val files = fs.listStatus(dirPath)
+    val files = dirPath.getFileSystem(conf).listStatus(dirPath)
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
       .sortBy(_.getPath.getName)
-      .map(s => s"""{"name":"${s.getPath.getName}","bytes":${s.getLen}}""")
-    // `table` pins the manifest to ITS table: resume keys extract dirs by
-    // positional table id, so an id remap (table set changed between runs
-    // against one out dir) must not silently attribute this extract — and
-    // its recorded row count — to a different table. `lob_files` records the
-    // per-LOB-column file census so the load verify covers the LOB plane,
-    // not just the scalar row count.
-    val tableField = if (table.isEmpty) "" else s""""table":"${jsonEscape(table)}","""
-    val lobField = if (lobFiles.isEmpty) "" else
-      lobFiles.toSeq.sorted.map { case (c, n) => s""""$c":$n""" }
-        .mkString(""""lob_files":{""", ",", "},")
-    val json =
-      s"""{$tableField$lobField"rows":$rows,"format":"$format","schema":"${jsonEscape(schemaDdl)}","files":[${files.mkString(",")}],"complete":true}"""
-    // sibling file, not inside the dir: underscore-prefixed files are
-    // invisible to Spark readers, and a non-underscore file inside the
-    // directory would pollute the data scan
-    val out = fs.create(new org.apache.hadoop.fs.Path(outDir + ".manifest.json"), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+      .map(s => ManifestFile(s.getPath.getName, s.getLen)).toSeq
+    val m = ExtractManifest(Option(table).filter(_.nonEmpty),
+      scala.collection.immutable.TreeMap(lobFiles.toSeq: _*), rows, format,
+      schemaDdl, files, complete = true)
+    Ctl.write(conf, manifestPath(outDir), Json.write(m))
+  }
+
+  /** Read `outDir`'s manifest through the path's Hadoop FileSystem — no
+    * Spark job. A missing, truncated or unparseable manifest, or one whose
+    * checksum no longer matches, is `None`: for resume that means
+    * "re-extract", never a crash. */
+  def readManifest(conf: Configuration, outDir: String): Option[ExtractManifest] = {
+    val path = manifestPath(outDir)
+    if (!Ctl.exists(conf, path)) None
+    else try Option(Json.read[ExtractManifest](Ctl.readLines(conf, path).mkString("\n")))
+    catch { case _: JsonProcessingException | _: ChecksumException => None }
   }
 
   /** LOB-table extract (the reference's forced per-row-file path for
@@ -189,11 +216,7 @@ object Extract {
         s"${ids.getLong(2)} distinct")
     val scalar = df.select(fields.filter(_.dataType != BinaryType).map(f => col(f.name)).toSeq: _*)
     val cnt = writeCounted(scalar, numFiles)(
-      _.write.mode(SaveMode.Overwrite)
-        .option("compression", "gzip")
-        .option("header", "true")
-        .option("timestampFormat", CsvTimestampFormat)
-        .csv(outDir))
+      _.write.mode(SaveMode.Overwrite).options(GzipCsvWriteOptions).csv(outDir))
     val lobCounts = fields.zipWithIndex.collect {
       case (f, i) if f.dataType == BinaryType =>
         (i + 1) -> LobSink.writePerRow(df, idCol, f.name, s"$outDir.lob${i + 1}",
@@ -205,17 +228,6 @@ object Extract {
     cnt
   }
 
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** Read a manifest back; `complete` is the resume-safety sentinel. */
-  def readManifest(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.json(outDir + ".manifest.json")
-
   /** Reconstruct an extracted table purely from its on-disk artifacts: the
     * manifest declares the format and the schema DDL, so the LOAD phase
     * needs neither the source tables nor the catalog — the reference loads
@@ -226,9 +238,11 @@ object Extract {
     * of the intact source. */
   def readExtractedAuto(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{BinaryType, StructType}
-    val m = readManifest(spark, dir).select("format", "schema").head()
-    val schema = StructType.fromDDL(m.getString(1))
-    m.getString(0) match {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val m = readManifest(conf, dir).getOrElse(throw new IllegalArgumentException(
+      s"no readable extract manifest for $dir"))
+    val schema = StructType.fromDDL(m.schema)
+    m.format match {
       case "parquet" => spark.read.schema(schema).parquet(dir)
       case "gzip_csv" => readExtracted(spark, dir, schema)
       case "lob_csv" =>
@@ -236,27 +250,19 @@ object Extract {
         // per-row files (file name carries the row id; a row with no file
         // had a NULL cell — left join restores it)
         val idName = schema.fields.head.name
-        val mAll = readManifest(spark, dir)
-        // LOB-plane completeness: the manifest's per-column file census must
-        // match what's on disk — a lost LOB file would otherwise read back
-        // as a silent NULL cell under a still-green scalar row count. Pure
-        // FS-metadata listing, no job.
-        val recordedLob: Map[Int, Long] =
-          if (mAll.columns.contains("lob_files"))
-            mAll.select(col("lob_files.*")).schema.fieldNames.zip(
-              mAll.select(col("lob_files.*")).head().toSeq).map {
-              case (k, v) => k.toInt -> v.asInstanceOf[Number].longValue()
-            }.toMap
-          else Map.empty
         val scalar = readExtracted(spark, dir,
           StructType(schema.fields.filter(_.dataType != BinaryType)))
         val full = schema.fields.zipWithIndex
           .collect { case (f, i) if f.dataType == BinaryType => (f, i + 1) }
           .foldLeft(scalar) { case (acc, (f, colId)) =>
             val lobDir = s"$dir.lob$colId"
-            recordedLob.get(colId).foreach { expected =>
+            // LOB-plane completeness: the manifest's per-column file census
+            // must match what's on disk — a lost LOB file would otherwise
+            // read back as a silent NULL cell under a still-green scalar row
+            // count. Pure FS-metadata listing, no job.
+            m.lobFiles.get(colId).foreach { expected =>
               val p = new org.apache.hadoop.fs.Path(lobDir)
-              val actual = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+              val actual = p.getFileSystem(conf)
                 .listStatus(p).count(s => s.isFile && s.getPath.getName.contains("_row"))
               require(actual == expected,
                 s"LOB plane incomplete for $lobDir: $actual files on disk, " +
@@ -279,6 +285,17 @@ object Extract {
     * default keeps only milliseconds, which silently truncates micro-stamped
     * event data — an extract->load round-trip must be bit-faithful. */
   val CsvTimestampFormat = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+
+  /** Writer options of the gzip-CSV plane (`gzip_csv` extracts and the
+    * scalar plane of `lob_csv`). Spark's CSV writer trims leading and
+    * trailing spaces by default; an extract must not, or `" leading"` loads
+    * back as `"leading"`. */
+  val GzipCsvWriteOptions: Map[String, String] = Map(
+    "compression" -> "gzip",
+    "header" -> "true",
+    "timestampFormat" -> CsvTimestampFormat,
+    "ignoreLeadingWhiteSpace" -> "false",
+    "ignoreTrailingWhiteSpace" -> "false")
 
   /** Read an extracted directory back with an explicit schema (no inference
     * in the engine proper — SURVEY §1.3). */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
@@ -51,11 +50,4 @@ case class RollingHash(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): RollingHash =
     copy(child = newChild)
-}
-
-object RollingHash {
-  /** Register as a SQL function so `expr("rolling_hash(col)")` works. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
 }

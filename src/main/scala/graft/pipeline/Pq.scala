@@ -49,6 +49,7 @@ object Pq {
     * cells keep their previous centroid), so this never fires today — it
     * exists to make a violation fail loudly instead of mis-ranking. */
   private[pipeline] def denseBySub(books: Seq[Codebook], m: Int): Seq[Seq[Codebook]] = {
+    require(books.nonEmpty, "PQ codebooks must not be empty")
     val k = books.map(_.code).max + 1
     val bySub = books.groupBy(_.sub).toSeq.sortBy(_._1).map(_._2.sortBy(_.code))
     require(bySub.map(_.head.sub) == (0 until m) &&
@@ -244,14 +245,6 @@ object Pq {
     rows.toDF("query_id", "qn", "lut", "nlut")
   }
 
-  /** Probe hooks for tools.R15Probe: expose the private lut/score pieces
-    * to the dev probe without widening the public API surface. */
-  private[graft] def probedLutsForProbe(queries: DataFrame, books: Seq[Codebook],
-      idCol: String, vecCol: String, m: Int, dim: Int): DataFrame =
-    queryLuts(queries, books, idCol, vecCol, m, dim)
-  private[graft] def adcScoreForProbe(cands: DataFrame, m: Int = 8,
-      k: Int = 16): DataFrame = adcScore(cands, m, k)
-
   /** ADC score columns over a candidate set carrying (codes, lut, nlut).
     *
     * The sums are UNROLLED over the m subspaces (r15): the previous
@@ -372,7 +365,7 @@ object Pq {
       .withColumn("qn", Similarity.norm(col("qv")))
     val probed = probedOpt.getOrElse(probedCellsLocal(cent, q, nprobe))
     // local relation: the distinct cell list is a driver map, not a job
-    val cells = probed.collect().map(_.get(1)).distinct.toSeq
+    val cells = probed.collect().map(_.getAs[Any]("cell")).distinct.toSeq
     // codes for the probed cells only (each corpus row lives in exactly one
     // cell, so the cell join never duplicates a candidate): read the
     // cell-partitioned cache when present, else encode the probed subset

@@ -282,7 +282,7 @@ object Similarity {
     val probedRows = probedLazy.collect()
     val probed = spark.createDataFrame(
       java.util.Arrays.asList(probedRows: _*), probedLazy.schema)
-    val cells = probedRows.map(_.get(3)).distinct.toSeq
+    val cells = probedRows.map(_.getAs[Any]("cell")).distinct.toSeq
     val c = readProbedCells(spark, indexPath, cellCol, cells)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
         col(cellCol).as("cell"))

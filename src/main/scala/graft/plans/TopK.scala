@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSessionExtensions}
 
 /** User-facing API + session wiring for the [[TopKPerKeyNode]] operator. */
 object TopK {
@@ -26,7 +26,6 @@ object TopK {
       tiebreak: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
     import org.apache.spark.sql.functions.{col, struct}
     val spark = df.sparkSession
-    ensureStrategy(spark)
     val src =
       if (tiebreak.isEmpty) df
       else {
@@ -46,16 +45,11 @@ object TopK {
     if (tiebreak.isEmpty) out else out.drop("__graft_ord")
   }
 
-  /** Idempotently register the planner strategy on a live session. */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[TopKStrategy]))
-      spark.experimental.extraStrategies = cur :+ new TopKStrategy
-  }
 }
 
-/** `spark.sql.extensions`-style registration for sessions built with
-  * `.withExtensions(new GraftExtensions)` — strategy + rolling_hash. */
+/** Session extensions `Engine.session` installs at creation: the
+  * [[TopKStrategy]] planner strategy plus the `rolling_hash` and
+  * `dot_product` SQL functions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => new TopKStrategy)

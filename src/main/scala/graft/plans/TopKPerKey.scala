@@ -34,8 +34,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * both, documented on [[TopK.perKey]]).
   *
   * Pieces: [[TopKPerKeyNode]] (logical), [[TopKStrategy]] (planner rule),
-  * [[TopKPerKeyExec]] (physical ×2), wired via
-  * `spark.experimental.extraStrategies` or [[graft.plans.GraftExtensions]].
+  * [[TopKPerKeyExec]] (physical ×2), wired via [[graft.plans.GraftExtensions]],
+  * which `Engine.session` installs.
   */
 case class TopKPerKeyNode(keys: Seq[Expression], ord: Expression, k: Int,
     descending: Boolean, child: LogicalPlan) extends UnaryNode {

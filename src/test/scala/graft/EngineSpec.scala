@@ -64,13 +64,46 @@ class EngineSpec extends SparkTestBase {
     val out = java.nio.file.Files.createTempDirectory("graft_manifest").toString
     val n = graft.extract.Extract.extractGzipCsv(
       Tables.load(spark, sfDir, "nation"), out, numFiles = 2)
-    val m = graft.extract.Extract.readManifest(spark, out).collect()(0)
-    assert(m.getAs[Boolean]("complete"))
-    assert(m.getAs[Long]("rows") == n)
-    assert(m.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("files").nonEmpty)
+    val m = graft.extract.Extract.readManifest(spark.sparkContext.hadoopConfiguration, out).get
+    assert(m.complete)
+    assert(m.rows == n)
+    assert(m.files.nonEmpty)
     // manifest is invisible to the data reader (underscore-prefixed)
     val back = spark.read.option("header", "true").csv(out)
     assert(back.count() == n)
+  }
+
+  test("extract manifest round-trips a table name with a quote, a backslash and a tab") {
+    import graft.extract.Extract
+    val conf = spark.sparkContext.hadoopConfiguration
+    val out = java.nio.file.Files.createTempDirectory("graft_manifest_esc").resolve("t")
+    java.nio.file.Files.createDirectories(out)
+    java.nio.file.Files.write(out.resolve("part-00000.csv.gz"), Array[Byte](1, 2, 3))
+    val name = "we\"ird\\na\tme"
+    Extract.writeManifest(out.toString, 7L, "lob_csv", conf, "id BIGINT, b BINARY",
+      table = name, lobFiles = Map(2 -> 5L, 10 -> 1L))
+    val m = Extract.readManifest(conf, out.toString).get
+    assert(m == Extract.ExtractManifest(Some(name), Map(2 -> 5L, 10 -> 1L), 7L, "lob_csv",
+      "id BIGINT, b BINARY", Seq(Extract.ManifestFile("part-00000.csv.gz", 3L)), complete = true))
+  }
+
+  test("Engine.session installs rolling_hash and dot_product without a register call") {
+    import spark.implicits._
+    val r = Seq((Array[Byte](1, 2), Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("b", "x", "y")
+      .select(expr("rolling_hash(b)"), expr("dot_product(x, y)")).head()
+    assert(r.getLong(0) == 31L * 1 + 2)
+    assert(r.getDouble(1) == 11.0)
+  }
+
+  test("Engine.session is the only SparkSession builder in the program sources") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root))
+    val builders = scala.jdk.CollectionConverters.IteratorHasAsScala(
+      java.nio.file.Files.walk(root).iterator()).asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+      .map(p => root.relativize(p).toString).toSeq
+    assert(builders == Seq("graft/core/Engine.scala"))
   }
 
   test("identity assignment is dense, unique, and order-stable") {

@@ -348,7 +348,6 @@ class PipelineSpec extends SparkTestBase {
 
   test("decode checksum matches the codegen'd rolling_hash expression") {
     import spark.implicits._
-    graft.functions.RollingHash.register(spark)
     val media = Multimodal.mediaFromDocuments(docs)
     val viaKernel = Multimodal.decodeBatch(media)
       .select($"media_id", $"checksum".as("k"))

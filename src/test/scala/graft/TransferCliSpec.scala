@@ -295,6 +295,72 @@ class TransferCliSpec extends SparkTestBase {
       Paths.get(s"$out/Extracted_Data/1000.manifest.json")) == stampOther)
   }
 
+  test("resume re-extracts a legacy manifest with no table name and a truncated one") {
+    import scala.jdk.CollectionConverters._
+    val out = Files.createTempDirectory("graft_badmanifest").toString
+    graft.cli.Main.fullExtraction(spark, sfDir, out)
+    val listed = Files.readAllLines(Paths.get(s"$out/iq_tables.list")).asScala
+    def manifestOf(table: String) = {
+      val id = listed.find(_.startsWith(s"graft.$table,")).get.split(',')(3)
+      Paths.get(s"$out/Extracted_Data/$id.manifest.json")
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val extracted = Files.readAllLines(Paths.get(s"$out/ExtractedTables.out"))
+    // legacy: a well-formed manifest without the table field
+    val legacy = manifestOf("nation")
+    graft.core.Ctl.write(conf, legacy.toString,
+      Files.readString(legacy).replace("\"table\":\"nation\",", ""))
+    // truncated: cut mid-object, once with a matching checksum sidecar and
+    // once behind the file system's back (a stale .crc, as a killed write
+    // can leave it)
+    val truncated = manifestOf("region")
+    graft.core.Ctl.write(conf, truncated.toString,
+      Files.readString(truncated).take(Files.readString(truncated).length / 2))
+    val stale = manifestOf("customer")
+    Files.writeString(stale, Files.readString(stale).take(Files.readString(stale).length / 2))
+    val kept = manifestOf("supplier")
+    val stampKept = Files.getLastModifiedTime(kept)
+    graft.cli.Main.fullExtraction(spark, sfDir, out)
+    // all three were re-extracted (rewritten whole, with their names); the
+    // intact manifest was skipped, and the recorded counts are unchanged
+    Seq(legacy -> "nation", truncated -> "region", stale -> "customer").foreach {
+      case (m, name) =>
+        assert(Files.readString(m).contains(s"\"table\":\"$name\""))
+        assert(Files.readString(m).endsWith("\"complete\":true}"))
+    }
+    assert(Files.getLastModifiedTime(kept) == stampKept)
+    assert(Files.readAllLines(Paths.get(s"$out/ExtractedTables.out")) == extracted)
+  }
+
+  test("strings with leading and trailing spaces survive extraction and load unchanged") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val dataDir = Files.createTempDirectory("graft_spaces")
+    graft.core.Tables.names.foreach { n =>
+      Files.copy(Paths.get(s"$sfDir/$n.parquet"), dataDir.resolve(s"$n.parquet"))
+    }
+    val texts = Seq(" leading", "trailing ", "  both  ")
+    // one gzip_csv table and one lob_csv table (whose scalar plane is CSV too)
+    val tables = Map(
+      "spaced" -> texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "txt"),
+      "spaced_lob" -> texts.zipWithIndex.map { case (t, i) => (i.toLong, t, Array[Byte](i.toByte)) }
+        .toDF("id", "txt", "payload"))
+    tables.foreach { case (name, df) =>
+      df.coalesce(1).write.parquet(dataDir.resolve(s"tmp_$name").toString)
+      val part = Files.list(dataDir.resolve(s"tmp_$name")).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(part, dataDir.resolve(s"$name.parquet"))
+    }
+    val out = Files.createTempDirectory("graft_spaces_out").toString
+    graft.cli.Main.fullExtraction(spark, dataDir.toString, out)
+    graft.cli.Main.fullLoad(spark, out)
+    tables.keys.foreach { name =>
+      val back = spark.read.parquet(s"$out/warehouse/$name").orderBy("id")
+        .select("txt").as[String].collect().toSeq
+      assert(back == texts, s"$name lost edge spaces")
+    }
+  }
+
   test("LOB extract fails fast on null or duplicate lead-column ids") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_lobids").toString

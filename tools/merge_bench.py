@@ -22,7 +22,7 @@ def main() -> None:
                          f" vs {b.get('sf')}/{b.get('shuffle')}")
     merged = dict(a)
     for key in ("queries", "rep_times", "plan_sha", "stream_events_per_sec",
-                "stream_state"):
+                "stream_state", "errors"):
         merged[key] = {**a.get(key, {}), **b.get(key, {})}
     # "concurrent" (round 15+): poisoner JVMs seen by either chunk; chunks
     # recorded by an older Bench simply contribute nothing
