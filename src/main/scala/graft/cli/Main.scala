@@ -139,47 +139,34 @@ object Main {
       n => graft.sources.Jdbc.readAuto(spark, url, n,
         numPartitions = spark.sparkContext.defaultParallelism.min(32)))
 
-  /** Live-catalog inventory: table list from JDBC metadata, row counts
-    * through the DSv2 catalog relation so Catalyst PUSHES the COUNT(*)
-    * into the remote scan (`PushedAggregates` — the server computes it,
-    * one row crosses the wire; the reference's SYSTABLE-joined counts at
-    * migration.py:1699,1704 are this shape). Falls back to the v1
-    * derived-table count when a dialect declines aggregate pushdown —
-    * still server-side, never a full-table drag. One row per TABLE —
-    * driver-side assembly stays catalog-sized, never data-sized.
+  /** Live-catalog inventory: the table list from JDBC metadata and one
+    * server-side COUNT(*) per table on a plain connection — the reference's
+    * SYSTABLE-joined counts (migration.py:1699,1704) asked the same way,
+    * one row per TABLE, never data-sized. Each table is counted under the
+    * same unqualified name [[onlyDataJdbc]] extracts it by.
     *
     * Row widths: when the server carries a SYSCOLUMN-shaped width catalog
     * (`widthCatalog` — columns `table_name`, `width`, one row per column,
     * like the reference's `SYS.SYSCOLUMN` sizing at migration.py:1704-1706),
-    * per-table widths come from ONE pushed grouped `SUM(width) GROUP BY
-    * table_name` (`Jdbc.pushedGroupedSum`, derived-table `Jdbc.groupedSum`
-    * fallback) instead of the reference's per-table filtered re-query.
-    * Tables absent from the catalog — and the default no-catalog mode —
-    * size from the client-visible schema widths. */
+    * per-table widths come from ONE grouped `SUM(width) GROUP BY
+    * table_name` query (`Jdbc.groupedSum`) instead of the reference's
+    * per-table filtered re-query. Tables absent from the catalog — and the
+    * default no-catalog mode — size from the JDBC relation's schema, which
+    * Spark resolves on the driver without running a job. */
   def jdbcWorkItems(spark: org.apache.spark.sql.SparkSession,
       url: String, widthCatalog: Option[String] = None): Seq[Extract.WorkItem] = {
-    val catWidths: Map[String, Long] = widthCatalog.map { wc =>
-      val viaV2 =
-        try graft.sources.Jdbc.pushedGroupedSum(
-          graft.sources.Jdbc.readV2(spark, url, wc), "table_name", "width")
-        catch { case _: Throwable => None }
-      viaV2.getOrElse(
-          graft.sources.Jdbc.groupedSum(spark, url, wc, "table_name", "width"))
-        .map { case (t, w) => t.toLowerCase -> w }.toMap
-    }.getOrElse(Map.empty)
-    graft.sources.Jdbc.listTablesQualified(url).sortBy(_._2)
-      .zipWithIndex.map { case ((schem, n), i) =>
-        val v2 = graft.sources.Jdbc.readV2(spark, url,
-          if (schem.nonEmpty) s"$schem.$n" else n)
-        val cnt = graft.sources.Jdbc.pushedCount(v2)
-          .getOrElse(graft.sources.Jdbc.count(spark, url, n))
-        val width = catWidths.getOrElse(n.toLowerCase,
-          Catalog.rowWidth(v2.schema).toLong)
-        Extract.WorkItem(n.toLowerCase, cnt, cnt * width, 2000 + i)
-      }
+    import graft.sources.Jdbc
+    val catWidths: Map[String, Long] = widthCatalog.toSeq
+      .flatMap(Jdbc.groupedSum(url, _, "table_name", "width"))
+      .map { case (t, w) => t.toLowerCase -> w }.toMap
+    Jdbc.listTables(url).map(_.toLowerCase).sorted.zipWithIndex.map { case (n, i) =>
+      val cnt = Jdbc.count(url, n)
+      val width = catWidths.getOrElse(n, Catalog.rowWidth(Jdbc.read(spark, url, n).schema).toLong)
+      Extract.WorkItem(n, cnt, cnt * width, 2000 + i)
+    }
   }
 
-  private def onlyDataFrom(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def onlyDataFrom(spark: org.apache.spark.sql.SparkSession,
       out: String, batchCapBytes: Long,
       workList: Seq[Extract.WorkItem],
       loadTable: String => org.apache.spark.sql.DataFrame): Unit = {
@@ -216,11 +203,11 @@ object Main {
         batches.flatten
       } else workList
     val done = toExtract.filter(_.rowCount > 0).map { w =>
-      val df = loadTable(w.name)
       val dir = s"$out/Extracted_Data/${w.tableId}"
       // resume (migration.py:1940-2002): a complete manifest means this
-      // table's extract already finished — skip it, idempotently. The rows
-      // carried into ExtractedTables.out come from the MANIFEST (what was
+      // table's extract already finished — skip it, idempotently, without
+      // resolving the table at all. The rows carried into
+      // ExtractedTables.out come from the MANIFEST (what was
       // actually written), never from the current inventory count: a resumed
       // run re-recording the source count would let the load verify compare
       // source-to-source and mask an extract-phase loss. The manifest must
@@ -231,14 +218,14 @@ object Main {
       // A missing, truncated or unparseable manifest re-extracts too.
       val recorded: Option[Long] = Extract.readManifest(conf, dir)
         .filter(m => m.complete && m.table.contains(w.name)).map(_.rows)
-      // format planner (migration.py:2115-2208): LOB-bearing tables are
-      // FORCED onto the per-row-file path (scalar CSV + one file per LOB
-      // cell); other CSV-incompatible columns (arrays/structs) → parquet;
-      // plain scalar tables → gzip text
-      val hasLob = df.schema.fields.exists(
-        _.dataType == org.apache.spark.sql.types.BinaryType)
       val rows = recorded.getOrElse {
-        if (hasLob) Extract.extractLob(df, dir, w.tableId, table = w.name)
+        val df = loadTable(w.name)
+        // format planner (migration.py:2115-2208): LOB-bearing tables are
+        // FORCED onto the per-row-file path (scalar CSV + one file per LOB
+        // cell); other CSV-incompatible columns (arrays/structs) → parquet;
+        // plain scalar tables → gzip text
+        if (df.schema.fields.exists(_.dataType == org.apache.spark.sql.types.BinaryType))
+          Extract.extractLob(df, dir, w.tableId, table = w.name)
         else Extract.formatFor(df.schema) match {
           case Extract.Binary => Extract.extractParquet(df, dir, table = w.name)
           case _ => Extract.extractGzipCsv(df, dir, table = w.name)
@@ -264,7 +251,7 @@ object Main {
       out: String, url: String): Unit =
     fullLoadWith(spark, out, (work, failedPath, loadedOk) =>
       Loader.loadAllWith(work, failedPath, loadedOk,
-        w => Loader.loadVerifiedJdbc(spark, w.df(), w.expected(), url, w.name),
+        w => Loader.loadVerifiedJdbc(w.df(), w.expected(), url, w.name),
         spark.sparkContext.hadoopConfiguration))
 
   private def fullLoadWith(spark: org.apache.spark.sql.SparkSession, out: String,

@@ -1,6 +1,6 @@
 package graft.load
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Load phase with verify-and-rollback semantics (SURVEY §2.9 C5).
@@ -101,11 +101,12 @@ object Loader {
   /** Stage → verify → promote against a LIVE JDBC sink (S16's write half,
     * the reference's `LOAD TABLE` + count-verify + rollback transaction,
     * load_schema_and_data.py:295-299): write to `<table>_staging`, count it
-    * through a fresh read, and only on match swap it in (drop the previous
+    * with one server-side COUNT(*) (`load_table.sh:36-87` re-counts the same
+    * way after `LOAD TABLE`), and only on match swap it in (drop the previous
     * committed table, `RENAME TABLE` the staging copy over it). A failed
     * verify drops the staging table and leaves the committed data untouched
     * — the same table-level atomicity as the parquet path's rename-aside. */
-  def loadVerifiedJdbc(spark: SparkSession, df: DataFrame, expected: Long,
+  def loadVerifiedJdbc(df: DataFrame, expected: Long,
       url: String, table: String): LoadResult = {
     import graft.sources.Jdbc
     val staging = s"${table}_staging"
@@ -117,11 +118,11 @@ object Loader {
     // check is scoped to the connection's CURRENT schema (the one the
     // unqualified names below resolve in) — a same-named table elsewhere
     // must neither trigger nor suppress the recovery rename.
-    val existing = Jdbc.listTablesInCurrentSchema(url).map(_.toUpperCase).toSet
+    val existing = Jdbc.listTables(url).map(_.toUpperCase).toSet
     if (!existing.contains(table.toUpperCase) && existing.contains(staging.toUpperCase))
       Jdbc.renameTable(url, staging, table)
     Jdbc.write(df, url, staging, SaveMode.Overwrite)
-    val loaded = Jdbc.read(spark, url, staging).count()
+    val loaded = Jdbc.count(url, staging)
     if (loaded != expected) {
       Jdbc.execute(url, s"DROP TABLE $staging", ignoreMissingTable = true)
       LoadResult(table, expected, loaded, ok = false,

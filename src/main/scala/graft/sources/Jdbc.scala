@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.sql.{Connection, DriverManager, ResultSet, SQLException}
 import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -19,6 +20,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `numPartitions` parallel connections each scanning a key range, which is
   * how a 100 TB table actually leaves a server. Predicates/column pruning
   * push into the remote query (JDBCRelation builds WHERE/SELECT lists).
+  *
+  * Catalog-sized questions (counts, key bounds, grouped width sums, table
+  * listing, DDL) are not Spark jobs: each one is a plain query on one
+  * driver-side connection ([[query]]), the way the reference asks its
+  * servers over a pyodbc cursor (`migration.py:1699,1704-1706`,
+  * `load_table.sh:36-87`).
   *
   * The sandbox has no server, so specs run against embedded Derby (in
   * `/opt/spark/jars`, started in-process via the jdbc:derby: URL).
@@ -59,29 +66,45 @@ object Jdbc {
     spark.read.jdbc(url, table, partitionCol, lower, upper, numPartitions, props())
   }
 
-  /** Pushed-down COUNT(*) — the v1 JDBC relation does not push aggregates,
-    * so a DataFrame count() would drag every row across the connection;
-    * this makes the server do it and ships one number. */
-  def count(spark: SparkSession, url: String, table: String): Long = {
+  /** One connection for the duration of `f`, opened with the same
+    * properties as every Spark-side read and write. */
+  private def withConnection[A](url: String)(f: Connection => A): A = {
     quietDerby
-    spark.read.jdbc(url, s"(SELECT COUNT(*) AS n FROM $table) count_q", props())
-      .head().getAs[Number](0).longValue()
+    val conn = DriverManager.getConnection(url, props())
+    try f(conn) finally conn.close()
   }
 
-  /** Pushed-down [min, max] bounds of one column — a single-row remote
-    * aggregate (issued as a derived-table query, so the server computes it;
-    * a v1 DataFrame min/max would pull every row instead). */
-  def bounds(spark: SparkSession, url: String, table: String,
-      column: String): Option[(Long, Long)] = {
-    quietDerby
+  /** Run one query on `conn` and hand its result set to `read`. */
+  private def query[A](conn: Connection, sql: String)(read: ResultSet => A): A = {
+    val st = conn.createStatement()
+    try read(st.executeQuery(sql)) finally st.close()
+  }
+
+  private def query[A](url: String, sql: String)(read: ResultSet => A): A =
+    withConnection(url)(query(_, sql)(read))
+
+  /** `SELECT MIN(key), MAX(key)`, or None when either is NULL (an empty
+    * table, or a key that is NULL in every row). */
+  private def minMax[A](url: String, table: String, keySql: String)(
+      get: (ResultSet, Int) => A): Option[(A, A)] =
+    query(url, s"SELECT MIN($keySql), MAX($keySql) FROM $table") { rs =>
+      rs.next()
+      for (lo <- Option(get(rs, 1)); hi <- Option(get(rs, 2))) yield (lo, hi)
+    }
+
+  private def countOn(conn: Connection, table: String, where: String = ""): Long =
+    query(conn, s"SELECT COUNT(*) FROM $table$where") { rs => rs.next(); rs.getLong(1) }
+
+  /** Server-side COUNT(*) — one number crosses the connection. */
+  def count(url: String, table: String): Long =
+    withConnection(url)(countOn(_, table))
+
+  /** Server-side [min, max] bounds of one integral-valued column. */
+  def bounds(url: String, table: String, column: String): Option[(Long, Long)] =
     // quote the column: Spark's JDBC writer creates case-preserved quoted
     // identifiers, so an unquoted reference would case-fold past them
-    val r = spark.read.jdbc(url,
-      s"""(SELECT MIN("$column") AS lo, MAX("$column") AS hi FROM $table) bounds_q""",
-      props()).head()
-    if (r.isNullAt(0) || r.isNullAt(1)) None
-    else Some((r.getAs[Number](0).longValue(), r.getAs[Number](1).longValue()))
-  }
+    minMax(url, table, s""""$column"""")(_.getObject(_).asInstanceOf[Number])
+      .map { case (lo, hi) => (lo.longValue(), hi.longValue()) }
 
   /** The SQL key expression a string partition key is read and compared
     * through: an ANSI CAST to bounded VARCHAR. Two reasons: (a) engines
@@ -95,18 +118,12 @@ object Jdbc {
   private def strKeySql(column: String): String =
     s"""CAST("$column" AS VARCHAR(128))"""
 
-  /** Pushed-down [min, max] of a DATE/TIMESTAMP column, returned in the
+  /** Server-side [min, max] of a DATE/TIMESTAMP column, returned in the
     * `java.sql` string forms Spark's options-based partitioner parses
     * (`yyyy-MM-dd[ HH:mm:ss.f…]`). */
-  def timeBounds(spark: SparkSession, url: String, table: String,
-      column: String): Option[(String, String)] = {
-    quietDerby
-    val r = spark.read.jdbc(url,
-      s"""(SELECT MIN("$column") AS lo, MAX("$column") AS hi FROM $table) tbounds_q""",
-      props()).head()
-    if (r.isNullAt(0) || r.isNullAt(1)) None
-    else Some((r.get(0).toString, r.get(1).toString))
-  }
+  def timeBounds(url: String, table: String, column: String): Option[(String, String)] =
+    minMax(url, table, s""""$column"""")(_.getObject(_))
+      .map { case (lo, hi) => (lo.toString, hi.toString) }
 
   /** Parallel live-mode read range-partitioned on a DATE/TIMESTAMP key —
     * the options form of the JDBC source, which (unlike the Long-bounds
@@ -128,60 +145,11 @@ object Jdbc {
       .load()
   }
 
-  /** DSv2 live-mode read through a registered `JDBCTableCatalog`.
-    *
-    * The v1 paths above push only filters and column pruning into the
-    * remote query; the catalog-based DSv2 relation can additionally push
-    * whole AGGREGATES and LIMITs ([[count]]/[[bounds]] hand-write that SQL
-    * for exactly this reason — DSv2 subsumes them for arbitrary grouped
-    * aggregates). Against a big live server this is the difference between
-    * shipping one row per group and dragging the table across one
-    * connection — the reference's catalog sizing queries
-    * (`migration.py:1699,1704`) are all of this count/sum-by-group shape.
-    *
-    * `table` is the remote `schema.table` identifier; the catalog resolves
-    * it QUOTED, so case must match the stored identifier (Derby folds
-    * unquoted DDL to upper case — pass `APP.SUPPLIER_LIVE` for a table the
-    * v1 writer created as `supplier_live`). Whether an aggregate actually
-    * pushes is dialect-dependent and visible in the scan's
-    * `PushedAggregates` — JdbcSpec pins the Derby behavior.
-    *
-    * The default catalog NAME is derived from the url: Spark instantiates
-    * a catalog once per name and keeps it for the session, so reusing one
-    * name across different urls would silently keep reading the FIRST
-    * url's database no matter what the conf says. */
-  def readV2(spark: SparkSession, url: String, table: String,
-      catalog: String = ""): DataFrame = {
-    quietDerby
-    val cat =
-      if (catalog.nonEmpty) catalog
-      else "graft_jdbc_" + java.security.MessageDigest.getInstance("MD5")
-        .digest(url.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(4).map(b => f"$b%02x").mkString
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.url", url)
-    spark.conf.set(s"spark.sql.catalog.$cat.pushDownAggregate", "true")
-    spark.conf.set(s"spark.sql.catalog.$cat.pushDownLimit", "true")
-    propsMap.foreach { case (k, v) =>
-      spark.conf.set(s"spark.sql.catalog.$cat.$k", v)
-    }
-    spark.table(s"$cat.$table")
-  }
-
-  /** Pushed-down [min, max] of a string-comparable key EXPRESSION — same
-    * single-row remote aggregate shape as [[bounds]]. `keySql` is the
-    * verbatim SQL the key is read through ([[strKeySql]] / [[decKeySql]]'s
-    * LOB-safe casts). */
-  def stringBounds(spark: SparkSession, url: String, table: String,
-      keySql: String): Option[(String, String)] = {
-    quietDerby
-    val r = spark.read.jdbc(url,
-      s"(SELECT MIN($keySql) AS lo, MAX($keySql) AS hi FROM $table) sbounds_q",
-      props()).head()
-    if (r.isNullAt(0) || r.isNullAt(1)) None
-    else Some((r.getString(0), r.getString(1)))
-  }
+  /** Server-side [min, max] of a string-comparable key EXPRESSION — same
+    * single-row shape as [[bounds]]. `keySql` is the verbatim SQL the key
+    * is read through ([[strKeySql]] / [[decKeySql]]'s LOB-safe casts). */
+  def stringBounds(url: String, table: String, keySql: String): Option[(String, String)] =
+    minMax(url, table, keySql)(_.getString(_))
 
   /** Per-partition WHERE predicates that split a STRING key's [lo, hi]
     * lexicographically — the parallel-read path for tables with NO integral
@@ -198,7 +166,7 @@ object Jdbc {
     * collations (Derby UCS_BASIC). A case-folding server collation that
     * orders the boundary literals differently than the driver's UTF-16 sort
     * COULD double- or zero-count boundary rows — which is why [[readAuto]]
-    * reconciles every predicated read against pushed-down server counts
+    * reconciles every predicated read against server-side counts
     * ([[predicatesCoverExactly]]) and falls back to the one-connection read
     * on mismatch, instead of letting a duplicated extract legitimize itself
     * through the manifest. NULL keys ride the first partition. `keySql` is
@@ -245,25 +213,20 @@ object Jdbc {
   }
 
   /** Server-side reconciliation of a predicate partition: the sum of
-    * pushed-down per-predicate COUNT(*)s must equal the table's COUNT(*).
+    * per-predicate COUNT(*)s must equal the table's COUNT(*).
     * This is the guard the string/decimal range paths run before extracting
     * through predicates: a server collation that orders the boundary
     * literals differently than the driver's sort would make rows match two
     * predicates (extracted twice) or none (lost) — and because the manifest
     * records the observed count and the load verifies against the manifest,
     * that corruption would otherwise survive the whole verification chain.
-    * Cost: `predicates.size + 1` single-row server aggregates, nothing
-    * data-sized crosses the wire. */
-  private[graft] def predicatesCoverExactly(spark: SparkSession, url: String,
-      table: String, predicates: Seq[String]): Boolean = {
-    quietDerby
-    val total = count(spark, url, table)
-    val perPred = predicates.map { p =>
-      spark.read.jdbc(url, s"(SELECT COUNT(*) AS n FROM $table WHERE $p) pc_q", props())
-        .head().getAs[Number](0).longValue()
+    * Cost: `predicates.size + 1` single-row queries on one connection,
+    * nothing data-sized crosses the wire. */
+  private[graft] def predicatesCoverExactly(url: String, table: String,
+      predicates: Seq[String]): Boolean =
+    withConnection(url) { conn =>
+      predicates.map(p => countOn(conn, table, s" WHERE $p")).sum == countOn(conn, table)
     }
-    perPred.sum == total
-  }
 
   /** The SQL key expression a wide DECIMAL(p>18, 0) partition key is read
     * and compared through: a cast to CHAR, not VARCHAR — SQL's cast matrix
@@ -278,7 +241,7 @@ object Jdbc {
     s"""CAST("$column" AS CHAR(44))"""
 
   /** Live-mode read that SCALES when it can: picks the table's first
-    * integral column as the partition key, fetches its pushed-down bounds,
+    * integral column as the partition key, fetches its server-side bounds,
     * and opens `numPartitions` range-partitioned connections — the form a
     * large table actually leaves a server by. Key preference when no
     * integral column exists: a DECIMAL(p>18, 0) key (too wide for the
@@ -288,7 +251,7 @@ object Jdbc {
     * splits into lexicographic range predicates
     * ([[stringRangePredicates]]); only a table with no splittable key at
     * all (or empty / constant-keyed) falls back to the one-connection read.
-    * Every predicated split is reconciled against pushed-down server counts
+    * Every predicated split is reconciled against server-side counts
     * before use ([[predicatesCoverExactly]]) — a collation-order mismatch
     * degrades to the correct one-connection read instead of extracting
     * boundary rows twice. */
@@ -302,12 +265,12 @@ object Jdbc {
     // AND the server's counts confirm the predicates partition the table
     def predicated(keySql: String): Option[DataFrame] =
       Some(keySql)
-        .flatMap(k => stringBounds(spark, url, table, k).map((k, _)))
+        .flatMap(k => stringBounds(url, table, k).map((k, _)))
         .collect { case (k, (lo, hi)) if lo != hi =>
           stringRangePredicates(k, lo, hi, numPartitions)
         }
         .collect { case preds if preds.size > 1 &&
-            predicatesCoverExactly(spark, url, table, preds) =>
+            predicatesCoverExactly(url, table, preds) =>
           readPredicated(spark, url, table, preds)
         }
     // integral-valued keys include scale-0 decimals that fit a long —
@@ -319,7 +282,7 @@ object Jdbc {
         case d: DecimalType if d.scale == 0 && d.precision <= 18 => true
         case _ => false
       }
-      .flatMap(c => bounds(spark, url, table, c).map((c, _)))
+      .flatMap(c => bounds(url, table, c).map((c, _)))
       .collect { case (c, (lo, hi)) if hi > lo =>
         readPartitioned(spark, url, table, c, lo, hi, numPartitions)
       }
@@ -330,7 +293,7 @@ object Jdbc {
         case _ => false
       }.flatMap(c => predicated(decKeySql(c)))
     def timePart = firstCol(t => t == DateType || t == TimestampType)
-      .flatMap(c => timeBounds(spark, url, table, c).map((c, _)))
+      .flatMap(c => timeBounds(url, table, c).map((c, _)))
       .collect { case (c, (lo, hi)) if lo != hi =>
         readPartitionedTime(spark, url, table, c, lo, hi, numPartitions)
       }
@@ -350,130 +313,51 @@ object Jdbc {
   /** An embedded-Derby URL for a throwaway database under `dir`. */
   def derbyUrl(dir: String): String = s"jdbc:derby:$dir/graftdb;create=true"
 
-  /** User tables visible through the connection's catalog metadata — the
-    * live-mode SYSTABLE scan (S1; reference inventories user tables at
-    * migration.py:1691 with system schemas excluded the same way). */
-  def listTables(url: String): Seq[String] = {
-    quietDerby
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val rs = conn.getMetaData.getTables(null, null, "%", Array("TABLE"))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (rs.next()) {
-        val schem = Option(rs.getString("TABLE_SCHEM")).getOrElse("")
-        if (!schem.toUpperCase.startsWith("SYS")) buf += rs.getString("TABLE_NAME")
-      }
+  /** User tables in the connection's CURRENT schema — the live-mode
+    * SYSTABLE scan (S1; the reference inventories user tables at
+    * migration.py:1691 with system schemas excluded the same way). The
+    * current schema is the one every unqualified read, write, rename and
+    * count here resolves in, so a same-named table in ANOTHER schema can
+    * neither join the inventory nor trigger (or suppress) the load's
+    * recovery rename. Falls back to all non-`SYS` schemas only when the
+    * driver cannot report its current schema. */
+  def listTables(url: String): Seq[String] = withConnection(url) { conn =>
+    val schema =
+      try Option(conn.getSchema)
+      catch { case _: SQLException | _: AbstractMethodError => None }
+    val rs = conn.getMetaData.getTables(null, schema.orNull, "%", Array("TABLE"))
+    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (rs.next()) {
+      val schem = Option(rs.getString("TABLE_SCHEM")).getOrElse("")
+      if (!schem.toUpperCase.startsWith("SYS")) buf += rs.getString("TABLE_NAME")
+    }
+    buf.toSeq
+  }
+
+  /** Server-side `SELECT g, SUM(s) … GROUP BY g`, one row per group — the
+    * reference's SYSCOLUMN sizing (`migration.py:1704-1706`, `sum(width) …
+    * where table_id=…`) asked once for every table instead of once per
+    * table. The group key must be comparable on the server (a bounded
+    * VARCHAR, not a LOB). */
+  def groupedSum(url: String, table: String, groupCol: String,
+      sumCol: String): Seq[(String, Long)] =
+    query(url, s"""SELECT "$groupCol", SUM("$sumCol") FROM $table GROUP BY "$groupCol"""") { rs =>
+      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      while (rs.next()) buf += (rs.getString(1) -> rs.getLong(2))
       buf.toSeq
-    } finally conn.close()
-  }
-
-  /** [[listTables]] with the owning schema kept — the DSv2 catalog resolves
-    * identifiers verbatim and schema-qualified, so the live inventory needs
-    * `(schema, table)` pairs, not bare names. */
-  def listTablesQualified(url: String): Seq[(String, String)] = {
-    quietDerby
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val rs = conn.getMetaData.getTables(null, null, "%", Array("TABLE"))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (rs.next()) {
-        val schem = Option(rs.getString("TABLE_SCHEM")).getOrElse("")
-        if (!schem.toUpperCase.startsWith("SYS"))
-          buf += ((schem, rs.getString("TABLE_NAME")))
-      }
-      buf.toSeq
-    } finally conn.close()
-  }
-
-  /** Ungrouped COUNT(*) through a [[readV2]] relation, returned ONLY when
-    * Catalyst actually pushed the aggregate into the remote scan
-    * (`PushedAggregates` in the physical plan) — then the server computes
-    * it and one row crosses the wire. Returns None when the dialect
-    * declined the pushdown, so callers can fall back to the derived-table
-    * [[count]] instead of silently dragging the whole table over the
-    * connection to count it driver-side. */
-  def pushedCount(v2: org.apache.spark.sql.DataFrame): Option[Long] = {
-    import org.apache.spark.sql.functions.{count => fcount, lit}
-    val agg = v2.agg(fcount(lit(1)).as("n"))
-    if (agg.queryExecution.executedPlan.toString.contains("PushedAggregates"))
-      Some(agg.head().getLong(0))
-    else None
-  }
-
-  /** Grouped SUM through a [[readV2]] relation — `SELECT g, SUM(s) GROUP BY
-    * g` — returned ONLY when Catalyst pushed the whole aggregate into the
-    * remote scan (`PushedAggregates`): then the server computes it and one
-    * row PER GROUP crosses the wire. This is the reference's SYSCOLUMN
-    * sizing query (`migration.py:1704-1706` — `sum(width) … where
-    * table_id=…`) re-shaped the way it scales: the reference re-issues the
-    * filtered sum once per table (N round trips); one pushed GROUP BY ships
-    * the whole width inventory in a single remote aggregate. Returns None
-    * when the dialect declined the pushdown so callers fall back to
-    * [[groupedSum]] — still server-side, never a data-sized drag. Known
-    * decline: a LOB-typed group key (Derby stores unbounded strings as
-    * CLOB, which it cannot compare/group); catalogs keyed on bounded
-    * VARCHAR identifiers push fine — JdbcSpec pins both behaviors. */
-  def pushedGroupedSum(v2: DataFrame, groupCol: String,
-      sumCol: String): Option[Seq[(String, Long)]] = {
-    import org.apache.spark.sql.functions.{col, sum}
-    val agg = v2.groupBy(col(groupCol)).agg(sum(col(sumCol)).as("s"))
-    if (agg.queryExecution.executedPlan.toString.contains("PushedAggregates"))
-      Some(agg.collect().toSeq
-        .map(r => r.get(0).toString -> r.getAs[Number](1).longValue()))
-    else None
-  }
-
-  /** Derived-table fallback for the same grouped sum: the v1 relation can't
-    * push aggregates, so the GROUP BY is written into the remote query
-    * verbatim — the server still computes it and group-sized rows cross the
-    * wire, exactly like [[count]]/[[bounds]] do for their shapes. */
-  def groupedSum(spark: SparkSession, url: String, table: String,
-      groupCol: String, sumCol: String): Seq[(String, Long)] = {
-    quietDerby
-    spark.read.jdbc(url,
-      s"""(SELECT "$groupCol" AS g, SUM("$sumCol") AS s FROM $table GROUP BY "$groupCol") gs_q""",
-      props())
-      .collect().toSeq
-      .map(r => r.get(0).toString -> r.getAs[Number](1).longValue())
-  }
-
-  /** Tables visible in the CONNECTION'S CURRENT schema only — the existence
-    * probe the load promote/recovery path needs. [[listTables]]'s all-schema
-    * scan would let a same-named table in ANOTHER schema trigger (or
-    * suppress) an unqualified RENAME against the wrong object. Falls back to
-    * the all-schema scan only when the driver cannot report its current
-    * schema. */
-  def listTablesInCurrentSchema(url: String): Seq[String] = {
-    quietDerby
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val schema = try Option(conn.getSchema) catch { case _: Throwable => None }
-      val rs = conn.getMetaData.getTables(null, schema.orNull, "%", Array("TABLE"))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (rs.next()) {
-        val schem = Option(rs.getString("TABLE_SCHEM")).getOrElse("")
-        if (!schem.toUpperCase.startsWith("SYS")) buf += rs.getString("TABLE_NAME")
-      }
-      buf.toSeq
-    } finally conn.close()
-  }
+    }
 
   /** Dialect-aware table rename (the promote step's swap): Derby and
     * MySQL/MariaDB speak `RENAME TABLE a TO b`; everything else gets the
     * more widely spoken `ALTER TABLE a RENAME TO b` (PostgreSQL, HANA,
     * Oracle, SQLite…). Routed through the product name because no JDBC
     * metadata capability covers rename syntax. */
-  def renameTable(url: String, from: String, to: String): Unit = {
-    quietDerby
-    val conn = java.sql.DriverManager.getConnection(url)
-    val product =
-      try conn.getMetaData.getDatabaseProductName.toLowerCase
-      finally conn.close()
-    val sql =
+  def renameTable(url: String, from: String, to: String): Unit = withConnection(url) { conn =>
+    val product = conn.getMetaData.getDatabaseProductName.toLowerCase
+    executeOn(conn,
       if (product.contains("derby") || product.contains("mysql") ||
           product.contains("maria")) s"RENAME TABLE $from TO $to"
-      else s"ALTER TABLE $from RENAME TO $to"
-    execute(url, sql)
+      else s"ALTER TABLE $from RENAME TO $to")
   }
 
   /** Live write-probe: CREATE and DROP a real test table through the
@@ -486,22 +370,22 @@ object Jdbc {
       execute(url, "CREATE TABLE graft_write_probe (i INT)")
       execute(url, "DROP TABLE graft_write_probe")
       true
-    } catch { case _: java.sql.SQLException => false }
+    } catch { case _: SQLException => false }
 
   /** Run one DDL/DML statement on the live connection (the load phase's
     * promote step needs DROP/RENAME, which the DataFrame writer can't
     * express). `ignoreMissingTable` swallows the missing-table states so
     * drop-if-exists works on engines without IF EXISTS (Derby). */
-  def execute(url: String, sql: String, ignoreMissingTable: Boolean = false): Unit = {
-    quietDerby
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      try st.execute(sql)
-      catch {
-        case e: java.sql.SQLException
-            if ignoreMissingTable && Set("42Y55", "42X05").contains(e.getSQLState) => ()
-      } finally st.close()
-    } finally conn.close()
+  def execute(url: String, sql: String, ignoreMissingTable: Boolean = false): Unit =
+    withConnection(url)(executeOn(_, sql, ignoreMissingTable))
+
+  private def executeOn(conn: Connection, sql: String,
+      ignoreMissingTable: Boolean = false): Unit = {
+    val st = conn.createStatement()
+    try st.execute(sql)
+    catch {
+      case e: SQLException
+          if ignoreMissingTable && Set("42Y55", "42X05").contains(e.getSQLState) => ()
+    } finally st.close()
   }
 }

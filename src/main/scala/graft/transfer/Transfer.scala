@@ -5,7 +5,6 @@ import java.nio.file.{Path => JPath}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Object-store transfer utilities (SURVEY §2.1 S12-S14).
   *
@@ -19,8 +18,8 @@ import org.apache.spark.sql.functions._
   * `hdfs://` on a cluster, and `webhdfs://host:port/...` — Hadoop's WebHDFS
   * client speaks the same REST endpoints the reference curls (OP=CREATE,
   * LISTSTATUS…), with kerberos/token auth handled by the filesystem.
-  * The VALIDATION plane is Spark: a join over (name, size) listings —
-  * the reconciliation shape that scales to millions of files.
+  * Validation compares (name, size) listings on the driver, where
+  * [[listing]] already builds them from one LISTSTATUS per directory.
   */
 object Transfer {
 
@@ -130,14 +129,12 @@ object Transfer {
   }
 
   /** Upload validation: every local file present remotely with equal size.
-    * Returns (n_local, n_matched, ok) — mismatch shape is a full-outer
-    * anti-join, exactly J8. */
+    * Returns (n_local, n_matched, ok); remote-only files match nothing. */
   def validate(local: DataFrame, remote: DataFrame): (Long, Long, Boolean) = {
-    val joined = local.as("l").join(remote.as("r"),
-      col("l.file_name") === col("r.file_name") &&
-        col("l.size_bytes") === col("r.size_bytes"), "left_semi")
-    val nLocal = local.count()
-    val nMatched = joined.count()
-    (nLocal, nMatched, nLocal == nMatched)
+    def files(df: DataFrame) = df.collect().toSeq
+      .map(r => (r.getAs[String]("file_name"), r.getAs[Long]("size_bytes")))
+    val l = files(local)
+    val nMatched = l.count(files(remote).toSet).toLong
+    (l.size.toLong, nMatched, nMatched == l.size)
   }
 }

@@ -144,14 +144,14 @@ class JdbcSpec extends SparkTestBase {
     // key rides the same LOB-safe cast as strKeySql (Derby stores
     // StringType as CLOB, which rejects bare comparisons))
     val exact = Seq("""CAST("rk" AS VARCHAR(128)) < 'f' OR "rk" IS NULL""", """CAST("rk" AS VARCHAR(128)) >= 'f'""")
-    assert(Jdbc.predicatesCoverExactly(spark, url, "recon_t", exact))
+    assert(Jdbc.predicatesCoverExactly(url, "recon_t", exact))
     // overlapping ranges (the collation-mismatch failure shape: a boundary
     // row matching two predicates) over-count and must be rejected
     val overlap = Seq("""CAST("rk" AS VARCHAR(128)) < 'f' OR "rk" IS NULL""", """CAST("rk" AS VARCHAR(128)) >= 'e'""")
-    assert(!Jdbc.predicatesCoverExactly(spark, url, "recon_t", overlap))
+    assert(!Jdbc.predicatesCoverExactly(url, "recon_t", overlap))
     // a gap (zero-counted rows) under-counts and must be rejected too
     val gap = Seq("""CAST("rk" AS VARCHAR(128)) < 'c' OR "rk" IS NULL""", """CAST("rk" AS VARCHAR(128)) >= 'f'""")
-    assert(!Jdbc.predicatesCoverExactly(spark, url, "recon_t", gap))
+    assert(!Jdbc.predicatesCoverExactly(url, "recon_t", gap))
   }
 
   test("renameTable routes dialect syntax and swaps the table") {
@@ -160,8 +160,7 @@ class JdbcSpec extends SparkTestBase {
     Jdbc.execute(url, "DROP TABLE ren_dst", ignoreMissingTable = true)
     Jdbc.renameTable(url, "ren_src", "ren_dst")
     assert(Jdbc.read(spark, url, "ren_dst").count() == 1)
-    assert(!Jdbc.listTablesInCurrentSchema(url)
-      .exists(_.equalsIgnoreCase("ren_src")))
+    assert(!Jdbc.listTables(url).exists(_.equalsIgnoreCase("ren_src")))
   }
 
   test("readAuto partitions a timestamp-keyed table via temporal bounds") {
@@ -195,13 +194,13 @@ class JdbcSpec extends SparkTestBase {
     val nation = Tables.load(spark, sfDir, "nation").select("n_nationkey", "n_name")
     // committed state, then simulate a crash that happened between the
     // promote's DROP and RENAME: committed table gone, data only in staging
-    assert(graft.load.Loader.loadVerifiedJdbc(spark, nation, nation.count(),
+    assert(graft.load.Loader.loadVerifiedJdbc(nation, nation.count(),
       url, "crash_nation").ok)
     Jdbc.write(Jdbc.read(spark, url, "crash_nation"), url, "crash_nation_staging")
     Jdbc.execute(url, "DROP TABLE crash_nation")
     // next load FAILS its verify (wrong expected): recovery must first
     // finish the interrupted rename so the committed copy survives
-    val r = graft.load.Loader.loadVerifiedJdbc(spark, nation.limit(3), 999L,
+    val r = graft.load.Loader.loadVerifiedJdbc(nation.limit(3), 999L,
       url, "crash_nation")
     assert(!r.ok)
     assert(Jdbc.read(spark, url, "crash_nation").count() == nation.count(),
@@ -260,43 +259,17 @@ class JdbcSpec extends SparkTestBase {
     assert(!Jdbc.listTables(liveUrl).exists(_.toLowerCase.contains("_staging")))
   }
 
-  test("DSv2 catalog read pushes grouped aggregates into the remote scan") {
-    val supplier = Tables.load(spark, sfDir, "supplier")
-      .select("s_suppkey", "s_name", "s_nationkey")
-    Jdbc.write(supplier, url, "supplier_v2")
-    // Derby folds the writer's unquoted table DDL upper; columns were
-    // created quoted (lower) — the catalog resolves both verbatim
-    val v2 = Jdbc.readV2(spark, url, "APP.SUPPLIER_V2")
-    assert(v2.count() == supplier.count(), "v2 relation lost rows vs v1 write")
-    val agg = v2.groupBy(col("s_nationkey"))
-      .agg(count(lit(1)).as("n"), max(col("s_suppkey")).as("mx"))
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregates"),
-      s"grouped count/max did not push into the JDBC scan — plan:\n$plan")
-    // the pushed form must still be CORRECT: same groups as computing the
-    // aggregate in Spark over the v1 read
-    val viaV1 = Jdbc.read(spark, url, "supplier_v2")
-      .groupBy(col("s_nationkey"))
-      .agg(count(lit(1)).as("n"), max(col("s_suppkey")).as("mx"))
-      .orderBy("s_nationkey").collect().map(_.toSeq).toSeq
-    assert(agg.orderBy("s_nationkey").collect().map(_.toSeq).toSeq == viaV1)
-    // LIMIT pushes too (pushDownLimit): visible as PushedLimit in the scan
-    val lim = v2.limit(3)
-    assert(lim.queryExecution.executedPlan.toString.contains("PushedLimit") ||
-      lim.count() == 3) // dialect may decline the limit; row contract holds
-  }
-
-  test("live inventory rides the pushed DSv2 count, qualified per schema") {
+  test("live inventory counts each table with one plain server query") {
     val region = Tables.load(spark, sfDir, "region")
     Jdbc.write(region, url, "region_inv")
-    // pushedCount: Some(n) iff the ungrouped COUNT(*) actually pushed
-    // into the remote scan (Derby does); n must match the v1 count
-    val v2 = Jdbc.readV2(spark, url, "APP.REGION_INV")
-    assert(Jdbc.pushedCount(v2).contains(region.count()))
-    // the full inventory path: qualified listing + v2 schema + count
+    assert(Jdbc.count(url, "region_inv") == region.count())
+    // the full inventory path: current-schema listing + server count +
+    // width from the JDBC relation's schema
     val items = graft.cli.Main.jdbcWorkItems(spark, url)
     val inv = items.find(_.name == "region_inv").get
     assert(inv.rowCount == region.count())
+    assert(inv.sizeBytes == inv.rowCount *
+      graft.core.Catalog.rowWidth(Jdbc.read(spark, url, "region_inv").schema))
     assert(inv.sizeBytes > 0)
   }
 
@@ -307,23 +280,17 @@ class JdbcSpec extends SparkTestBase {
     val region = Tables.load(spark, sfDir, "region")
     Jdbc.write(region.select("r_regionkey", "r_name"), url, "width_inv")
     // explicit VARCHAR DDL: the writer's default maps StringType to CLOB,
-    // and a LOB group key makes Catalyst decline aggregate pushdown (the
-    // fallback would still answer, but this test pins the PUSHED plan);
-    // a real server's column catalog keys on bounded identifiers anyway
+    // which Derby cannot GROUP BY; a real server's column catalog keys on
+    // bounded identifiers anyway
     Jdbc.execute(url,
       """CREATE TABLE graft_syscol ("table_name" VARCHAR(128), "width" INT)""")
     Jdbc.write(
       Seq(("width_inv", 4), ("width_inv", 32), ("other_t", 100))
         .toDF("table_name", "width"),
       url, "graft_syscol", SaveMode.Append)
-    // the grouped SUM(width) must PUSH into the remote scan — one grouped
-    // aggregate for the whole width inventory, not a per-table re-query
-    val v2 = Jdbc.readV2(spark, url, "APP.GRAFT_SYSCOL")
-    val pushed = Jdbc.pushedGroupedSum(v2, "table_name", "width")
-    assert(pushed.isDefined, "grouped SUM(width) did not push into the JDBC scan")
-    assert(pushed.get.toMap == Map("width_inv" -> 36L, "other_t" -> 100L))
-    // the derived-table fallback computes the same sums server-side
-    assert(Jdbc.groupedSum(spark, url, "graft_syscol", "table_name", "width")
+    // one grouped SUM(width) on the server for the whole width inventory,
+    // not a per-table re-query
+    assert(Jdbc.groupedSum(url, "graft_syscol", "table_name", "width")
       .toMap == Map("width_inv" -> 36L, "other_t" -> 100L))
     // the CLI inventory path rides it: catalog width for listed tables,
     // schema-derived width for tables the catalog doesn't cover
@@ -334,6 +301,50 @@ class JdbcSpec extends SparkTestBase {
     assert(wi.sizeBytes == wi.rowCount * 36L)
     val self = items.find(_.name == "graft_syscol").get
     assert(self.sizeBytes == self.rowCount *
-      graft.core.Catalog.rowWidth(v2.schema))
+      graft.core.Catalog.rowWidth(Jdbc.read(spark, url, "graft_syscol").schema))
+  }
+
+  /** Spark jobs `f` starts on this thread, counted through a job group. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    org.apache.spark.graftbridge.Bus.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("catalog-sized server questions run no Spark job") {
+    import spark.implicits._
+    val liveUrl = Jdbc.derbyUrl(
+      java.nio.file.Files.createTempDirectory("graft_jdbc_nojobs").toString)
+    Jdbc.write(Tables.load(spark, sfDir, "nation"), liveUrl, "nation")
+    Jdbc.write(Seq("alpha", "bravo", "charlie", "delta", "echo").toDF("s_key"),
+      liveUrl, "str_keyed")
+    Jdbc.execute(liveUrl,
+      """CREATE TABLE graft_syscol ("table_name" VARCHAR(128), "width" INT)""")
+    Jdbc.write(Seq(("nation", 40)).toDF("table_name", "width"), liveUrl,
+      "graft_syscol", SaveMode.Append)
+    // inventory (with and without the width catalog) and readAuto's bounds,
+    // string bounds and predicate-coverage counts: all on the connection
+    var intRead, strRead: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf {
+      graft.cli.Main.jdbcWorkItems(spark, liveUrl)
+      graft.cli.Main.jdbcWorkItems(spark, liveUrl, widthCatalog = Some("graft_syscol"))
+      intRead = Jdbc.readAuto(spark, liveUrl, "nation", numPartitions = 4)
+      strRead = Jdbc.readAuto(spark, liveUrl, "str_keyed", numPartitions = 3)
+    } == 0)
+    assert(intRead.rdd.getNumPartitions == 4, "integral key not range-partitioned")
+    assert(strRead.rdd.getNumPartitions > 1, "string key not range-partitioned")
+    // the load's verify is one server-side COUNT(*): the load runs exactly
+    // the jobs of its data write
+    val rows = Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
+    val writeJobs = jobsOf(Jdbc.write(rows, liveUrl, "loaded_probe"))
+    assert(writeJobs > 0)
+    var result: graft.load.Loader.LoadResult = null
+    assert(jobsOf {
+      result = graft.load.Loader.loadVerifiedJdbc(rows, 3L, liveUrl, "loaded")
+    } == writeJobs)
+    assert(result.ok && result.loaded == 3L)
   }
 }

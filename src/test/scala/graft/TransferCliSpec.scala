@@ -42,6 +42,16 @@ class TransferCliSpec extends SparkTestBase {
     val (n, m, ok) = Transfer.validate(
       Transfer.listing(spark, a.toString), Transfer.listing(spark, b.toString))
     assert(n == 2 && m == 1 && !ok)
+    // a file missing remotely matches nothing; a remote-only file is no
+    // stand-in for it
+    Files.write(b.resolve("f2"), Array[Byte](3))
+    Files.write(a.resolve("f3"), Array[Byte](5, 6, 7))
+    Files.write(b.resolve("f4"), Array[Byte](5, 6, 7))
+    assert(Transfer.validate(Transfer.listing(spark, a.toString),
+      Transfer.listing(spark, b.toString)) == ((3L, 2L, false)))
+    Files.delete(a.resolve("f3"))
+    assert(Transfer.validate(Transfer.listing(spark, a.toString),
+      Transfer.listing(spark, b.toString)) == ((2L, 2L, true)))
   }
 
   test("config validation mirrors the reference's gates") {
@@ -167,11 +177,12 @@ class TransferCliSpec extends SparkTestBase {
     assert(!Files.exists(Paths.get(s"$out/warehouse/nation")))
   }
 
-  test("LOB-columned table routes through the per-row file plane and reloads byte-identical") {
+  /** Fixture data dir: the canonical tables plus one LOB-bearing extra,
+    * `attachments.parquet` — the dynamic catalog picks it up with the next
+    * table id. Returns the dir and the extra table's rows. */
+  private def lobDataDir(): (java.nio.file.Path, org.apache.spark.sql.DataFrame) = {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
-    // fixture data dir: the canonical tables plus one LOB-bearing extra —
-    // the dynamic catalog picks it up with the next table id
     val dataDir = Files.createTempDirectory("graft_lobsf")
     graft.core.Tables.names.foreach { n =>
       Files.copy(Paths.get(s"$sfDir/$n.parquet"), dataDir.resolve(s"$n.parquet"))
@@ -186,7 +197,12 @@ class TransferCliSpec extends SparkTestBase {
     val part = Files.list(dataDir.resolve("tmp_att")).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet")).get
     Files.move(part, dataDir.resolve("attachments.parquet"))
+    (dataDir, att)
+  }
 
+  test("LOB-columned table routes through the per-row file plane and reloads byte-identical") {
+    import scala.jdk.CollectionConverters._
+    val (dataDir, att) = lobDataDir()
     val out = Files.createTempDirectory("graft_lobcli").toString
     graft.cli.Main.fullExtraction(spark, dataDir.toString, out)
     val listed = Files.readAllLines(Paths.get(s"$out/iq_tables.list")).asScala
@@ -269,6 +285,30 @@ class TransferCliSpec extends SparkTestBase {
     // untouched table's manifest unmodified (it was skipped)
     assert(Files.getLastModifiedTime(
       Paths.get(s"$out/Extracted_Data/1000.manifest.json")) == beforeStamp)
+  }
+
+  test("extraction resume resolves only the tables it re-extracts") {
+    import scala.jdk.CollectionConverters._
+    val out = Files.createTempDirectory("graft_resume_lazy").toString
+    graft.cli.Main.fullExtraction(spark, sfDir, out)
+    Files.delete(Paths.get(s"$out/Extracted_Data/1001.manifest.json"))
+    val work = Files.readAllLines(Paths.get(s"$out/iq_tables.list")).asScala.toSeq
+      .map(_.split(','))
+      .map(f => graft.extract.Extract.WorkItem(f(0).stripPrefix("graft."),
+        f(1).toLong, f(2).toLong, f(3).toInt))
+    val victim = work.find(_.tableId == 1001).get.name
+    graft.cli.Main.onlyDataFrom(spark, out, 0L, work, n =>
+      if (n == victim) graft.core.Tables.load(spark, sfDir, n)
+      else throw new IllegalStateException(s"resolved $n, whose extract is complete"))
+    assert(Files.exists(Paths.get(s"$out/Extracted_Data/1001.manifest.json")))
+  }
+
+  test("premigration audits the extra catalog tables too") {
+    def lobLike(dir: String): Long =
+      graft.premigration.Checks.findings(spark, dir).collect()
+        .find(_.getString(0) == "lob_like_columns").get.getLong(1)
+    // attachments.parquet carries one binary column the canonical tables lack
+    assert(lobLike(lobDataDir()._1.toString) == lobLike(sfDir) + 1)
   }
 
   test("resume re-extracts when the manifest names a DIFFERENT table (id remap)") {
