@@ -91,9 +91,11 @@ object Main {
     require(gates.forall(_.getBoolean(1)), "environment gates failed")
     val gateReport = gates.map(r =>
       f"gate:${r.getString(0)}%-22s pass=${r.getBoolean(1)}  ${r.getString(2)}")
-    val findings = Checks.findings(spark, sfDir).collect()
-    val report = (gateReport ++ findings.map(r =>
-      f"${r.getString(0)}%-28s ${r.getLong(1)}%8d  actionRequired=${r.getBoolean(2)}"))
+    // the audit runs where the data lives (live mode reads nothing under sfDir)
+    val findings = if (jdbc.nonEmpty) Checks.live(spark, jdbc)(Checks.findings)
+      else Checks.findings(Checks.parquet(spark, sfDir))
+    val report = (gateReport ++ findings.map(f =>
+      f"${f.checkName}%-28s ${f.findingCount}%8d  actionRequired=${f.actionRequired}"))
       .mkString("# graft pre-migration report\n", "\n", "\n")
     Ctl.write(spark.sparkContext.hadoopConfiguration,
       s"$out/pre_migration.out", report)

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque `binary`
   * columns with typed metadata structs, plus batch decode /
@@ -74,12 +75,12 @@ object Multimodal {
             val r = readers.next()
             try {
               r.setInput(in)
-              val frames = try r.getNumImages(true) catch { case _: Throwable => 1 }
+              val frames = try r.getNumImages(true) catch { case NonFatal(_) => 1 }
               Some((r.getWidth(0), r.getHeight(0), math.max(frames, 1), checksum(p)))
             } finally r.dispose()
           }
         } finally in.close()
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
 
     /** Audio header decode: (channels, sample bits, frame count, checksum)
       * — the (w, h, frames) slots carry the audio analog dimensions. */
@@ -93,7 +94,7 @@ object Multimodal {
           Some((f.getChannels, f.getSampleSizeInBits,
             math.max(ais.getFrameLength.toInt, 0), checksum(p)))
         } finally ais.close()
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
 
     /** Frame byte-ranges of an MJPEG stream — the simplest real video
       * container: concatenated baseline JPEGs (the over-the-wire form of
@@ -138,7 +139,7 @@ object Multimodal {
     private def readImage(p: Array[Byte]): Option[java.awt.image.BufferedImage] =
       if (!sniffImage(p)) None
       else try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p)))
-      catch { case _: Throwable => None }
+      catch { case NonFatal(_) => None }
 
     private def scaled(img: java.awt.image.BufferedImage,
         w: Int, h: Int): java.awt.image.BufferedImage = {
@@ -198,7 +199,7 @@ object Multimodal {
             val r = readers.next()
             try {
               r.setInput(in)
-              val n = try r.getNumImages(true) catch { case _: Throwable => 1 }
+              val n = try r.getNumImages(true) catch { case NonFatal(_) => 1 }
               if (idx < 0 || idx >= math.max(n, 1)) None
               else {
                 val bos = new java.io.ByteArrayOutputStream()
@@ -208,7 +209,7 @@ object Multimodal {
             } finally r.dispose()
           }
         } finally in.close()
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
 
     /** `dims` luminance means over a dims×1 downscale — a real (if tiny)
       * visual signature in [0,1]; the model-based-embedding seam stays

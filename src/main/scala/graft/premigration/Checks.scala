@@ -1,84 +1,94 @@
 package graft.premigration
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, BinaryType, StructType}
 
 import graft.core.{Catalog, Tables}
+import graft.sources.Jdbc
 
-/** Pre-migration audit (SURVEY §3.1): a sequence of feature checks, each
-  * producing a scalar finding count, unioned into one findings relation —
-  * mirroring `/root/reference/Pre_Migration/pre_migration.py:856-905`'s
-  * dispatch over ~21 checks appending `(feature, comment)` tuples.
-  *
-  * Each check is a single aggregate job; the union is a tiny DataFrame.
+/** Pre-migration audit (SURVEY §3.1): feature checks, each a scalar
+  * finding count — the reference sends each check to the source server as
+  * one SQL query (`Pre_Migration/pre_migration.py:96-757`,
+  * dispatched at `:856-905`). Each check is stated once: a data check is one
+  * portable `SELECT COUNT(*)` text that either executor runs unchanged
+  * ([[parquet]] or [[live]]); the catalog checks read the resolved schemas.
   */
 object Checks {
 
-  /** The data directory under audit. `schemas` resolves the schema of every
-    * table the catalog lists for the directory — the canonical tables and
-    * any extra `<name>.parquet` — once per audit, for every check that
-    * needs it. */
-  final class Source(val spark: SparkSession, val dir: String) {
-    def load(name: String): DataFrame = Tables.load(spark, dir, name)
-    lazy val schemas: Seq[StructType] =
-      Catalog.tableMetas(dir).map(t => load(t.tableName).schema)
+  /** The server under audit: its tables, their schemas, one-number queries
+    * and its identifier quote. */
+  abstract class Source(quoteString: String) {
+    def tables: Seq[String]
+    def schema(table: String): StructType
+    def count(sql: String): Long
+    def quote(id: String): String = quoteString + id.replace(quoteString, quoteString * 2) + quoteString
+    lazy val schemas: Seq[StructType] = tables.map(schema)
   }
 
-  final case class Check(name: String, description: String,
-      count: Source => DataFrame)
-
-  private def scalar(src: Source, n: Long): DataFrame = {
-    import src.spark.implicits._
-    Seq(n).toDF("n")
+  /** Parquet executor: every catalog table of `dir` (the canonical tables
+    * and any extra `<name>.parquet`) as a temp view of a forked session, so
+    * no view leaks into the caller's session. */
+  def parquet(spark: SparkSession, dir: String): Source = {
+    val session = spark.newSession()
+    val names = Catalog.tableMetas(dir).map(_.tableName)
+    new Source("`") {
+      // quoted: an extra file's name need not be a bare identifier
+      names.foreach(n => Tables.load(session, dir, n).createOrReplaceTempView(quote(n)))
+      def tables = names
+      def schema(table: String) = session.table(quote(table)).schema
+      def count(sql: String) = session.sql(sql).head().getLong(0)
+    }
   }
+
+  /** Live executor: `f` audits the server at `url` over one connection.
+    * Schemas come from the JDBC relation, which Spark resolves on the driver
+    * without a job, so the audit starts no Spark job. */
+  def live[A](spark: SparkSession, url: String)(f: Source => A): A =
+    Jdbc.withConnection(url) { conn =>
+      // JDBC reports " " when the server does not quote identifiers
+      f(new Source(conn.getMetaData.getIdentifierQuoteString.trim) {
+        val tables = Jdbc.listTables(conn)
+        def schema(table: String) = Jdbc.read(spark, url, quote(table)).schema
+        def count(sql: String) = Jdbc.query(conn, sql) { rs => rs.next(); rs.getLong(1) }
+      })
+    }
+
+  final case class Check(name: String, description: String, count: Source => Long)
+
+  /** A data check: one `SELECT COUNT(*)` text over the source's quote. Table
+    * names stay bare (each server resolves them by its own case rules);
+    * columns are quoted, as Spark's JDBC writer creates them case-preserved. */
+  private def sql(name: String, description: String)(text: (String => String) => String) =
+    Check(name, description, src => src.count(text(src.quote)))
 
   /** Data-quality / compatibility checks over the migrated tables. */
   val all: Seq[Check] = Seq(
-    Check("orders_without_lines", "orders having no lineitems (dangling FK)",
-      src => src.load("orders")
-        .join(src.load("lineitem"),
-          col("o_orderkey") === col("l_orderkey"), "left_anti")
-        .agg(count(lit(1)).as("n"))),
-    Check("customers_without_orders", "customers with no orders",
-      src => src.load("customer")
-        .join(src.load("orders"),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .agg(count(lit(1)).as("n"))),
-    Check("negative_balances", "customer accounts in the red",
-      src => src.load("customer")
-        .filter(col("c_acctbal") < 0).agg(count(lit(1)).as("n"))),
-    Check("empty_documents", "documents with no text",
-      src => src.load("documents")
-        .filter(length(col("text")) === 0).agg(count(lit(1)).as("n"))),
+    sql("orders_without_lines", "orders having no lineitems (dangling FK)")(q =>
+      "SELECT COUNT(*) FROM orders o WHERE NOT EXISTS (SELECT 1 FROM lineitem l " +
+        s"WHERE l.${q("l_orderkey")} = o.${q("o_orderkey")})"),
+    sql("customers_without_orders", "customers with no orders")(q =>
+      "SELECT COUNT(*) FROM customer c WHERE NOT EXISTS (SELECT 1 FROM orders o " +
+        s"WHERE o.${q("o_custkey")} = c.${q("c_custkey")})"),
+    sql("negative_balances", "customer accounts in the red")(q =>
+      s"SELECT COUNT(*) FROM customer WHERE ${q("c_acctbal")} < 0"),
+    sql("empty_documents", "documents with no text")(q =>
+      s"SELECT COUNT(*) FROM documents WHERE LENGTH(${q("text")}) = 0"),
     Check("empty_tables", "tables with zero rows (extraction short-circuit)",
-      src => Catalog.tableInventory(src.spark, src.dir)
-        .filter(col("row_count") === 0).agg(count(lit(1)).as("n"))),
+      src => src.tables.count(t => src.count(s"SELECT COUNT(*) FROM ${src.quote(t)}") == 0).toLong),
     Check("wide_row_tables", "tables whose declared row width exceeds 128 bytes",
-      src => scalar(src, src.schemas.count(Catalog.rowWidth(_) > 128).toLong)),
+      src => src.schemas.count(Catalog.rowWidth(_) > 128).toLong),
     Check("lob_like_columns", "columns needing the LOB extract path (binary/array)",
-      src => scalar(src, src.schemas.map(_.fields.count(f => f.dataType match {
-        case _: ArrayType | BinaryType => true
-        case _ => false
-      })).sum.toLong)),
-    Check("duplicate_orderkeys", "orders with duplicated primary key",
-      src => src.load("orders")
-        .groupBy("o_orderkey").agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1).agg(count(lit(1)).as("n"))),
-    Check("future_dates", "events timestamped beyond the extraction window",
-      src => src.load("events")
-        .filter(col("ts") > lit("2030-01-01").cast("timestamp"))
-        .agg(count(lit(1)).as("n"))))
+      src => src.schemas.flatMap(_.fields)
+        .count(f => f.dataType.isInstanceOf[ArrayType] || f.dataType == BinaryType).toLong),
+    sql("duplicate_orderkeys", "orders with duplicated primary key")(q =>
+      s"SELECT COUNT(*) FROM (SELECT ${q("o_orderkey")} FROM orders " +
+        s"GROUP BY ${q("o_orderkey")} HAVING COUNT(*) > 1) d"),
+    sql("future_dates", "events timestamped beyond the extraction window")(q =>
+      s"SELECT COUNT(*) FROM events WHERE ${q("ts")} > CAST('2030-01-01 00:00:00' AS TIMESTAMP)"))
 
-  /** The findings relation: (check_name, finding_count, action_required). */
-  def findings(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = new Source(spark, sfDir)
-    all.map { c =>
-      c.count(src)
-        .select(
-          lit(c.name).as("check_name"),
-          col("n").cast("long").as("finding_count"),
-          (col("n") > 0).as("action_required"))
-    }.reduce(_.unionByName(_)).orderBy("check_name")
-  }
+  final case class Finding(checkName: String, findingCount: Long, actionRequired: Boolean)
+
+  /** Every check's finding on `src`, sorted by check name. */
+  def findings(src: Source): Seq[Finding] =
+    all.map { c => val n = c.count(src); Finding(c.name, n, n > 0) }.sortBy(_.checkName)
 }

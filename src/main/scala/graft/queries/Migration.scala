@@ -522,7 +522,8 @@ object Migration {
           row("wide_row_tables", s"SELECT $wideCnt")
         ).map(r => "(" + r + ")").mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY check_name")
       }) { (s, dir) =>
-      Checks.findings(s, dir)
+      s.createDataFrame(Checks.findings(Checks.parquet(s, dir)))
+        .toDF("check_name", "finding_count", "action_required")
     }
   )
 }

@@ -68,14 +68,14 @@ object Jdbc {
 
   /** One connection for the duration of `f`, opened with the same
     * properties as every Spark-side read and write. */
-  private def withConnection[A](url: String)(f: Connection => A): A = {
+  private[graft] def withConnection[A](url: String)(f: Connection => A): A = {
     quietDerby
     val conn = DriverManager.getConnection(url, props())
     try f(conn) finally conn.close()
   }
 
   /** Run one query on `conn` and hand its result set to `read`. */
-  private def query[A](conn: Connection, sql: String)(read: ResultSet => A): A = {
+  private[graft] def query[A](conn: Connection, sql: String)(read: ResultSet => A): A = {
     val st = conn.createStatement()
     try read(st.executeQuery(sql)) finally st.close()
   }
@@ -321,7 +321,8 @@ object Jdbc {
     * neither join the inventory nor trigger (or suppress) the load's
     * recovery rename. Falls back to all non-`SYS` schemas only when the
     * driver cannot report its current schema. */
-  def listTables(url: String): Seq[String] = withConnection(url) { conn =>
+  def listTables(url: String): Seq[String] = withConnection(url)(listTables)
+  private[graft] def listTables(conn: Connection): Seq[String] = {
     val schema =
       try Option(conn.getSchema)
       catch { case _: SQLException | _: AbstractMethodError => None }

@@ -347,4 +347,45 @@ class JdbcSpec extends SparkTestBase {
     } == writeJobs)
     assert(result.ok && result.loaded == 3L)
   }
+
+  /** A fresh Derby database holding the sf0.001 tables Derby can carry
+    * (Derby has no array type, so `embeddings` stays out). */
+  private def scalarServer(prefix: String): String = {
+    val liveUrl = Jdbc.derbyUrl(java.nio.file.Files.createTempDirectory(prefix).toString)
+    Tables.names.filterNot(_ == "embeddings")
+      .foreach(n => Jdbc.write(Tables.load(spark, sfDir, n), liveUrl, n))
+    liveUrl
+  }
+
+  test("premigration --jdbc audits the live server and starts no Spark job") {
+    import java.nio.file.{Files, Paths}
+    import graft.premigration.Checks
+    val liveUrl = scalarServer("graft_jdbc_audit")
+    // a defect only the server has: one order key stored twice
+    Jdbc.execute(liveUrl, """INSERT INTO orders SELECT * FROM orders
+      WHERE "o_orderkey" = (SELECT MIN("o_orderkey") FROM orders)""")
+    val out = Files.createTempDirectory("graft_jdbc_audit_out").toString
+    // no parquet directory at all: every finding must come from the server
+    graft.cli.Main.premigration(spark, "/nonexistent", out, liveUrl)
+    val report = Files.readString(Paths.get(s"$out/pre_migration.out"))
+    assert(report.linesIterator.contains(
+      f"${"duplicate_orderkeys"}%-28s ${1}%8d  actionRequired=true"), report)
+    var live: Seq[Checks.Finding] = Nil
+    assert(jobsOf { live = Checks.live(spark, liveUrl)(Checks.findings) } == 0)
+    assert(live.find(_.checkName == "duplicate_orderkeys").get.findingCount == 1)
+  }
+
+  test("live and parquet audits agree on the same tables") {
+    import graft.premigration.Checks
+    val liveUrl = scalarServer("graft_jdbc_parity")
+    val live = Checks.live(spark, liveUrl)(Checks.findings)
+    val parquet = Checks.findings(Checks.parquet(spark, sfDir))
+    // wide_row_tables and lob_like_columns read the schemas, and Derby's
+    // differ: it holds no `embeddings` (no array type), so the server has
+    // one table and one array column fewer than the parquet directory
+    val schemaChecks = Set("wide_row_tables", "lob_like_columns")
+    assert(live.filterNot(f => schemaChecks(f.checkName)) ==
+      parquet.filterNot(f => schemaChecks(f.checkName)))
+    assert(live.size == Checks.all.size && parquet.size == Checks.all.size)
+  }
 }

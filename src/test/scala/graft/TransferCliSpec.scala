@@ -65,8 +65,16 @@ class TransferCliSpec extends SparkTestBase {
   test("cli phases run end-to-end and leave the reference's control files") {
     val out = Files.createTempDirectory("graft_cli").toString
     graft.cli.Main.premigration(spark, sfDir, out)
-    assert(Files.readString(Paths.get(s"$out/pre_migration.out"))
-      .contains("customers_without_orders"))
+    // every finding line of the sf0.001 audit, pinned value for value
+    val findingLines = Seq(
+      "customers_without_orders" -> 0, "duplicate_orderkeys" -> 0,
+      "empty_documents" -> 0, "empty_tables" -> 0, "future_dates" -> 0,
+      "lob_like_columns" -> 1, "negative_balances" -> 11,
+      "orders_without_lines" -> 27, "wide_row_tables" -> 2).map { case (c, n) =>
+      f"$c%-28s $n%8d  actionRequired=${n > 0}"
+    }
+    assert(Files.readString(Paths.get(s"$out/pre_migration.out")).linesIterator
+      .filterNot(l => l.startsWith("#") || l.startsWith("gate:")).toSeq == findingLines)
     graft.cli.Main.fullExtraction(spark, sfDir, out)
     assert(Files.exists(Paths.get(s"$out/AutoUpdated_Reload.sql")))
     assert(Files.exists(Paths.get(s"$out/Foreign_Key_Constraint.sql")))
@@ -305,10 +313,19 @@ class TransferCliSpec extends SparkTestBase {
 
   test("premigration audits the extra catalog tables too") {
     def lobLike(dir: String): Long =
-      graft.premigration.Checks.findings(spark, dir).collect()
-        .find(_.getString(0) == "lob_like_columns").get.getLong(1)
+      graft.premigration.Checks.findings(graft.premigration.Checks.parquet(spark, dir))
+        .find(_.checkName == "lob_like_columns").get.findingCount
     // attachments.parquet carries one binary column the canonical tables lack
     assert(lobLike(lobDataDir()._1.toString) == lobLike(sfDir) + 1)
+  }
+
+  test("premigration audits an extra table whose file name is not a bare identifier") {
+    import graft.premigration.Checks
+    val dir = lobDataDir()._1.toString
+    Files.move(Paths.get(s"$dir/attachments.parquet"), Paths.get(s"$dir/user-files.parquet"))
+    def lobLike(d: String): Long = Checks.findings(Checks.parquet(spark, d))
+      .find(_.checkName == "lob_like_columns").get.findingCount
+    assert(lobLike(dir) == lobLike(sfDir) + 1)
   }
 
   test("resume re-extracts when the manifest names a DIFFERENT table (id remap)") {
