@@ -2,14 +2,14 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-import graft.core.{Catalog, Ctl, Engine, Tables}
+import graft.core.{Ctl, Engine}
 import graft.extract.Extract
 import graft.load.Loader
 import graft.premigration.Checks
 import graft.rewrite.{ReloadFixture, Rewriter}
+import graft.sources.{Jdbc, Source}
 
 /** CLI entry points with the reference's flag semantics (SURVEY §7.1 step 9):
   * the five phase flags are mutually exclusive with exactly one required —
@@ -53,26 +53,31 @@ object Main {
     // through the same config validation (0 = batching off, else >= 100)
     val batchGb = opt("--batchsize", "0").toInt
     val cfg = graft.core.Config.MigrationConfig("/", batchSizeGb = batchGb)
-    // --jdbc <url> switches the data plane to the live server: extraction
-    // phases inventory and read through the connection, the load phase
-    // writes back through it (the "Spark SQL + JDBC" approach end-to-end)
+    // --jdbc <url> switches the data plane to the live server: premigration
+    // and extraction list, count, size and read through the connection, the
+    // load phase writes back through it (the "Spark SQL + JDBC" approach
+    // end-to-end)
     val jdbc = opt("--jdbc", "")
     val capBytes = cfg.batchSizeGb.toLong << 30
     try phases.head match {
       case "--premigration" => premigration(spark, sfDir, out, jdbc)
       case "--onlyschema" => onlySchema(spark, out)
-      case "--onlydata" =>
-        if (jdbc.nonEmpty) onlyDataJdbc(spark, jdbc, out, capBytes)
-        else onlyData(spark, sfDir, out, capBytes)
+      case "--onlydata" => withSource(spark, sfDir, jdbc)(onlyData(spark, _, out, capBytes))
       case "--fullextraction" =>
-        if (jdbc.nonEmpty) { onlySchema(spark, out); onlyDataJdbc(spark, jdbc, out, capBytes) }
-        else fullExtraction(spark, sfDir, out, capBytes)
+        onlySchema(spark, out)
+        withSource(spark, sfDir, jdbc)(onlyData(spark, _, out, capBytes))
       case "--fullload" =>
         if (jdbc.nonEmpty) fullLoadJdbc(spark, out, jdbc) else fullLoad(spark, out)
     } finally spark.stop()
   }
 
-  def premigration(spark: org.apache.spark.sql.SparkSession,
+  /** The server a phase reads: the live one at `jdbc` when it is set, else
+    * the parquet tables of `sfDir`. */
+  private def withSource[A](spark: SparkSession, sfDir: String, jdbc: String)(
+      f: Source => A): A =
+    if (jdbc.nonEmpty) Source.live(spark, jdbc)(f) else f(Source.parquet(spark, sfDir))
+
+  def premigration(spark: SparkSession,
       sfDir: String, out: String, jdbc: String = ""): Unit = {
     // environment gates first (migration.py:316-414 runs them before any
     // phase): simplex local engine, forced write mode like the reference's
@@ -85,15 +90,14 @@ object Main {
         "readonly" -> "Off"),
       nodes = Seq.empty, connectedServer = "local",
       probeWriteSucceeds =
-        if (jdbc.nonEmpty) () => graft.sources.Jdbc.probeWrite(jdbc)
+        if (jdbc.nonEmpty) () => Jdbc.probeWrite(jdbc)
         else () => Files.isWritable(Paths.get(sfDir)),
       forceWriteMode = true).collect()
     require(gates.forall(_.getBoolean(1)), "environment gates failed")
     val gateReport = gates.map(r =>
       f"gate:${r.getString(0)}%-22s pass=${r.getBoolean(1)}  ${r.getString(2)}")
     // the audit runs where the data lives (live mode reads nothing under sfDir)
-    val findings = if (jdbc.nonEmpty) Checks.live(spark, jdbc)(Checks.findings)
-      else Checks.findings(Checks.parquet(spark, sfDir))
+    val findings = withSource(spark, sfDir, jdbc)(Checks.findings)
     val report = (gateReport ++ findings.map(f =>
       f"${f.checkName}%-28s ${f.findingCount}%8d  actionRequired=${f.actionRequired}"))
       .mkString("# graft pre-migration report\n", "\n", "\n")
@@ -103,7 +107,7 @@ object Main {
 
   /** Schema unload only (`--onlyschema y`, migration.py:237-238): rewrite
     * the reload script, splitting FK DDL out. */
-  def onlySchema(spark: org.apache.spark.sql.SparkSession, out: String): Unit = {
+  def onlySchema(spark: SparkSession, out: String): Unit = {
     val rewritten = Rewriter.rewrite(spark, ReloadFixture.lines).collect().toSeq
     val (main, fk) = Rewriter.serialize(rewritten)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -111,64 +115,26 @@ object Main {
     Ctl.write(conf, s"$out/Foreign_Key_Constraint.sql", fk)
   }
 
-  /** Both unloads (`--fullextraction y`, migration.py:241). */
-  def fullExtraction(spark: org.apache.spark.sql.SparkSession,
+  /** Both unloads (`--fullextraction y`, migration.py:241) of the parquet
+    * tables of `sfDir`. */
+  def fullExtraction(spark: SparkSession,
       sfDir: String, out: String, batchCapBytes: Long = 0L): Unit = {
     onlySchema(spark, out)
-    onlyData(spark, sfDir, out, batchCapBytes)
+    onlyData(spark, Source.parquet(spark, sfDir), out, batchCapBytes)
   }
+
+  /** Data unload against a LIVE server (`--onlydata --jdbc <url>`). */
+  def onlyDataJdbc(spark: SparkSession,
+      url: String, out: String, batchCapBytes: Long = 0L): Unit =
+    Source.live(spark, url)(onlyData(spark, _, out, batchCapBytes))
 
   /** Data unload only (`--onlydata y`, migration.py:239-240):
-    * inventory → work list → resume-aware extract. */
-  def onlyData(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, out: String, batchCapBytes: Long = 0L): Unit =
-    onlyDataFrom(spark, out, batchCapBytes,
-      Catalog.tableInventory(spark, sfDir).collect().toSeq.map(r =>
-        Extract.WorkItem(r.getString(0).split('.').last,
-          r.getLong(1), r.getLong(2), r.getInt(3))),
-      n => Tables.load(spark, sfDir, n))
+    * inventory → work list → resume-aware extract, all through `src`. */
+  def onlyData(spark: SparkSession, src: Source, out: String,
+      batchCapBytes: Long = 0L): Unit =
+    onlyDataFrom(spark, out, batchCapBytes, Extract.workList(src), src.read)
 
-  /** Data unload against a LIVE server (`--onlydata --jdbc <url>`): the
-    * inventory comes from the connection's catalog metadata (the S1 analog
-    * of the reference's SYSTABLE scan over pyodbc, migration.py:1691) and
-    * every table leaves through `spark.read.jdbc`. */
-  def onlyDataJdbc(spark: org.apache.spark.sql.SparkSession,
-      url: String, out: String, batchCapBytes: Long = 0L): Unit =
-    onlyDataFrom(spark, out, batchCapBytes, jdbcWorkItems(spark, url),
-      // range-partitioned parallel connections per table where an integral
-      // key exists — a one-connection funnel is the thing that does NOT
-      // survive a large table leaving a server
-      n => graft.sources.Jdbc.readAuto(spark, url, n,
-        numPartitions = spark.sparkContext.defaultParallelism.min(32)))
-
-  /** Live-catalog inventory: the table list from JDBC metadata and one
-    * server-side COUNT(*) per table on a plain connection — the reference's
-    * SYSTABLE-joined counts (migration.py:1699,1704) asked the same way,
-    * one row per TABLE, never data-sized. Each table is counted under the
-    * same unqualified name [[onlyDataJdbc]] extracts it by.
-    *
-    * Row widths: when the server carries a SYSCOLUMN-shaped width catalog
-    * (`widthCatalog` — columns `table_name`, `width`, one row per column,
-    * like the reference's `SYS.SYSCOLUMN` sizing at migration.py:1704-1706),
-    * per-table widths come from ONE grouped `SUM(width) GROUP BY
-    * table_name` query (`Jdbc.groupedSum`) instead of the reference's
-    * per-table filtered re-query. Tables absent from the catalog — and the
-    * default no-catalog mode — size from the JDBC relation's schema, which
-    * Spark resolves on the driver without running a job. */
-  def jdbcWorkItems(spark: org.apache.spark.sql.SparkSession,
-      url: String, widthCatalog: Option[String] = None): Seq[Extract.WorkItem] = {
-    import graft.sources.Jdbc
-    val catWidths: Map[String, Long] = widthCatalog.toSeq
-      .flatMap(Jdbc.groupedSum(url, _, "table_name", "width"))
-      .map { case (t, w) => t.toLowerCase -> w }.toMap
-    Jdbc.listTables(url).map(_.toLowerCase).sorted.zipWithIndex.map { case (n, i) =>
-      val cnt = Jdbc.count(url, n)
-      val width = catWidths.getOrElse(n, Catalog.rowWidth(Jdbc.read(spark, url, n).schema).toLong)
-      Extract.WorkItem(n, cnt, cnt * width, 2000 + i)
-    }
-  }
-
-  private[graft] def onlyDataFrom(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def onlyDataFrom(spark: SparkSession,
       out: String, batchCapBytes: Long,
       workList: Seq[Extract.WorkItem],
       loadTable: String => org.apache.spark.sql.DataFrame): Unit = {
@@ -241,23 +207,19 @@ object Main {
       (done ++ empties).mkString("", "\n", "\n"))
   }
 
-  def fullLoad(spark: org.apache.spark.sql.SparkSession, out: String): Unit =
-    fullLoadWith(spark, out, (work, failedPath, loadedOk) =>
-      Loader.loadAll(work, s"$out/warehouse", failedPath, loadedOk,
-        spark.sparkContext.hadoopConfiguration))
+  def fullLoad(spark: SparkSession, out: String): Unit =
+    fullLoadWith(spark, out,
+      w => Loader.loadVerified(w.df(), w.expected(), s"$out/warehouse/${w.name}"))
 
   /** Load back into a LIVE server (`--fullload --jdbc <url>`): same control
     * files and retry ordering, per-table loads through the JDBC
     * stage→verify→promote. */
-  def fullLoadJdbc(spark: org.apache.spark.sql.SparkSession,
-      out: String, url: String): Unit =
-    fullLoadWith(spark, out, (work, failedPath, loadedOk) =>
-      Loader.loadAllWith(work, failedPath, loadedOk,
-        w => Loader.loadVerifiedJdbc(w.df(), w.expected(), url, w.name),
-        spark.sparkContext.hadoopConfiguration))
+  def fullLoadJdbc(spark: SparkSession, out: String, url: String): Unit =
+    fullLoadWith(spark, out,
+      w => Loader.loadVerifiedJdbc(w.df(), w.expected(), url, w.name))
 
-  private def fullLoadWith(spark: org.apache.spark.sql.SparkSession, out: String,
-      runLoads: (Seq[Loader.LoadWork], String, Set[String]) => Seq[Loader.LoadResult]): Unit = {
+  private def fullLoadWith(spark: SparkSession, out: String,
+      loadOne: Loader.LoadWork => Loader.LoadResult): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     // resume reconciliation (load_schema_and_data.py:776-874): previously
     // ok-loaded tables are skipped, previously FAILED tables retry FIRST
@@ -288,7 +250,8 @@ object Main {
         () => Extract.readExtractedAuto(spark, s"$out/Extracted_Data/$tid"),
         () => cnt)
     }
-    val results = runLoads(work, s"$out/HDL_FailedTables.out", loadedOk)
+    val results = Loader.loadAllWith(work, s"$out/HDL_FailedTables.out", loadedOk,
+      loadOne, conf)
     val doneNames = results.map(_.tableName).toSet ++ empties.map(_._1)
     val keptOk = loadedOk.filterNot(doneNames).map(n => s"graft.$n,-,Y")
     Ctl.write(conf, loadedPath,

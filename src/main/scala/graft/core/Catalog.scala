@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** System-catalog mirror: SYSTABLE / SYSUSER / SYSCOLUMN-shaped DataFrames
@@ -76,23 +75,4 @@ object Catalog {
   /** Declared row width (sum of column widths) per table — computable without
     * Spark for oracle-SQL construction, given a schema lookup. */
   def rowWidth(schema: StructType): Int = schema.fields.map(f => widthOf(f.dataType)).sum
-
-  /** The reference's central inventory (`migration.py:1682-1728`):
-    * owner.table, rowcount, sizeBytes = sum(width)·count, table_id.
-    * One job per run; at 100 TB the per-table count(*) is a metadata-only
-    * parquet rowcount, so this stays cheap.
-    */
-  def tableInventory(spark: SparkSession, sfDir: String): DataFrame = {
-    val perTable = tableMetas(sfDir).map { tm =>
-      val df = Tables.load(spark, sfDir, tm.tableName)
-      val width = rowWidth(df.schema)
-      df.agg(count(lit(1)).as("row_count"))
-        .select(
-          lit(s"graft.${tm.tableName}").as("qualified_name"),
-          col("row_count"),
-          (col("row_count") * width).as("size_bytes"),
-          lit(tm.tableId).as("table_id"))
-    }
-    perTable.reduce(_.unionByName(_)).orderBy("qualified_name")
-  }
 }

@@ -259,6 +259,9 @@ object Engine {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // events.parquet `ts` in TIMESTAMP(NANOS) reads as raw longs, which
+      // Tables.load and EventStream rescale; Spark 4 rejects it otherwise
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // the bench tiers are SINGLE parquet files; without sub-file splits
       // every scan (and the partial agg riding it) is one task, which
       // serializes the map side exactly where a real cluster would fan out

@@ -27,12 +27,11 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.parquet has shipped with two encodings of `ts` across driver
     // testdata generations: TIMESTAMP(NANOS) (which Spark 4 rejects unless
-    // read as raw longs) and plain TIMESTAMP_MICROS. Handle both: enable
-    // the nanos-as-long escape hatch, then only rescale if the column
+    // read as raw longs — `Engine.session` enables that escape hatch) and
+    // plain TIMESTAMP_MICROS. Handle both: only rescale if the column
     // actually arrived as a long (integer div — exact, and the same
     // truncation DuckDB's ns→us cast applies). A TIMESTAMP_NTZ column is
     // normalized to TimestampType so downstream comparisons are stable.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(path(sfDir, name))
     if (name == "events") {
       import org.apache.spark.sql.functions._
@@ -46,9 +45,6 @@ object Tables {
       }
     } else df
   }
-
-  def loadAll(spark: SparkSession, sfDir: String): Map[String, DataFrame] =
-    names.map(n => n -> load(spark, sfDir, n)).toMap
 
   /** Register all tables as temp views so spark.sql can see them. */
   def registerViews(spark: SparkSession, sfDir: String): Unit =

@@ -8,7 +8,8 @@ import org.apache.hadoop.fs.ChecksumException
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Ctl, Json}
+import graft.core.{Catalog, Ctl, Json}
+import graft.sources.Source
 
 /** Extraction phase: planner + executors (SURVEY §2.1 S6-S11, §2.6 O3-O4,
   * §4 physical policy).
@@ -25,6 +26,16 @@ import graft.core.{Ctl, Json}
 object Extract {
 
   final case class WorkItem(name: String, rowCount: Long, sizeBytes: Long, tableId: Int)
+
+  /** The reference's central inventory (`migration.py:1682-1728`), one item
+    * per table of `src`, sorted by name: row count, declared-width size
+    * (rows × [[Catalog.rowWidth]], the `SYSCOLUMN` `sum(width)` sizing) and
+    * a table id stable for a given table list (1000 + its listing index). */
+  def workList(src: Source): Seq[WorkItem] =
+    src.tables.zipWithIndex.map { case (t, i) =>
+      val rows = src.rows(t)
+      WorkItem(t, rows, rows * Catalog.rowWidth(src.schema(t)), 1000 + i)
+    }.sortBy(_.name)
 
   sealed trait Format { def ext: String }
   case object GzipText extends Format { val ext = "gz" }
@@ -93,18 +104,18 @@ object Extract {
     * `df.count()` + write pair read every input row twice — at 100 TB that
     * doubles extraction cost. `Observation` rides the write job itself
     * (exact under task retries, unlike a bare accumulator tap) and blocks
-    * only until that job finishes. */
-  private def writeCounted(df: DataFrame, numFiles: Int)(
-      write: DataFrame => Unit): Long = {
+    * only until that job finishes. At most 8 files per table, like the
+    * reference's Temp_Extract_Name1..8 (migration.py:2382-2396): the scan's
+    * partitions are coalesced, never shuffled. */
+  private def writeCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
     val obs = org.apache.spark.sql.Observation()
-    write(df.observe(obs, count(lit(1)).as("rows")).repartition(numFiles))
+    write(df.observe(obs, count(lit(1)).as("rows")).coalesce(8))
     obs.get("rows").asInstanceOf[Long]
   }
 
   /** Binary-format extract (parquet) for tables with non-text-able columns. */
-  def extractParquet(df: DataFrame, outDir: String, numFiles: Int = 8,
-      table: String = ""): Long = {
-    val cnt = writeCounted(df, numFiles)(
+  def extractParquet(df: DataFrame, outDir: String, table: String = ""): Long = {
+    val cnt = writeCounted(df)(
       _.write.mode(SaveMode.Overwrite).parquet(outDir))
     writeManifest(outDir, cnt, "parquet",
       df.sparkSession.sparkContext.hadoopConfiguration, df.schema.toDDL,
@@ -114,11 +125,9 @@ object Extract {
 
   /** S6: gzip CSV extract of one table directory, with a JSON manifest
     * (our replacement for the reference's `extractinfo`,
-    * migration.py:1445-1458). Partition count bounds file count the way
-    * Temp_Extract_Name1..8 did (migration.py:2382-2396). */
-  def extractGzipCsv(df: DataFrame, outDir: String, numFiles: Int = 8,
-      table: String = ""): Long = {
-    val cnt = writeCounted(df, numFiles)(
+    * migration.py:1445-1458). */
+  def extractGzipCsv(df: DataFrame, outDir: String, table: String = ""): Long = {
+    val cnt = writeCounted(df)(
       _.write.mode(SaveMode.Overwrite).options(GzipCsvWriteOptions).csv(outDir))
     writeManifest(outDir, cnt, "gzip_csv",
       df.sparkSession.sparkContext.hadoopConfiguration, df.schema.toDDL,
@@ -195,8 +204,7 @@ object Extract {
     * rowid deviation) and must cast to long. The manifest's schema DDL keeps
     * the FULL schema including the LOB columns, which is what lets
     * [[readExtractedAuto]] reassemble the table without the source. */
-  def extractLob(df: DataFrame, outDir: String, tableId: Int, numFiles: Int = 8,
-      table: String = ""): Long = {
+  def extractLob(df: DataFrame, outDir: String, tableId: Int, table: String = ""): Long = {
     import org.apache.spark.sql.types.BinaryType
     val fields = df.schema.fields
     val idCol = fields.head.name
@@ -215,7 +223,7 @@ object Extract {
         s"'$idCol' has ${ids.getLong(0)} rows, ${ids.getLong(1)} usable ids, " +
         s"${ids.getLong(2)} distinct")
     val scalar = df.select(fields.filter(_.dataType != BinaryType).map(f => col(f.name)).toSeq: _*)
-    val cnt = writeCounted(scalar, numFiles)(
+    val cnt = writeCounted(scalar)(
       _.write.mode(SaveMode.Overwrite).options(GzipCsvWriteOptions).csv(outDir))
     val lobCounts = fields.zipWithIndex.collect {
       case (f, i) if f.dataType == BinaryType =>

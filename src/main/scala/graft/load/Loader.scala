@@ -139,18 +139,10 @@ object Loader {
     * persisted failed set, partitions the work list into (retry, fresh),
     * runs retries first, skips tables already loaded ok, and rewrites the
     * failed set from this run's outcomes. Returns results in execution
-    * order so the ordering contract is testable. */
-  def loadAll(work: Seq[LoadWork], warehouseDir: String,
-      failedListPath: String, loadedOk: Set[String] = Set.empty,
-      conf: org.apache.hadoop.conf.Configuration =
-        new org.apache.hadoop.conf.Configuration()): Seq[LoadResult] =
-    loadAllWith(work, failedListPath, loadedOk,
-      w => loadVerified(w.df(), w.expected(), s"$warehouseDir/${w.name}"), conf)
-
-  /** [[loadAll]]'s ordering/retry contract with a pluggable per-table
-    * loader — the parquet warehouse and the live JDBC sink share it. The
-    * failed-list control file rides its path's Hadoop FileSystem like every
-    * other control file. */
+    * order so the ordering contract is testable. `loadOne` loads one table
+    * — the parquet warehouse ([[loadVerified]]) and the live JDBC sink
+    * ([[loadVerifiedJdbc]]) share the contract. The failed-list control file
+    * rides its path's Hadoop FileSystem like every other control file. */
   def loadAllWith(work: Seq[LoadWork], failedListPath: String,
       loadedOk: Set[String], loadOne: LoadWork => LoadResult,
       conf: org.apache.hadoop.conf.Configuration =

@@ -1,57 +1,18 @@
 package graft.premigration
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.{ArrayType, BinaryType, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType}
 
-import graft.core.{Catalog, Tables}
-import graft.sources.Jdbc
+import graft.core.Catalog
+import graft.sources.Source
 
 /** Pre-migration audit (SURVEY §3.1): feature checks, each a scalar
   * finding count — the reference sends each check to the source server as
   * one SQL query (`Pre_Migration/pre_migration.py:96-757`,
   * dispatched at `:856-905`). Each check is stated once: a data check is one
-  * portable `SELECT COUNT(*)` text that either executor runs unchanged
-  * ([[parquet]] or [[live]]); the catalog checks read the resolved schemas.
+  * portable `SELECT COUNT(*)` text that either [[Source]] executor runs
+  * unchanged; the catalog checks read the resolved schemas and row counts.
   */
 object Checks {
-
-  /** The server under audit: its tables, their schemas, one-number queries
-    * and its identifier quote. */
-  abstract class Source(quoteString: String) {
-    def tables: Seq[String]
-    def schema(table: String): StructType
-    def count(sql: String): Long
-    def quote(id: String): String = quoteString + id.replace(quoteString, quoteString * 2) + quoteString
-    lazy val schemas: Seq[StructType] = tables.map(schema)
-  }
-
-  /** Parquet executor: every catalog table of `dir` (the canonical tables
-    * and any extra `<name>.parquet`) as a temp view of a forked session, so
-    * no view leaks into the caller's session. */
-  def parquet(spark: SparkSession, dir: String): Source = {
-    val session = spark.newSession()
-    val names = Catalog.tableMetas(dir).map(_.tableName)
-    new Source("`") {
-      // quoted: an extra file's name need not be a bare identifier
-      names.foreach(n => Tables.load(session, dir, n).createOrReplaceTempView(quote(n)))
-      def tables = names
-      def schema(table: String) = session.table(quote(table)).schema
-      def count(sql: String) = session.sql(sql).head().getLong(0)
-    }
-  }
-
-  /** Live executor: `f` audits the server at `url` over one connection.
-    * Schemas come from the JDBC relation, which Spark resolves on the driver
-    * without a job, so the audit starts no Spark job. */
-  def live[A](spark: SparkSession, url: String)(f: Source => A): A =
-    Jdbc.withConnection(url) { conn =>
-      // JDBC reports " " when the server does not quote identifiers
-      f(new Source(conn.getMetaData.getIdentifierQuoteString.trim) {
-        val tables = Jdbc.listTables(conn)
-        def schema(table: String) = Jdbc.read(spark, url, quote(table)).schema
-        def count(sql: String) = Jdbc.query(conn, sql) { rs => rs.next(); rs.getLong(1) }
-      })
-    }
 
   final case class Check(name: String, description: String, count: Source => Long)
 
@@ -74,7 +35,7 @@ object Checks {
     sql("empty_documents", "documents with no text")(q =>
       s"SELECT COUNT(*) FROM documents WHERE LENGTH(${q("text")}) = 0"),
     Check("empty_tables", "tables with zero rows (extraction short-circuit)",
-      src => src.tables.count(t => src.count(s"SELECT COUNT(*) FROM ${src.quote(t)}") == 0).toLong),
+      src => src.tables.count(src.rows(_) == 0).toLong),
     Check("wide_row_tables", "tables whose declared row width exceeds 128 bytes",
       src => src.schemas.count(Catalog.rowWidth(_) > 128).toLong),
     Check("lob_like_columns", "columns needing the LOB extract path (binary/array)",

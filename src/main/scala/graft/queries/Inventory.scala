@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.core.{Catalog, QueryDef, Tables}
+import graft.extract.Extract
+import graft.sources.Source
 
 /** The reference's inventory/audit surface (SURVEY §2.1 S1-S3, §2.4 A1-A3,
   * §7.3 minimum slice) over the driver's tables.
@@ -47,7 +49,11 @@ object Inventory {
         s"""SELECT 'graft.$n' AS qualified_name, count(*) AS row_count,
            | count(*) * $w AS size_bytes, ${tableIds(n)} AS table_id FROM $n""".stripMargin
       }.mkString("", " UNION ALL ", " ORDER BY qualified_name")) { (s, dir) =>
-      Catalog.tableInventory(s, dir)
+      import s.implicits._
+      Extract.workList(Source.parquet(s, dir))
+        .map(w => (s"graft.${w.name}", w.rowCount, w.sizeBytes, w.tableId))
+        .toDF("qualified_name", "row_count", "size_bytes", "table_id")
+        .orderBy("qualified_name")
     },
 
     // S3 TVF-style row source: sp_iqdbspace() analog — a computed DataFrame

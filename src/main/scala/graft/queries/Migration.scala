@@ -9,6 +9,7 @@ import graft.functions.Portable.{dsum, sqlDsum}
 import graft.load.Loader
 import graft.premigration.Checks
 import graft.rewrite.{ReloadFixture, Rewriter}
+import graft.sources.Source
 
 /** Migration-phase operators as verifiable queries: statement segmentation
   * (C1), the rewriter cascade (C2-C6), extract sink/source round-trip
@@ -314,7 +315,7 @@ object Migration {
       val li = Tables.load(s, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
       val out = java.nio.file.Files.createTempDirectory("graft_extract").toString
-      Extract.extractGzipCsv(li, out, numFiles = 8)
+      Extract.extractGzipCsv(li, out)
       val schema = StructType(Seq(
         StructField("l_orderkey", LongType), StructField("l_linenumber", IntegerType),
         StructField("l_quantity", DoubleType), StructField("l_returnflag", StringType)))
@@ -333,7 +334,7 @@ object Migration {
         |FROM events""".stripMargin) { (s, dir) =>
       val ev = Tables.load(s, dir, "events").select("event_id", "value")
       val out = java.nio.file.Files.createTempDirectory("graft_x2").toString + "/events"
-      val observed = Extract.extractParquet(ev, out, numFiles = 4)
+      val observed = Extract.extractParquet(ev, out)
       s.read.parquet(out)
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(18, 4))).cast("double").as("sum_value"))
@@ -522,7 +523,7 @@ object Migration {
           row("wide_row_tables", s"SELECT $wideCnt")
         ).map(r => "(" + r + ")").mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY check_name")
       }) { (s, dir) =>
-      s.createDataFrame(Checks.findings(Checks.parquet(s, dir)))
+      s.createDataFrame(Checks.findings(Source.parquet(s, dir)))
         .toDF("check_name", "finding_count", "action_required")
     }
   )

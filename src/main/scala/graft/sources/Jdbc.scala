@@ -21,8 +21,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * how a 100 TB table actually leaves a server. Predicates/column pruning
   * push into the remote query (JDBCRelation builds WHERE/SELECT lists).
   *
-  * Catalog-sized questions (counts, key bounds, grouped width sums, table
-  * listing, DDL) are not Spark jobs: each one is a plain query on one
+  * Catalog-sized questions (counts, key bounds, table listing, DDL) are
+  * not Spark jobs: each one is a plain query on one
   * driver-side connection ([[query]]), the way the reference asks its
   * servers over a pyodbc cursor (`migration.py:1699,1704-1706`,
   * `load_table.sh:36-87`).
@@ -334,19 +334,6 @@ object Jdbc {
     }
     buf.toSeq
   }
-
-  /** Server-side `SELECT g, SUM(s) … GROUP BY g`, one row per group — the
-    * reference's SYSCOLUMN sizing (`migration.py:1704-1706`, `sum(width) …
-    * where table_id=…`) asked once for every table instead of once per
-    * table. The group key must be comparable on the server (a bounded
-    * VARCHAR, not a LOB). */
-  def groupedSum(url: String, table: String, groupCol: String,
-      sumCol: String): Seq[(String, Long)] =
-    query(url, s"""SELECT "$groupCol", SUM("$sumCol") FROM $table GROUP BY "$groupCol"""") { rs =>
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      while (rs.next()) buf += (rs.getString(1) -> rs.getLong(2))
-      buf.toSeq
-    }
 
   /** Dialect-aware table rename (the promote step's swap): Derby and
     * MySQL/MariaDB speak `RENAME TABLE a TO b`; everything else gets the

@@ -36,7 +36,6 @@ object EventStream {
     * encoding-agnostic. */
   def readStream(spark: SparkSession, sfDir: String,
                  glob: String = "events.parquet"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType =
       spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType
     normalizeTs(streamReader(spark, tsType)
@@ -79,7 +78,6 @@ object EventStream {
   def timeOrderedFeed(spark: SparkSession, sfDir: String, feedDir: String,
       chunks: Int): String = {
     import org.apache.hadoop.fs.Path
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     raw.repartitionByRange(chunks, col("ts"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(feedDir)
@@ -102,7 +100,6 @@ object EventStream {
     * source's default order), so the watermark advances and evicts state
     * between chunks exactly as it would on a live file feed. */
   def readFeedStream(spark: SparkSession, feedDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = spark.read.parquet(feedDir).schema("ts").dataType
     normalizeTs(streamReader(spark, tsType)
       .option("maxFilesPerTrigger", "1")

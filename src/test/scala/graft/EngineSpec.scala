@@ -16,10 +16,10 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("table inventory lists every table with positive size") {
-    val inv = Catalog.tableInventory(spark, sfDir).collect()
+    val inv = graft.extract.Extract.workList(graft.sources.Source.parquet(spark, sfDir))
     assert(inv.length == Tables.names.length)
-    assert(inv.forall(_.getLong(1) > 0))
-    assert(inv.forall(r => r.getLong(2) > r.getLong(1))) // bytes > rows
+    assert(inv.forall(_.rowCount > 0))
+    assert(inv.forall(w => w.sizeBytes > w.rowCount)) // bytes > rows
   }
 
   test("load verify promotes on match and rolls back on mismatch") {
@@ -63,7 +63,7 @@ class EngineSpec extends SparkTestBase {
   test("extract manifest carries the completeness sentinel (S11/O5)") {
     val out = java.nio.file.Files.createTempDirectory("graft_manifest").toString
     val n = graft.extract.Extract.extractGzipCsv(
-      Tables.load(spark, sfDir, "nation"), out, numFiles = 2)
+      Tables.load(spark, sfDir, "nation"), out)
     val m = graft.extract.Extract.readManifest(spark.sparkContext.hadoopConfiguration, out).get
     assert(m.complete)
     assert(m.rows == n)
@@ -71,6 +71,13 @@ class EngineSpec extends SparkTestBase {
     // manifest is invisible to the data reader (underscore-prefixed)
     val back = spark.read.option("header", "true").csv(out)
     assert(back.count() == n)
+  }
+
+  test("extract writes a one-partition table as one file, without a shuffle") {
+    val out = java.nio.file.Files.createTempDirectory("graft_one_file").toString + "/nation"
+    graft.extract.Extract.extractGzipCsv(Tables.load(spark, sfDir, "nation"), out)
+    val parts = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("part-"))
+    assert(parts.length == 1, parts.mkString(", "))
   }
 
   test("extract manifest round-trips a table name with a quote, a backslash and a tab") {
@@ -98,12 +105,14 @@ class EngineSpec extends SparkTestBase {
   test("Engine.session is the only SparkSession builder in the program sources") {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root))
-    val builders = scala.jdk.CollectionConverters.IteratorHasAsScala(
+    def sitesOf(text: String): Seq[String] = scala.jdk.CollectionConverters.IteratorHasAsScala(
       java.nio.file.Files.walk(root).iterator()).asScala
       .filter(p => p.toString.endsWith(".scala") &&
-        java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+        java.nio.file.Files.readString(p).contains(text))
       .map(p => root.relativize(p).toString).toSeq
-    assert(builders == Seq("graft/core/Engine.scala"))
+    assert(sitesOf("SparkSession.builder") == Seq("graft/core/Engine.scala"))
+    // session policy lives in the builder, not in per-call conf writes
+    assert(sitesOf("spark.sql.legacy.parquet.nanosAsLong") == Seq("graft/core/Engine.scala"))
   }
 
   test("identity assignment is dense, unique, and order-stable") {

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.sources.Jdbc
+import graft.extract.Extract
+import graft.sources.{Jdbc, Source}
 
 /** S1/S16 live mode against embedded Derby (no server in the sandbox). */
 class JdbcSpec extends SparkTestBase {
@@ -265,43 +266,12 @@ class JdbcSpec extends SparkTestBase {
     assert(Jdbc.count(url, "region_inv") == region.count())
     // the full inventory path: current-schema listing + server count +
     // width from the JDBC relation's schema
-    val items = graft.cli.Main.jdbcWorkItems(spark, url)
+    val items = Source.live(spark, url)(Extract.workList)
     val inv = items.find(_.name == "region_inv").get
     assert(inv.rowCount == region.count())
     assert(inv.sizeBytes == inv.rowCount *
       graft.core.Catalog.rowWidth(Jdbc.read(spark, url, "region_inv").schema))
     assert(inv.sizeBytes > 0)
-  }
-
-  test("live inventory sizes through one pushed grouped SUM(width)") {
-    import spark.implicits._
-    // a SYSCOLUMN-shaped width catalog on the server: one row per column,
-    // keyed by table name (the reference's migration.py:1704-1706 shape)
-    val region = Tables.load(spark, sfDir, "region")
-    Jdbc.write(region.select("r_regionkey", "r_name"), url, "width_inv")
-    // explicit VARCHAR DDL: the writer's default maps StringType to CLOB,
-    // which Derby cannot GROUP BY; a real server's column catalog keys on
-    // bounded identifiers anyway
-    Jdbc.execute(url,
-      """CREATE TABLE graft_syscol ("table_name" VARCHAR(128), "width" INT)""")
-    Jdbc.write(
-      Seq(("width_inv", 4), ("width_inv", 32), ("other_t", 100))
-        .toDF("table_name", "width"),
-      url, "graft_syscol", SaveMode.Append)
-    // one grouped SUM(width) on the server for the whole width inventory,
-    // not a per-table re-query
-    assert(Jdbc.groupedSum(url, "graft_syscol", "table_name", "width")
-      .toMap == Map("width_inv" -> 36L, "other_t" -> 100L))
-    // the CLI inventory path rides it: catalog width for listed tables,
-    // schema-derived width for tables the catalog doesn't cover
-    val items = graft.cli.Main.jdbcWorkItems(spark, url,
-      widthCatalog = Some("APP.GRAFT_SYSCOL"))
-    val wi = items.find(_.name == "width_inv").get
-    assert(wi.rowCount == region.count())
-    assert(wi.sizeBytes == wi.rowCount * 36L)
-    val self = items.find(_.name == "graft_syscol").get
-    assert(self.sizeBytes == self.rowCount *
-      graft.core.Catalog.rowWidth(Jdbc.read(spark, url, "graft_syscol").schema))
   }
 
   /** Spark jobs `f` starts on this thread, counted through a job group. */
@@ -325,12 +295,11 @@ class JdbcSpec extends SparkTestBase {
       """CREATE TABLE graft_syscol ("table_name" VARCHAR(128), "width" INT)""")
     Jdbc.write(Seq(("nation", 40)).toDF("table_name", "width"), liveUrl,
       "graft_syscol", SaveMode.Append)
-    // inventory (with and without the width catalog) and readAuto's bounds,
+    // the live inventory (listing, counts, schemas) and readAuto's bounds,
     // string bounds and predicate-coverage counts: all on the connection
     var intRead, strRead: org.apache.spark.sql.DataFrame = null
     assert(jobsOf {
-      graft.cli.Main.jdbcWorkItems(spark, liveUrl)
-      graft.cli.Main.jdbcWorkItems(spark, liveUrl, widthCatalog = Some("graft_syscol"))
+      Source.live(spark, liveUrl)(Extract.workList)
       intRead = Jdbc.readAuto(spark, liveUrl, "nation", numPartitions = 4)
       strRead = Jdbc.readAuto(spark, liveUrl, "str_keyed", numPartitions = 3)
     } == 0)
@@ -371,15 +340,15 @@ class JdbcSpec extends SparkTestBase {
     assert(report.linesIterator.contains(
       f"${"duplicate_orderkeys"}%-28s ${1}%8d  actionRequired=true"), report)
     var live: Seq[Checks.Finding] = Nil
-    assert(jobsOf { live = Checks.live(spark, liveUrl)(Checks.findings) } == 0)
+    assert(jobsOf { live = Source.live(spark, liveUrl)(Checks.findings) } == 0)
     assert(live.find(_.checkName == "duplicate_orderkeys").get.findingCount == 1)
   }
 
   test("live and parquet audits agree on the same tables") {
     import graft.premigration.Checks
     val liveUrl = scalarServer("graft_jdbc_parity")
-    val live = Checks.live(spark, liveUrl)(Checks.findings)
-    val parquet = Checks.findings(Checks.parquet(spark, sfDir))
+    val live = Source.live(spark, liveUrl)(Checks.findings)
+    val parquet = Checks.findings(Source.parquet(spark, sfDir))
     // wide_row_tables and lob_like_columns read the schemas, and Derby's
     // differ: it holds no `embeddings` (no array type), so the server has
     // one table and one array column fewer than the parquet directory
@@ -387,5 +356,14 @@ class JdbcSpec extends SparkTestBase {
     assert(live.filterNot(f => schemaChecks(f.checkName)) ==
       parquet.filterNot(f => schemaChecks(f.checkName)))
     assert(live.size == Checks.all.size && parquet.size == Checks.all.size)
+  }
+
+  test("live and parquet sources give the same work list, and the live listing starts no Spark job") {
+    val liveUrl = scalarServer("graft_jdbc_worklist")
+    var live: Seq[Extract.WorkItem] = Nil
+    assert(jobsOf { live = Source.live(spark, liveUrl)(Extract.workList) } == 0)
+    val parquet = Extract.workList(Source.parquet(spark, sfDir)).filterNot(_.name == "embeddings")
+    assert(live.map(w => (w.name, w.rowCount)) == parquet.map(w => (w.name, w.rowCount)))
+    assert(live.map(_.tableId) == (1000 until 1000 + live.size))
   }
 }

@@ -79,7 +79,7 @@ class PlannerSpec extends SparkTestBase {
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = java.nio.file.Files.createTempDirectory("graft_onescan").toString + "/x"
-      val n = Extract.extractGzipCsv(df, out, numFiles = 2)
+      val n = Extract.extractGzipCsv(df, out)
       assert(n == 25)
       // listener bus is async — wait for it to drain
       val deadline = System.nanoTime() + 10e9.toLong

@@ -240,8 +240,8 @@ class TransferCliSpec extends SparkTestBase {
   test("batch mode writes per-batch lists and spills oversize tables to no_extraction.list") {
     import scala.jdk.CollectionConverters._
     val out = Files.createTempDirectory("graft_batch").toString
-    val sizes = graft.core.Catalog.tableInventory(spark, sfDir).collect()
-      .map(r => r.getString(0) -> r.getLong(2)).toMap
+    val sizes = graft.extract.Extract.workList(graft.sources.Source.parquet(spark, sfDir))
+      .map(w => s"graft.${w.name}" -> w.sizeBytes).toMap
     val (bigName, bigSize) = sizes.maxBy(_._2)
     graft.cli.Main.fullExtraction(spark, sfDir, out, batchCapBytes = bigSize - 1)
     val listed = Files.readAllLines(Paths.get(s"$out/iq_tables.list")).asScala
@@ -313,7 +313,7 @@ class TransferCliSpec extends SparkTestBase {
 
   test("premigration audits the extra catalog tables too") {
     def lobLike(dir: String): Long =
-      graft.premigration.Checks.findings(graft.premigration.Checks.parquet(spark, dir))
+      graft.premigration.Checks.findings(graft.sources.Source.parquet(spark, dir))
         .find(_.checkName == "lob_like_columns").get.findingCount
     // attachments.parquet carries one binary column the canonical tables lack
     assert(lobLike(lobDataDir()._1.toString) == lobLike(sfDir) + 1)
@@ -323,7 +323,7 @@ class TransferCliSpec extends SparkTestBase {
     import graft.premigration.Checks
     val dir = lobDataDir()._1.toString
     Files.move(Paths.get(s"$dir/attachments.parquet"), Paths.get(s"$dir/user-files.parquet"))
-    def lobLike(d: String): Long = Checks.findings(Checks.parquet(spark, d))
+    def lobLike(d: String): Long = Checks.findings(graft.sources.Source.parquet(spark, d))
       .find(_.checkName == "lob_like_columns").get.findingCount
     assert(lobLike(dir) == lobLike(sfDir) + 1)
   }
@@ -493,7 +493,7 @@ class TransferCliSpec extends SparkTestBase {
     assert(!Files.exists(Paths.get(s"$so/ExtractedTables.out")))
 
     val dd = Files.createTempDirectory("graft_onlydata").toString
-    graft.cli.Main.onlyData(spark, sfDir, dd)
+    graft.cli.Main.onlyData(spark, graft.sources.Source.parquet(spark, sfDir), dd)
     assert(!Files.exists(Paths.get(s"$dd/AutoUpdated_Reload.sql")),
       "--onlydata must not run the schema unload")
     assert(Files.exists(Paths.get(s"$dd/iq_tables.list")))
@@ -518,12 +518,13 @@ class TransferCliSpec extends SparkTestBase {
         })
     }
     // run 1: region fails verification → recorded in the failed set
-    val r1 = Loader.loadAll(work(badExpected = true), s"$base/wh", failedList)
+    def load(w: Loader.LoadWork) = Loader.loadVerified(w.df(), w.expected(), s"$base/wh/${w.name}")
+    val r1 = Loader.loadAllWith(work(badExpected = true), failedList, Set.empty, load)
     assert(r1.count(_.ok) == 2 && !r1.find(_.tableName == "region").get.ok)
     assert(Files.readString(Paths.get(failedList)).trim == "region")
     // run 2: region must be retried BEFORE fresh work, then succeed
     val okNames = r1.filter(_.ok).map(_.tableName).toSet
-    val r2 = Loader.loadAll(work(badExpected = false), s"$base/wh", failedList, okNames)
+    val r2 = Loader.loadAllWith(work(badExpected = false), failedList, okNames, load)
     assert(r2.head.tableName == "region", s"failed table not retried first: $r2")
     assert(r2.forall(_.ok) && r2.map(_.tableName) == Seq("region"))
     assert(Files.readString(Paths.get(failedList)).trim.isEmpty)
