@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{Ctl, Engine}
+import graft.core.{Ctl, Engine, Workers}
 import graft.extract.Extract
 import graft.load.Loader
 import graft.premigration.Checks
@@ -42,7 +42,13 @@ object Main {
     val sfDir = opt("--sfdir", "/root/testdata/sf0.001")
     val out = opt("--out", Files.createTempDirectory("graft_run").toString)
 
-    val spark = Engine.session("graft-cli")
+    // --jdbc <url> switches the data plane to the live server: premigration
+    // and extraction list, count, size and read through the connection, the
+    // load phase writes back through it (the "Spark SQL + JDBC" approach
+    // end-to-end)
+    val jdbc = opt("--jdbc", "")
+    // shuffle width, codec and staging policy follow the parquet tier read
+    val spark = Engine.session("graft-cli", dataDir = if (jdbc.isEmpty) Some(sfDir) else None)
     spark.sparkContext.setLogLevel("WARN")
     // the out dir is created through the SESSION's Hadoop configuration so
     // spark.hadoop.* settings (object-store credentials and the like) apply
@@ -53,11 +59,6 @@ object Main {
     // through the same config validation (0 = batching off, else >= 100)
     val batchGb = opt("--batchsize", "0").toInt
     val cfg = graft.core.Config.MigrationConfig("/", batchSizeGb = batchGb)
-    // --jdbc <url> switches the data plane to the live server: premigration
-    // and extraction list, count, size and read through the connection, the
-    // load phase writes back through it (the "Spark SQL + JDBC" approach
-    // end-to-end)
-    val jdbc = opt("--jdbc", "")
     val capBytes = cfg.batchSizeGb.toLong << 30
     try phases.head match {
       case "--premigration" => premigration(spark, sfDir, out, jdbc)
@@ -170,42 +171,57 @@ object Main {
           "batch partition lost tables (batches + no_extraction != iq_tables)")
         batches.flatten
       } else workList
-    val done = toExtract.filter(_.rowCount > 0).map { w =>
-      val dir = s"$out/Extracted_Data/${w.tableId}"
-      // resume (migration.py:1940-2002): a complete manifest means this
-      // table's extract already finished — skip it, idempotently, without
-      // resolving the table at all. The rows carried into
-      // ExtractedTables.out come from the MANIFEST (what was
-      // actually written), never from the current inventory count: a resumed
-      // run re-recording the source count would let the load verify compare
-      // source-to-source and mask an extract-phase loss. The manifest must
-      // also NAME this table: extract dirs are keyed by positional table id,
-      // so a changed table set between runs remaps ids — a name mismatch
-      // (or a legacy manifest with no name) re-extracts instead of silently
-      // attributing another table's artifacts and count to this one.
-      // A missing, truncated or unparseable manifest re-extracts too.
-      val recorded: Option[Long] = Extract.readManifest(conf, dir)
-        .filter(m => m.complete && m.table.contains(w.name)).map(_.rows)
-      val rows = recorded.getOrElse {
-        val df = loadTable(w.name)
-        // format planner (migration.py:2115-2208): LOB-bearing tables are
-        // FORCED onto the per-row-file path (scalar CSV + one file per LOB
-        // cell); other CSV-incompatible columns (arrays/structs) → parquet;
-        // plain scalar tables → gzip text
-        if (df.schema.fields.exists(_.dataType == org.apache.spark.sql.types.BinaryType))
-          Extract.extractLob(df, dir, w.tableId, table = w.name)
-        else Extract.formatFor(df.schema) match {
-          case Extract.Binary => Extract.extractParquet(df, dir, table = w.name)
-          case _ => Extract.extractGzipCsv(df, dir, table = w.name)
-        }
-      }
-      s"graft.${w.name},${w.tableId},$rows"
+    // keyed on the whole work list: batch-mode spills keep their extracts
+    Extract.dropStale(conf, s"$out/Extracted_Data", workList.map(_.tableId).toSet)
+    def dirOf(w: Extract.WorkItem) = s"$out/Extracted_Data/${w.tableId}"
+    val live = toExtract.filter(_.rowCount > 0)
+    // resume (migration.py:1940-2002): a complete manifest means this
+    // table's extract already finished — skip it, idempotently, without
+    // resolving the table at all. The rows carried into
+    // ExtractedTables.out come from the MANIFEST (what was
+    // actually written), never from the current inventory count: a resumed
+    // run re-recording the source count would let the load verify compare
+    // source-to-source and mask an extract-phase loss. The manifest must
+    // also NAME this table: extract dirs are keyed by positional table id,
+    // so a changed table set between runs remaps ids — a name mismatch
+    // (or a legacy manifest with no name) re-extracts instead of silently
+    // attributing another table's artifacts and count to this one.
+    // A missing, truncated or unparseable manifest re-extracts too.
+    val recorded: Map[String, Long] = live.flatMap(w => Extract.readManifest(conf, dirOf(w))
+      .filter(m => m.complete && m.table.contains(w.name)).map(w.name -> _.rows)).toMap
+    // the rest extract concurrently, largest first (the reference's LPT
+    // plan, migration.py:1656-1677), so a large table does not start last
+    val pending = Extract.lptOrder(live.filterNot(w => recorded.contains(w.name)))
+    val outcomes = Workers.forTables(spark.sparkContext, pending,
+        (w: Extract.WorkItem) => s"extract graft.${w.name}") { w =>
+      extractTable(loadTable(w.name), w, dirOf(w))
+    }
+    val extracted = pending.map(_.name).zip(outcomes).toMap
+    // a table that failed leaves the others' manifests behind for a resume;
+    // the error reported is the first in work-list order, as a serial run's
+    Workers.firstFailure(live.flatMap(w => extracted.get(w.name))).foreach(e => throw e)
+    val done = live.map { w =>
+      s"graft.${w.name},${w.tableId},${recorded.getOrElse(w.name, extracted(w.name).get)}"
     }
     val empties = toExtract.filter(_.rowCount == 0)
       .map(w => s"graft.${w.name},${w.tableId},0")
     Ctl.write(conf, s"$out/ExtractedTables.out",
       (done ++ empties).mkString("", "\n", "\n"))
   }
+
+  /** Extract one table into `dir`, returning the rows written. Format
+    * planner (migration.py:2115-2208): LOB-bearing tables are FORCED onto
+    * the per-row-file path (scalar CSV + one file per LOB cell); other
+    * CSV-incompatible columns (arrays/structs) → parquet; plain scalar
+    * tables → gzip text. */
+  private def extractTable(df: org.apache.spark.sql.DataFrame, w: Extract.WorkItem,
+      dir: String): Long =
+    if (df.schema.fields.exists(_.dataType == org.apache.spark.sql.types.BinaryType))
+      Extract.extractLob(df, dir, w.tableId, table = w.name)
+    else Extract.formatFor(df.schema) match {
+      case Extract.Binary => Extract.extractParquet(df, dir, table = w.name)
+      case _ => Extract.extractGzipCsv(df, dir, table = w.name)
+    }
 
   def fullLoad(spark: SparkSession, out: String): Unit =
     fullLoadWith(spark, out,
@@ -250,8 +266,8 @@ object Main {
         () => Extract.readExtractedAuto(spark, s"$out/Extracted_Data/$tid"),
         () => cnt)
     }
-    val results = Loader.loadAllWith(work, s"$out/HDL_FailedTables.out", loadedOk,
-      loadOne, conf)
+    val results = Loader.loadAllWith(spark.sparkContext, work, s"$out/HDL_FailedTables.out",
+      loadedOk, loadOne, conf)
     val doneNames = results.map(_.tableName).toSet ++ empties.map(_._1)
     val keptOk = loadedOk.filterNot(doneNames).map(n => s"graft.$n,-,Y")
     Ctl.write(conf, loadedPath,

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -24,7 +25,15 @@ object Tables {
 
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  /** Table `name` of `sfDir`, with the schema its parquet footers declare
+    * (no schema-inference job). */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    read(spark, sfDir, name, Footers.read(spark, path(sfDir, name)).map(_.schema))
+
+  /** Table `name` of `sfDir` read with `schema`; `None` lets Spark infer it
+    * (a layout [[Footers.read]] leaves to Spark's listing). */
+  def read(spark: SparkSession, sfDir: String, name: String,
+      schema: Option[StructType]): DataFrame = {
     // events.parquet has shipped with two encodings of `ts` across driver
     // testdata generations: TIMESTAMP(NANOS) (which Spark 4 rejects unless
     // read as raw longs — `Engine.session` enables that escape hatch) and
@@ -32,7 +41,7 @@ object Tables {
     // actually arrived as a long (integer div — exact, and the same
     // truncation DuckDB's ns→us cast applies). A TIMESTAMP_NTZ column is
     // normalized to TimestampType so downstream comparisons are stable.
-    val df = spark.read.parquet(path(sfDir, name))
+    val df = schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path(sfDir, name))
     if (name == "events") {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.types._

@@ -42,10 +42,13 @@ object Extract {
   case object Binary extends Format { val ext = "parquet" }
   case object PlainText extends Format { val ext = "txt" }
 
+  /** Longest processing time first: size descending, ties by name. */
+  def lptOrder(items: Seq[WorkItem]): Seq[WorkItem] = items.sortBy(i => (-i.sizeBytes, i.name))
+
   /** LPT (longest-processing-time) greedy assignment over `n` nodes:
-    * sort descending, repeatedly give the next table to the least-loaded
-    * node (migration.py:1656-1677's heapq). Deterministic: ties broken by
-    * node index. */
+    * take tables in [[lptOrder]], repeatedly give the next one to the
+    * least-loaded node (migration.py:1656-1677's heapq). Deterministic: ties
+    * broken by node index. */
   def lptAssign(items: Seq[WorkItem], n: Int): Map[String, Int] = {
     require(n > 0)
     // dequeue must yield the LEAST-loaded node: PriorityQueue pops the max
@@ -53,7 +56,7 @@ object Extract {
     val heap = scala.collection.mutable.PriorityQueue
       .empty[(Long, Int)](Ordering.by[(Long, Int), (Long, Int)](identity).reverse)
     (0 until n).foreach(i => heap.enqueue((0L, i)))
-    items.sortBy(i => (-i.sizeBytes, i.name)).map { it =>
+    lptOrder(items).map { it =>
       val (load, node) = heap.dequeue()
       heap.enqueue((load + it.sizeBytes, node))
       it.name -> node
@@ -163,6 +166,29 @@ object Extract {
 
   private def manifestPath(outDir: String): String = outDir + ".manifest.json"
 
+  /** The sibling dir holding LOB column `colId`'s cells, one file each. */
+  private def lobDir(outDir: String, colId: Int): String = s"$outDir.lob$colId"
+
+  /** An entry of an extract root and the table id it belongs to: the
+    * table's dir `<id>`, its [[manifestPath]], its [[lobDir]]s, and the
+    * Hadoop checksum sibling (`.<name>.crc`) of each. */
+  private val RootEntry = """\.?(\d+)(?:\.manifest\.json|\.lob\d+)?(?:\.crc)?""".r
+
+  /** Delete every entry of the extract root `root` that belongs to a table
+    * id not in `ids`. A changed table list or id rule leaves such extracts
+    * behind, and a transfer of the root would upload them with the rest.
+    * Entries that follow no part of the extract layout are kept. */
+  def dropStale(conf: Configuration, root: String, ids: Set[Int]): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(root)
+    val fs = dir.getFileSystem(conf)
+    if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath).foreach { p =>
+      p.getName match {
+        case RootEntry(id) if !ids.contains(id.toInt) => fs.delete(p, true)
+        case _ =>
+      }
+    }
+  }
+
   /** Write `outDir`'s manifest. Listing and write go through the path's
     * Hadoop FileSystem so the manifest lands beside extracts on
     * hdfs:///object-store dirs, not just file://. The manifest is a sibling
@@ -227,7 +253,7 @@ object Extract {
       _.write.mode(SaveMode.Overwrite).options(GzipCsvWriteOptions).csv(outDir))
     val lobCounts = fields.zipWithIndex.collect {
       case (f, i) if f.dataType == BinaryType =>
-        (i + 1) -> LobSink.writePerRow(df, idCol, f.name, s"$outDir.lob${i + 1}",
+        (i + 1) -> LobSink.writePerRow(df, idCol, f.name, lobDir(outDir, i + 1),
           tableId, colId = i + 1)
     }.toMap
     writeManifest(outDir, cnt, "lob_csv",
@@ -263,20 +289,20 @@ object Extract {
         val full = schema.fields.zipWithIndex
           .collect { case (f, i) if f.dataType == BinaryType => (f, i + 1) }
           .foldLeft(scalar) { case (acc, (f, colId)) =>
-            val lobDir = s"$dir.lob$colId"
+            val lobPath = lobDir(dir, colId)
             // LOB-plane completeness: the manifest's per-column file census
             // must match what's on disk — a lost LOB file would otherwise
             // read back as a silent NULL cell under a still-green scalar row
             // count. Pure FS-metadata listing, no job.
             m.lobFiles.get(colId).foreach { expected =>
-              val p = new org.apache.hadoop.fs.Path(lobDir)
+              val p = new org.apache.hadoop.fs.Path(lobPath)
               val actual = p.getFileSystem(conf)
                 .listStatus(p).count(s => s.isFile && s.getPath.getName.contains("_row"))
               require(actual == expected,
-                s"LOB plane incomplete for $lobDir: $actual files on disk, " +
+                s"LOB plane incomplete for $lobPath: $actual files on disk, " +
                   s"manifest recorded $expected")
             }
-            val lob = LobSink.readBack(spark, lobDir)
+            val lob = LobSink.readBack(spark, lobPath)
               .select(
                 regexp_extract(col("file_name"), "_row(-?\\d+)\\.", 1)
                   .cast("long").as("__lob_id"),

@@ -1,7 +1,9 @@
 package graft.load
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+
+import graft.core.{Footers, Workers}
 
 /** Load phase with verify-and-rollback semantics (SURVEY §2.9 C5).
   *
@@ -49,7 +51,9 @@ object Loader {
       return LoadResult(name, expected, 0L, ok = false,
         detail = "crash-recovery restore of .old failed; load aborted")
     df.write.mode(SaveMode.Overwrite).parquet(staging)
-    val loaded = spark.read.parquet(staging).count()
+    // an exact count of what is on disk after the write, from the staged
+    // files' footers: no read-back job
+    val loaded = Footers.read(spark, staging).fold(0L)(_.rows)
     val countOk = loaded == expected
     // Hadoop FileSystem signals most rename/delete failures by returning
     // false, not throwing — every step must be checked or a failed
@@ -137,13 +141,16 @@ object Loader {
   /** Failed-first load ordering (load_schema_and_data.py:854-874): the
     * reference drains its failed-retry queue before fresh work. Reads the
     * persisted failed set, partitions the work list into (retry, fresh),
-    * runs retries first, skips tables already loaded ok, and rewrites the
-    * failed set from this run's outcomes. Returns results in execution
-    * order so the ordering contract is testable. `loadOne` loads one table
-    * — the parquet warehouse ([[loadVerified]]) and the live JDBC sink
-    * ([[loadVerifiedJdbc]]) share the contract. The failed-list control file
-    * rides its path's Hadoop FileSystem like every other control file. */
-  def loadAllWith(work: Seq[LoadWork], failedListPath: String,
+    * submits retries first, skips tables already loaded ok, and rewrites the
+    * failed set from this run's outcomes. The tables load concurrently on
+    * [[Workers.forTables]]' pool over `sc`; results come back in
+    * submission order (retries, then fresh work, each in work-list order),
+    * so the ordering contract is testable and the control files equal a
+    * serial run's. `loadOne` loads one table — the parquet warehouse
+    * ([[loadVerified]]) and the live JDBC sink ([[loadVerifiedJdbc]]) share
+    * the contract. The failed-list control file rides its path's Hadoop
+    * FileSystem like every other control file. */
+  def loadAllWith(sc: SparkContext, work: Seq[LoadWork], failedListPath: String,
       loadedOk: Set[String], loadOne: LoadWork => LoadResult,
       conf: org.apache.hadoop.conf.Configuration =
         new org.apache.hadoop.conf.Configuration()): Seq[LoadResult] = {
@@ -159,13 +166,14 @@ object Loader {
     // not a crashed run: record it like a failed verify so it lands on the
     // failed list and retries first next run — the reference's per-table
     // failure containment (load_schema_and_data.py:854-874)
-    val results = (retry ++ fresh).map { w =>
+    val results = Workers.forTables(sc, retry ++ fresh,
+        (w: LoadWork) => s"load graft.${w.name}") { w =>
       try loadOne(w)
       catch {
         case e: Exception =>
           LoadResult(w.name, -1L, 0L, ok = false, detail = s"load threw: ${e.getMessage}")
       }
-    }
+    }.map(_.get)
     Ctl.write(conf, failedListPath,
       results.filterNot(_.ok).map(_.tableName).mkString("", "\n", "\n"))
     results

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.core.{Catalog, Tables}
+import graft.core.{Catalog, Footers, Tables}
 
 /** The server under migration, as premigration and extraction see it: its
   * tables, their schemas, row counts and data, one-number queries and its
@@ -26,18 +26,21 @@ object Source {
 
   /** Parquet executor: every catalog table of `dir` (the canonical tables
     * and any extra `<name>.parquet`) as a temp view of a forked session, so
-    * no view leaks into the caller's session. Each table's schema is
-    * resolved once, when its view is registered. */
+    * no view leaks into the caller's session. Each table's footers are read
+    * once, here: they give the view its schema and `rows` its count, so
+    * listing, counting and sizing start no Spark job. */
   def parquet(spark: SparkSession, dir: String): Source = {
     val session = spark.newSession()
     val names = Catalog.tableMetas(dir).map(_.tableName)
+    val footers = names.map(n => n -> Footers.read(session, Tables.path(dir, n))).toMap
     new Source("`") {
       // quoted: an extra file's name need not be a bare identifier
-      names.foreach(n => Tables.load(session, dir, n).createOrReplaceTempView(quote(n)))
+      names.foreach(n => Tables.read(session, dir, n, footers(n).map(_.schema))
+        .createOrReplaceTempView(quote(n)))
       def tables = names
       def read(table: String) = session.table(quote(table))
       def schema(table: String) = read(table).schema
-      def rows(table: String) = read(table).count()
+      def rows(table: String) = footers(table).fold(read(table).count())(_.rows)
       def count(sql: String) = session.sql(sql).head().getLong(0)
     }
   }

@@ -275,15 +275,6 @@ class JdbcSpec extends SparkTestBase {
   }
 
   /** Spark jobs `f` starts on this thread, counted through a job group. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, group)
-    try f finally sc.clearJobGroup()
-    org.apache.spark.graftbridge.Bus.drain(sc)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   test("catalog-sized server questions run no Spark job") {
     import spark.implicits._
     val liveUrl = Jdbc.derbyUrl(

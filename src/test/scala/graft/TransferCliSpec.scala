@@ -519,12 +519,14 @@ class TransferCliSpec extends SparkTestBase {
     }
     // run 1: region fails verification → recorded in the failed set
     def load(w: Loader.LoadWork) = Loader.loadVerified(w.df(), w.expected(), s"$base/wh/${w.name}")
-    val r1 = Loader.loadAllWith(work(badExpected = true), failedList, Set.empty, load)
+    val r1 = Loader.loadAllWith(spark.sparkContext, work(badExpected = true), failedList,
+      Set.empty, load)
     assert(r1.count(_.ok) == 2 && !r1.find(_.tableName == "region").get.ok)
     assert(Files.readString(Paths.get(failedList)).trim == "region")
     // run 2: region must be retried BEFORE fresh work, then succeed
     val okNames = r1.filter(_.ok).map(_.tableName).toSet
-    val r2 = Loader.loadAllWith(work(badExpected = false), failedList, okNames, load)
+    val r2 = Loader.loadAllWith(spark.sparkContext, work(badExpected = false), failedList,
+      okNames, load)
     assert(r2.head.tableName == "region", s"failed table not retried first: $r2")
     assert(r2.forall(_.ok) && r2.map(_.tableName) == Seq("region"))
     assert(Files.readString(Paths.get(failedList)).trim.isEmpty)
@@ -629,5 +631,84 @@ class TransferCliSpec extends SparkTestBase {
     assert(!r2.ok)
     // previous committed data was restored from .old despite the failed load
     assert(spark.read.parquet(s"$base/nation").count() == 25)
+  }
+
+  /** sf0.001's control files, as a serial run of the extract and load
+    * phases writes them (work-list order, ids 1000 + catalog index). */
+  private val Sf0001IqTables = Seq(
+    "graft.customer,150,12600,1002,N", "graft.documents,500,56000,1008,N",
+    "graft.embeddings,500,134000,1009,N", "graft.events,1000,96000,1007,N",
+    "graft.lineitem,6000,792000,1006,N", "graft.nation,25,1000,1001,N",
+    "graft.orders,1500,144000,1005,N", "graft.part,200,23200,1004,N",
+    "graft.region,5,180,1000,N", "graft.supplier,10,520,1003,N")
+  private val Sf0001Extracted = Seq(
+    "graft.customer,1002,150", "graft.documents,1008,500", "graft.embeddings,1009,500",
+    "graft.events,1007,1000", "graft.lineitem,1006,6000", "graft.nation,1001,25",
+    "graft.orders,1005,1500", "graft.part,1004,200", "graft.region,1000,5",
+    "graft.supplier,1003,10")
+  private val Sf0001Loaded = Seq(
+    "graft.customer,150,Y", "graft.documents,500,Y", "graft.embeddings,500,Y",
+    "graft.events,1000,Y", "graft.lineitem,6000,Y", "graft.nation,25,Y",
+    "graft.orders,1500,Y", "graft.part,200,Y", "graft.region,5,Y", "graft.supplier,10,Y")
+
+  private def lines(path: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.readAllLines(Paths.get(path)).asScala.toSeq
+  }
+
+  test("concurrent extraction and load write the serial run's control files") {
+    val out = Files.createTempDirectory("graft_ctl_lines").toString
+    graft.cli.Main.fullExtraction(spark, sfDir, out)
+    assert(lines(s"$out/iq_tables.list") == Sf0001IqTables)
+    assert(lines(s"$out/ExtractedTables.out") == Sf0001Extracted)
+    graft.cli.Main.fullLoad(spark, out)
+    assert(lines(s"$out/HDL_LoadedTables.out") == Sf0001Loaded)
+  }
+
+  test("a table whose extract throws: the others finish, its error is rethrown, resume completes") {
+    import scala.jdk.CollectionConverters._
+    import graft.extract.Extract
+    val conf = spark.sparkContext.hadoopConfiguration
+    val out = Files.createTempDirectory("graft_extract_fail").toString
+    val src = graft.sources.Source.parquet(spark, sfDir)
+    val work = Extract.workList(src)
+    // the smallest table is submitted last, after every other one started
+    val victim = Extract.lptOrder(work).last
+    val err = intercept[IllegalStateException](graft.cli.Main.onlyDataFrom(spark, out, 0L, work,
+      n => if (n == victim.name) throw new IllegalStateException(s"cannot read $n") else src.read(n)))
+    assert(err.getMessage == s"cannot read ${victim.name}")
+    work.filterNot(_ == victim).foreach { w =>
+      assert(Extract.readManifest(conf, s"$out/Extracted_Data/${w.tableId}").exists(_.complete),
+        s"${w.name} did not finish")
+    }
+    assert(!Files.exists(Paths.get(s"$out/ExtractedTables.out")))
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.getName.startsWith(graft.core.Workers.ThreadPrefix) && t.isAlive),
+      "a pool thread outlived the phase")
+    // the resume extracts only the failed table
+    graft.cli.Main.onlyDataFrom(spark, out, 0L, work, n =>
+      if (n == victim.name) src.read(n)
+      else throw new IllegalStateException(s"resolved $n, whose extract is complete"))
+    assert(lines(s"$out/ExtractedTables.out") == Sf0001Extracted)
+  }
+
+  test("extraction deletes the extracts of table ids in no work-list item") {
+    import scala.jdk.CollectionConverters._
+    val out = Files.createTempDirectory("graft_stale_ids").toString
+    graft.cli.Main.fullExtraction(spark, sfDir, out)
+    val root = Paths.get(s"$out/Extracted_Data")
+    def entries = Files.list(root).iterator().asScala.map(_.getFileName.toString).toSet
+    val current = entries
+    val stamps = current.map(n => n -> Files.getLastModifiedTime(root.resolve(n))).toMap
+    // a previous run's table 2000: its dir, manifest, LOB dir and checksum
+    Files.createDirectories(root.resolve("2000"))
+    Files.writeString(root.resolve("2000/part-00000.csv.gz"), "x")
+    Files.createDirectories(root.resolve("2000.lob3"))
+    Files.writeString(root.resolve("2000.manifest.json"), "{}")
+    Files.writeString(root.resolve(".2000.manifest.json.crc"), "x")
+    graft.cli.Main.onlyData(spark, graft.sources.Source.parquet(spark, sfDir), out)
+    assert(entries == current)
+    current.foreach(n => assert(Files.getLastModifiedTime(root.resolve(n)) == stamps(n), n))
+    assert(lines(s"$out/ExtractedTables.out") == Sf0001Extracted)
   }
 }
