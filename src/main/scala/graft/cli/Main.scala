@@ -86,17 +86,16 @@ object Main {
     // write probe matches the mode: live --jdbc probes by CREATE/DROP of a
     // real test table through the connection (migration.py:385-414); the
     // fixture mode checks source-dir writability (no side effects).
-    val gates = graft.premigration.Gates.evaluate(spark,
+    val gates = graft.premigration.Gates.evaluate(
       props = Map("version" -> s"graft/spark ${spark.version}",
         "readonly" -> "Off"),
       nodes = Seq.empty, connectedServer = "local",
       probeWriteSucceeds =
         if (jdbc.nonEmpty) () => Jdbc.probeWrite(jdbc)
         else () => Files.isWritable(Paths.get(sfDir)),
-      forceWriteMode = true).collect()
-    require(gates.forall(_.getBoolean(1)), "environment gates failed")
-    val gateReport = gates.map(r =>
-      f"gate:${r.getString(0)}%-22s pass=${r.getBoolean(1)}  ${r.getString(2)}")
+      forceWriteMode = true)
+    require(gates.forall(_.pass), "environment gates failed")
+    val gateReport = gates.map(g => f"gate:${g.gate}%-22s pass=${g.pass}  ${g.detail}")
     // the audit runs where the data lives (live mode reads nothing under sfDir)
     val findings = withSource(spark, sfDir, jdbc)(Checks.findings)
     val report = (gateReport ++ findings.map(f =>
@@ -109,8 +108,7 @@ object Main {
   /** Schema unload only (`--onlyschema y`, migration.py:237-238): rewrite
     * the reload script, splitting FK DDL out. */
   def onlySchema(spark: SparkSession, out: String): Unit = {
-    val rewritten = Rewriter.rewrite(spark, ReloadFixture.lines).collect().toSeq
-    val (main, fk) = Rewriter.serialize(rewritten)
+    val (main, fk) = Rewriter.serialize(Rewriter.rewrite(ReloadFixture.lines))
     val conf = spark.sparkContext.hadoopConfiguration
     Ctl.write(conf, s"$out/AutoUpdated_Reload.sql", main)
     Ctl.write(conf, s"$out/Foreign_Key_Constraint.sql", fk)

@@ -20,11 +20,19 @@ object Ctl {
 
   private def fsOf(p: Path, conf: Configuration): FileSystem = p.getFileSystem(conf)
 
+  /** Replace `path`'s content: write a hidden sibling, then rename it into
+    * place, so a kill mid-write leaves the old file or the new one, never a
+    * truncated one. Where rename does not overwrite (HDFS), the target is
+    * deleted first. */
   def write(conf: Configuration, path: String, content: String): Unit = {
     val p = new Path(path)
-    val out = fsOf(p, conf).create(p, true)
+    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
+    val fs = fsOf(p, conf)
+    val out = fs.create(tmp, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
+    if (!fs.rename(tmp, p) && !(fs.delete(p, false) && fs.rename(tmp, p)))
+      throw new java.io.IOException(s"could not rename $tmp to $p")
   }
 
   def readLines(conf: Configuration, path: String): Seq[String] = {

@@ -9,10 +9,11 @@ import scala.util.control.NonFatal
 import org.apache.spark.SparkContext
 
 /** A fixed pool of threads that lives for one call, for work items that are
-  * each a few small Spark jobs (one table's extract or load). The reference
-  * unloads and loads tables on a worker pool the same way
-  * (`migration.py:2085-2241`); a single small table is one Spark task, so
-  * without a pool the cores idle while tables run one after another.
+  * each a few small Spark jobs (one table's extract or load, one audit
+  * check, one plane of a LOB table's extract). The reference unloads and
+  * loads tables on a worker pool the same way (`migration.py:2085-2241`); a
+  * single small table is one Spark task, so without a pool the cores idle
+  * while tables run one after another.
   *
   * The threads are created by the calling thread, so they inherit its Spark
   * local properties (job group, job description, scheduler pool and any

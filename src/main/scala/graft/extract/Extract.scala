@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.ChecksumException
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Catalog, Ctl, Json}
+import graft.core.{Catalog, Ctl, Json, Workers}
 import graft.sources.Source
 
 /** Extraction phase: planner + executors (SURVEY §2.1 S6-S11, §2.6 O3-O4,
@@ -229,7 +229,12 @@ object Extract {
     * row-id analog is the table's LEAD column (SURVEY §7.4's documented
     * rowid deviation) and must cast to long. The manifest's schema DDL keeps
     * the FULL schema including the LOB columns, which is what lets
-    * [[readExtractedAuto]] reassemble the table without the source. */
+    * [[readExtractedAuto]] reassemble the table without the source.
+    *
+    * The lead-column check, the scalar plane and each LOB plane are
+    * independent jobs over `df`, so they run concurrently. The manifest is
+    * the commit marker: it is written only once the ids passed and every
+    * plane succeeded, so a failed extract leaves none and resume redoes it. */
   def extractLob(df: DataFrame, outDir: String, tableId: Int, table: String = ""): Long = {
     import org.apache.spark.sql.types.BinaryType
     val fields = df.schema.fields
@@ -242,23 +247,32 @@ object Extract {
     // non-castable values in one check). Negative ids are legal: the
     // read-back regexp accepts them.
     val idL = col(idCol).cast("long")
-    val ids = df.agg(count(lit(1)).as("n"), count(idL).as("n_id"),
-      countDistinct(idL).as("n_uniq")).head()
-    require(ids.getLong(1) == ids.getLong(0) && ids.getLong(2) == ids.getLong(0),
-      s"LOB extract needs a non-null, unique, long-castable lead column: " +
-        s"'$idCol' has ${ids.getLong(0)} rows, ${ids.getLong(1)} usable ids, " +
-        s"${ids.getLong(2)} distinct")
     val scalar = df.select(fields.filter(_.dataType != BinaryType).map(f => col(f.name)).toSeq: _*)
-    val cnt = writeCounted(scalar)(
-      _.write.mode(SaveMode.Overwrite).options(GzipCsvWriteOptions).csv(outDir))
-    val lobCounts = fields.zipWithIndex.collect {
-      case (f, i) if f.dataType == BinaryType =>
-        (i + 1) -> LobSink.writePerRow(df, idCol, f.name, lobDir(outDir, i + 1),
-          tableId, colId = i + 1)
-    }.toMap
+    val lobCols = fields.zipWithIndex.collect {
+      case (f, i) if f.dataType == BinaryType => (f.name, i + 1)
+    }.toSeq
+    val planes: Seq[() => Seq[Long]] = Seq(
+      () => {
+        val r = df.agg(count(lit(1)), count(idL), countDistinct(idL)).head()
+        Seq(r.getLong(0), r.getLong(1), r.getLong(2))
+      },
+      () => Seq(writeCounted(scalar)(
+        _.write.mode(SaveMode.Overwrite).options(GzipCsvWriteOptions).csv(outDir)))) ++
+      lobCols.map { case (name, colId) => () =>
+        Seq(LobSink.writePerRow(df, idCol, name, lobDir(outDir, colId), tableId, colId))
+      }
+    val outcomes = Workers.run(planes, planes.size)(_())
+    // bad ids come first: they explain a failed plane (a null id names no file)
+    outcomes.head.foreach { case Seq(n, nId, nUniq) =>
+      require(nId == n && nUniq == n,
+        s"LOB extract needs a non-null, unique, long-castable lead column: " +
+          s"'$idCol' has $n rows, $nId usable ids, $nUniq distinct")
+    }
+    Workers.firstFailure(outcomes).foreach(e => throw e)
+    val Seq(_, Seq(cnt), lobFiles @ _*) = outcomes.map(_.get)
     writeManifest(outDir, cnt, "lob_csv",
       df.sparkSession.sparkContext.hadoopConfiguration, df.schema.toDDL,
-      table = table, lobFiles = lobCounts)
+      table = table, lobFiles = lobCols.map(_._2).zip(lobFiles.map(_.head)).toMap)
     cnt
   }
 
@@ -295,9 +309,7 @@ object Extract {
             // read back as a silent NULL cell under a still-green scalar row
             // count. Pure FS-metadata listing, no job.
             m.lobFiles.get(colId).foreach { expected =>
-              val p = new org.apache.hadoop.fs.Path(lobPath)
-              val actual = p.getFileSystem(conf)
-                .listStatus(p).count(s => s.isFile && s.getPath.getName.contains("_row"))
+              val actual = LobSink.fileCount(lobPath, conf)
               require(actual == expected,
                 s"LOB plane incomplete for $lobPath: $actual files on disk, " +
                   s"manifest recorded $expected")

@@ -1,5 +1,6 @@
 package graft.extract
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,13 +23,17 @@ import org.apache.spark.sql.graftbridge.SerializableHadoopConf
   */
 object LobSink {
 
-  /** Write one file per row: dir/<tableId>_row<id>.<colId>. Returns count. */
+  /** Write one file per non-null cell: dir/<tableId>_row<id>.<colId>.
+    * `dir` is emptied first, so a re-extract leaves no file of an earlier
+    * one behind. Returns the [[fileCount]] after the write: a count kept by
+    * the tasks would count a retried task's files twice. */
   def writePerRow(df: DataFrame, idCol: String, lobCol: String,
       dir: String, tableId: Int, colId: Int): Long = {
     val driverConf = df.sparkSession.sparkContext.hadoopConfiguration
-    new Path(dir).getFileSystem(driverConf).mkdirs(new Path(dir))
+    val fs = new Path(dir).getFileSystem(driverConf)
+    fs.delete(new Path(dir), true)
+    fs.mkdirs(new Path(dir))
     val hconf = new SerializableHadoopConf(driverConf)
-    val cnt = df.sparkSession.sparkContext.longAccumulator("lob_files")
     df.select(col(idCol).cast("long"), col(lobCol).cast("binary"))
       .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
         val fs = new Path(dir).getFileSystem(hconf.value)
@@ -36,11 +41,18 @@ object LobSink {
           if (!r.isNullAt(1)) {
             val out = fs.create(new Path(dir, s"${tableId}_row${r.getLong(0)}.$colId"), true)
             try out.write(r.getAs[Array[Byte]](1)) finally out.close()
-            cnt.add(1)
           }
         }
       }
-    cnt.value
+    fileCount(dir, driverConf)
+  }
+
+  /** The per-row files under `dir`, as listed through its Hadoop FileSystem
+    * (which hides checksum siblings). No Spark job. */
+  def fileCount(dir: String, conf: Configuration): Long = {
+    val p = new Path(dir)
+    p.getFileSystem(conf).listStatus(p)
+      .count(s => s.isFile && s.getPath.getName.contains("_row")).toLong
   }
 
   /** Read a per-row LOB directory back as (path, length, content). */

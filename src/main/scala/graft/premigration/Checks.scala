@@ -2,7 +2,7 @@ package graft.premigration
 
 import org.apache.spark.sql.types.{ArrayType, BinaryType}
 
-import graft.core.Catalog
+import graft.core.{Catalog, Workers}
 import graft.sources.Source
 
 /** Pre-migration audit (SURVEY §3.1): feature checks, each a scalar
@@ -49,7 +49,14 @@ object Checks {
 
   final case class Finding(checkName: String, findingCount: Long, actionRequired: Boolean)
 
-  /** Every check's finding on `src`, sorted by check name. */
-  def findings(src: Source): Seq[Finding] =
-    all.map { c => val n = c.count(src); Finding(c.name, n, n > 0) }.sortBy(_.checkName)
+  /** Every check's finding on `src`, sorted by check name. The checks run
+    * concurrently, each on its own thread, so their Spark jobs overlap; a
+    * source that can answer one question at a time serializes them itself.
+    * The first check that failed is rethrown as itself. */
+  def findings(src: Source): Seq[Finding] = {
+    val outcomes = Workers.run(all, all.size)(_.count(src))
+    Workers.firstFailure(outcomes).foreach(e => throw e)
+    all.zip(outcomes).map { case (c, n) => Finding(c.name, n.get, n.get > 0) }
+      .sortBy(_.checkName)
+  }
 }

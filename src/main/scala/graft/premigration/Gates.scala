@@ -1,8 +1,5 @@
 package graft.premigration
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Environment/version gates the reference runs before any phase
   * (`/root/reference/Migration/migration.py:316-414`): MPX-coordinator
   * check, version acceptance (16.0 rejected, 16.1.01 uncompressed-only),
@@ -74,17 +71,15 @@ object Gates {
       GateResult("readonly", pass = false,
         "database is writable; start source readonly or force write mode")
 
-  /** All gates over a property map + topology, as one relation. */
-  def evaluate(spark: SparkSession, props: Map[String, String],
+  /** All gates over a property map + topology, sorted by gate name. */
+  def evaluate(props: Map[String, String],
       nodes: Seq[MpxNode], connectedServer: String,
       probeWriteSucceeds: () => Boolean,
-      forceWriteMode: Boolean = false): DataFrame = {
-    import spark.implicits._
+      forceWriteMode: Boolean = false): Seq[GateResult] = {
     val (mpx, _) = mpxGate(nodes, connectedServer)
     val (ver, _) = versionGate(props.getOrElse("version", ""))
     val ro = readonlyGate(props.getOrElse("readonly", "Off"),
       probeWriteSucceeds, forceWriteMode)
-    Seq(mpx, ver, ro).map(g => (g.gate, g.pass, g.detail))
-      .toDF("gate", "pass", "detail").orderBy("gate")
+    Seq(mpx, ver, ro).sortBy(_.gate)
   }
 }

@@ -46,10 +46,8 @@ object Migration {
          |  CAST(coalesce(sum(CASE WHEN trim(lower(text)) = 'go' THEN 1 ELSE 0 END)
          |    OVER (ORDER BY line_no ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS stmt_id
          |FROM ${ReloadFixture.valuesLiteral} ORDER BY line_no""".stripMargin) { (s, _) =>
-      import s.implicits._
-      val lines = ReloadFixture.lines.zipWithIndex
-        .map { case (t, i) => (i.toLong, t) }.toDF("line_no", "text")
-      Rewriter.segment(lines).select("line_no", "stmt_id").orderBy("line_no")
+      s.createDataFrame(Rewriter.rewrite(ReloadFixture.lines))
+        .select("line_no", "stmt_id").orderBy("line_no")
     },
 
     // C2-C4: full rewrite cascade — classification flags per line. The
@@ -111,7 +109,7 @@ object Migration {
          |  (action = 'comment' OR line_commented OR sweep) AS commented,
          |  (action = 'fk') AS is_fk
          |FROM h ORDER BY line_no""".stripMargin) { (s, _) =>
-      Rewriter.rewrite(s, ReloadFixture.lines).toDF()
+      s.createDataFrame(Rewriter.rewrite(ReloadFixture.lines))
         .select("line_no", "stmt_id", "commented", "is_fk")
         .orderBy("line_no")
     },
@@ -214,14 +212,14 @@ object Migration {
         |         END FROM props)
         |SELECT gate, pass, detail FROM g ORDER BY gate""".stripMargin) { (s, _) =>
       import graft.premigration.Gates
-      Gates.evaluate(s,
+      s.createDataFrame(Gates.evaluate(
         props = Map("version" -> "SAP IQ/16.1.01.7788", "readonly" -> "Off"),
         nodes = Seq(
           Gates.MpxNode("coord1", "coordinator", "included", "active"),
           Gates.MpxNode("w1", "writer", "included", "active"),
           Gates.MpxNode("r1", "reader", "included", "suspended")),
         connectedServer = "coord1",
-        probeWriteSucceeds = () => false)
+        probeWriteSucceeds = () => false))
     },
 
     // O3: LPT node assignment invariants (migration.py:1656-1677,1817-1846).

@@ -440,8 +440,9 @@ object Relational {
     // phase 1 computes the running sum inside fixed-width event_id buckets
     // (each a bounded window partition), phase 2 cumulates the per-bucket
     // totals (a window over n/W rows, broadcast back). The single-partition
-    // form is correct only for MB-sized scripts (Rewriter.segment documents
-    // that); over an SF-scaling table it must distribute like this.
+    // form is correct only for MB-sized scripts (the rewriter segments its
+    // script on the driver); over an SF-scaling table it must distribute
+    // like this.
     QueryDef(
       "w2_running_segment_id",
       """SELECT event_id,

@@ -1,11 +1,10 @@
 package graft.rewrite
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import java.util.Locale
+import java.util.regex.Pattern
 
 /** The schema-script rewriter (SURVEY §2.9 C1-C6): takes an
-  * `iqunload`-shaped `reload.sql` as a line Dataset, segments it into
+  * `iqunload`-shaped `reload.sql` as its lines, segments them into
   * statements on bare `go` delimiters, classifies each statement against an
   * ordered artifact-rule list, and emits (a) the rewritten script with
   * unsupported statements commented out under Begin/End banners, (b) foreign
@@ -13,8 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * Reference behavior being reproduced (cited into `/root/reference/`):
   *  - statement extent discovery by scanning to the surrounding `go` lines —
-  *    `Migration/migration.py:1126-1145`; here a running `go` count over a
-  *    line window (C1).
+  *    `Migration/migration.py:1126-1145`; here a running `go` count (C1).
   *  - rule engine: (pattern, COMMENT, pat1, pat2) tuples from
   *    `Common/DB_Artifacts.list` + catalog queries; match ⇒ comment every
   *    line and add banners — `migration.py:1110-1178` (C2).
@@ -26,9 +24,8 @@ import org.apache.spark.sql.functions._
   *  - `password values` blanket comment — `migration.py:1221-1237`.
   *  - sentinel-bracketed serialization — `migration.py:611-616,1295` (C6).
   *
-  * Scale note: segmentation is a single ordered-window pass (scripts are
-  * MB-sized — one partition is correct, not a compromise); rule matching is
-  * a statement × rule evaluation where the rule list broadcasts.
+  * Driver-side text processing, like the reference's: a script is MB-sized
+  * and its passes are order-sensitive scans over its lines.
   */
 object Rewriter {
 
@@ -87,33 +84,30 @@ object Rewriter {
     Replace("DBA", "HDLADMIN"),
     Replace("IQ_SYSTEM_MAIN", "user_object_store"))
 
-  private def wb(pat: String): String =
-    "(?is).*\\b" + java.util.regex.Pattern.quote(pat) + "\\b.*"
+  /** `pat` as a whole word, case-insensitive (migration.py:1013). */
+  private def word(pat: String): Pattern =
+    Pattern.compile("\\b" + Pattern.quote(pat) + "\\b", Pattern.CASE_INSENSITIVE)
 
-  private def matches(stmtText: String, r: Rule): Boolean =
-    stmtText.matches(wb(r.pattern)) &&
-      r.pat1.forall(p => stmtText.matches(wb(p))) &&
-      r.pat2.forall(p => stmtText.matches(wb(p)))
+  private val procPat =
+    Pattern.compile("\\b(create|replace)\\s+procedure\\b", Pattern.CASE_INSENSITIVE)
 
-  /** C1: segment a line Dataset into statements. stmtId = count of `go`
-    * delimiter lines strictly before this line; a `go` line closes the
-    * statement it follows. */
-  def segment(lines: DataFrame): DataFrame = {
-    val w = Window.orderBy("line_no").rowsBetween(Window.unboundedPreceding, -1)
-    lines
-      .withColumn("is_go", (trim(lower(col("text"))) === "go").cast("int"))
-      .withColumn("stmt_id", coalesce(sum(col("is_go")).over(w), lit(0)).cast("long"))
-  }
+  private val domainSuffix = Pattern.compile("(?i)\\s+AS USER\\s+.*$")
 
-  /** Full rewrite: returns the per-line output with comment/FK flags.
-    * Statement classification runs distributed per stmt group; the ordered
-    * rule cascade is applied with the whole (broadcast-sized) rule list.
+  /** A `go` delimiter line: `go` in any case, between spaces only (SQL
+    * `trim`, not Java's, which also strips tabs and control characters). */
+  private def isGo(text: String): Boolean =
+    text.replaceAll("^ +| +$", "").toLowerCase(Locale.ROOT) == "go"
+
+  /** Full rewrite: every input line once, in order, with its statement id,
+    * rewritten text and comment/FK flags.
     *
     * Pass order, mirroring the reference's commands loop:
     *  1. statement rules — comment whole go-delimited statements
     *     (migration.py:1110-1178; our statement extent is the full
     *     go-to-go span, a documented superset of the reference's
-    *     comment/blank-bounded sub-extent).
+    *     comment/blank-bounded sub-extent). C1: a statement id is the count
+    *     of `go` lines strictly before the line, so a `go` line closes the
+    *     statement it follows.
     *  2. line rules — comment single matching lines inside kept statements
     *     (migration.py:1236-1246).
     *  3. `password values` blanket — the matching line and 4 lines either
@@ -126,72 +120,46 @@ object Rewriter {
     *  5. word replaces — applied to EVERY line, commented and FK included
     *     (migration.py:1286-1293 runs unconditionally over all lines; the
     *     FK script is derived from the already-replaced text at 1338-1386,
-    *     so the deferred FK DDL targets the renamed objects).
-    *
-    * The blanket/sweep windows order by line_no unpartitioned — correct for
-    * MB-sized scripts (same note as [[segment]]). */
-  def rewrite(spark: SparkSession, rawLines: Seq[String],
+    *     so the deferred FK DDL targets the renamed objects). */
+  def rewrite(rawLines: Seq[String],
       rules: Seq[Rule] = defaultRules,
       replaces: Seq[Replace] = defaultReplaces,
-      lineRules: Seq[LineRule] = defaultLineRules): Dataset[OutLine] = {
-    import spark.implicits._
-    val lines = rawLines.zipWithIndex
-      .map { case (t, i) => (i.toLong, t) }
-      .toDF("line_no", "text")
-    val seg = segment(lines)
-    // collect_list order isn't guaranteed → sort the (line_no, text) structs
-    // inside the group before concatenating statement text.
-    val stmts = seg.groupBy("stmt_id")
-      .agg(array_sort(collect_list(struct(col("line_no"), col("text")))).as("ls"))
-      .select(col("stmt_id"),
-        concat_ws("\n", expr("transform(ls, x -> x.text)")).as("stmt_text"))
-    val allRules = rules ++ Seq(fkRule, domainStripRule)
-    val procPat = "(?is).*\\b(create|replace)\\s+procedure\\b.*"
-    val classify = udf { stmtText: String =>
-      val hit = allRules.find(r => matches(stmtText, r))
-      val isProc = stmtText.matches(procPat)
-      hit match {
-        case Some(r) if r == fkRule => ("fk", r.banner, isProc)
-        case Some(r) if r == domainStripRule => ("strip_domain", r.banner, isProc)
-        case Some(r) => ("comment", r.banner, isProc)
-        case None => ("keep", "", isProc)
-      }
+      lineRules: Seq[LineRule] = defaultLineRules): Seq[OutLine] = {
+    val lines = rawLines.toIndexedSeq
+    val stmtIds = lines.scanLeft(0L)((n, t) => if (isGo(t)) n + 1 else n).init
+    val stmtText: Map[Long, String] = lines.indices.groupBy(stmtIds)
+      .map { case (id, ix) => id -> ix.map(lines).mkString("\n") }
+    // pass 1: the first matching rule classifies the statement
+    val ruleWords = (rules ++ Seq(fkRule, domainStripRule)).map(r =>
+      r -> (r.pattern +: (r.pat1.toSeq ++ r.pat2)).map(word))
+    val hit: Map[Long, Option[Rule]] = stmtText.map { case (id, text) =>
+      id -> ruleWords.collectFirst { case (r, ws) if ws.forall(_.matcher(text).find()) => r }
     }
-    val classified = stmts
-      .withColumn("cls", classify(col("stmt_text")))
-      .select(col("stmt_id"), col("cls._1").as("action"), col("cls._2").as("banner"),
-        col("cls._3").as("is_proc"))
-    val joined = seg.join(broadcast(classified), Seq("stmt_id"))
-    // pass 2: line rules (only lines of otherwise-kept statements)
-    val lineRuleHit = lineRules.foldLeft(lit(false)) { (acc, r) =>
-      acc || (col("text").rlike(wb(r.pattern)) && col("text").rlike(wb(r.pat1)))
+    // passes 2-3: line rules on kept statements, the password blanket on all
+    val lineWords = lineRules.map(r => (word(r.pattern), word(r.pat1)))
+    val pw = lines.map(_.contains("password values"))
+    val lineCommented = lines.indices.map { i =>
+      (i - 4 to i + 4).exists(j => pw.isDefinedAt(j) && pw(j)) ||
+        hit(stmtIds(i)).isEmpty && lineWords.exists { case (p, p1) =>
+          p.matcher(lines(i)).find() && p1.matcher(lines(i)).find() }
     }
-    // pass 3: password blanket — ±4 lines around any `password values` hit
-    val blanketW = Window.orderBy("line_no").rowsBetween(-4, 4)
-    val flagged = joined
-      .withColumn("pw_hit", col("text").contains("password values").cast("int"))
-      .withColumn("line_hit",
-        (col("action") === "keep" && lineRuleHit).cast("int"))
-      .withColumn("line_commented",
-        (max(col("pw_hit")).over(blanketW) === 1) || (col("line_hit") === 1))
-    // pass 4: procedure sweep — partially-commented procedures comment whole
-    val sweepW = Window.partitionBy("stmt_id")
-    val swept = flagged.withColumn("sweep",
-      col("is_proc") && col("action") === "keep" &&
-        max(col("line_commented").cast("int")).over(sweepW) === 1)
-    // pass 5: word replaces on every line (reference replaces unconditionally)
-    val replaced = replaces.foldLeft(col("text")) { (c, r) =>
-      regexp_replace(c, "(?i)\\b" + java.util.regex.Pattern.quote(r.from) + "\\b", r.to)
+    // pass 4: kept procedures with a commented line are commented whole
+    val touched = lines.indices.filter(lineCommented).map(stmtIds).toSet
+    val swept = touched.filter(id =>
+      hit(id).isEmpty && procPat.matcher(stmtText(id)).find())
+    // pass 5: word replaces on every line
+    val replaceWords = replaces.map(r => word(r.from) -> r.to)
+    lines.indices.map { i =>
+      val id = stmtIds(i)
+      val replaced = replaceWords.foldLeft(lines(i)) { case (t, (p, to)) =>
+        p.matcher(t).replaceAll(to) }
+      OutLine(i.toLong, id,
+        if (hit(id).contains(domainStripRule)) domainSuffix.matcher(replaced).replaceAll("")
+        else replaced,
+        commented = hit(id).exists(r => r != fkRule && r != domainStripRule) ||
+          lineCommented(i) || swept(id),
+        is_fk = hit(id).contains(fkRule))
     }
-    swept.select(
-        col("line_no"), col("stmt_id"),
-        when(col("action") === "strip_domain",
-            regexp_replace(replaced, "(?i)\\s+AS USER\\s+.*$", ""))
-          .otherwise(replaced).as("text"),
-        (col("action") === "comment" || col("line_commented") || col("sweep"))
-          .as("commented"),
-        (col("action") === "fk").as("is_fk"))
-      .as[OutLine]
   }
 
   /** C4 (migration.py:1046-1085 + Common/login_policy.csv): when the root

@@ -49,7 +49,9 @@ object Source {
     * tables are the listed names, lower-cased and sorted, and each is
     * referred to bare, so the server folds the case. Schemas come from the
     * JDBC relation and counts from the connection, so listing, counting and
-    * sizing start no Spark job; [[Jdbc.readAuto]] reads the data. */
+    * sizing start no Spark job; [[Jdbc.readAuto]] reads the data. A JDBC
+    * connection is not safe for concurrent statements, so counts from
+    * several threads take turns on it. */
   def live[A](spark: SparkSession, url: String)(f: Source => A): A =
     Jdbc.withConnection(url) { conn =>
       // JDBC reports " " when the server does not quote identifiers
@@ -61,7 +63,9 @@ object Source {
           numPartitions = spark.sparkContext.defaultParallelism.min(32))
         def schema(table: String) = Jdbc.read(spark, url, table).schema
         def rows(table: String) = count(s"SELECT COUNT(*) FROM $table")
-        def count(sql: String) = Jdbc.query(conn, sql) { rs => rs.next(); rs.getLong(1) }
+        def count(sql: String) = conn.synchronized {
+          Jdbc.query(conn, sql) { rs => rs.next(); rs.getLong(1) }
+        }
       })
     }
 }

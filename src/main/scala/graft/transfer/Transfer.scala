@@ -3,7 +3,7 @@ package graft.transfer
 import java.nio.file.{Path => JPath}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Object-store transfer utilities (SURVEY §2.1 S12-S14).
@@ -23,85 +23,69 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Transfer {
 
-  /** Raw-byte-plane filesystem for `uri`: a PRIVATE instance (never the
-    * process-wide cache `uri.getFileSystem` shares by scheme/authority/UGI)
-    * so disabling checksum siblings here cannot silently turn checksums off
-    * for every other user of the cached FS — including Spark's own I/O.
-    * Callers own the instance and must close it. */
-  private def fsFor(uri: Path, conf: Configuration): FileSystem = {
-    val fs = FileSystem.newInstance(uri.toUri, conf)
-    // raw byte plane: no sibling .crc artifacts in the upload dirs
-    fs.setWriteChecksum(false)
-    fs.setVerifyChecksum(false)
-    fs
-  }
-
-  private def withFs[A](uri: Path, conf: Configuration)(f: FileSystem => A): A = {
-    val fs = fsFor(uri, conf)
-    try f(fs) finally fs.close()
-  }
+  /** The byte plane of `p`'s FileSystem: the process-wide cached instance,
+    * or its raw FileSystem where the cached one is a checksum filesystem
+    * (the local one), so no `.crc` sibling lands in an upload dir and no
+    * setting of the shared instance changes. Shared, so never closed. */
+  private def rawFs(p: Path, conf: Configuration): FileSystem =
+    p.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
 
   /** Copy `src` to `dstDir`, splitting into ≤ chunkBytes parts when needed
     * (the 95 GB workaround). Works on any FileSystem scheme. Returns the
     * part files written. */
   def copyChunked(src: Path, dstDir: Path, chunkBytes: Long,
-      conf: Configuration): Seq[Path] =
-    withFs(src, conf) { sfs => withFs(dstDir, conf) { dfs =>
-      dfs.mkdirs(dstDir)
-      val size = sfs.getFileStatus(src).getLen
-      val in = sfs.open(src)
-      try {
-        if (size <= chunkBytes) {
-          val dst = new Path(dstDir, src.getName)
+      conf: Configuration): Seq[Path] = {
+    val sfs = rawFs(src, conf)
+    val dfs = rawFs(dstDir, conf)
+    dfs.mkdirs(dstDir)
+    val size = sfs.getFileStatus(src).getLen
+    val in = sfs.open(src)
+    try {
+      if (size <= chunkBytes) {
+        val dst = new Path(dstDir, src.getName)
+        val out = dfs.create(dst, true)
+        try in.transferTo(out) finally out.close()
+        Seq(dst)
+      } else {
+        val buf = new Array[Byte](1 << 20)
+        var part = 0
+        val written = Seq.newBuilder[Path]
+        var remaining = size
+        while (remaining > 0) {
+          val dst = new Path(dstDir, s"${src.getName}.part$part")
           val out = dfs.create(dst, true)
-          try in.transferTo(out) finally out.close()
-          Seq(dst)
-        } else {
-          val buf = new Array[Byte](1 << 20)
-          var part = 0
-          val written = Seq.newBuilder[Path]
-          var remaining = size
-          while (remaining > 0) {
-            val dst = new Path(dstDir, s"${src.getName}.part$part")
-            val out = dfs.create(dst, true)
-            try {
-              var partBytes = 0L
-              var n = 0
-              while (partBytes < chunkBytes && {
-                val want = math.min(buf.length.toLong, chunkBytes - partBytes).toInt
-                n = in.read(buf, 0, want); n > 0
-              }) {
-                out.write(buf, 0, n); partBytes += n
-              }
-              remaining -= partBytes
-            } finally out.close()
-            written += dst
-            part += 1
-          }
-          written.result()
+          try {
+            var partBytes = 0L
+            var n = 0
+            while (partBytes < chunkBytes && {
+              val want = math.min(buf.length.toLong, chunkBytes - partBytes).toInt
+              n = in.read(buf, 0, want); n > 0
+            }) {
+              out.write(buf, 0, n); partBytes += n
+            }
+            remaining -= partBytes
+          } finally out.close()
+          written += dst
+          part += 1
         }
-      } finally in.close()
-    }}
+        written.result()
+      }
+    } finally in.close()
+  }
 
   /** Server-side MERGE analog: concatenate parts (in order) into one file
     * and delete them (the DELETE_BATCH step). Cross-scheme: parts may live
-    * on one filesystem and `dst` on another (one private instance per
-    * distinct scheme+authority, closed on exit). */
+    * on one filesystem and `dst` on another. */
   def merge(parts: Seq[Path], dst: Path, conf: Configuration): Unit = {
-    val cache = scala.collection.mutable.LinkedHashMap.empty[String, FileSystem]
-    def fsOf(p: Path): FileSystem = {
-      val u = p.toUri
-      val key = s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}"
-      cache.getOrElseUpdate(key, fsFor(p, conf))
-    }
-    try {
-      val out = fsOf(dst).create(dst, true)
-      try parts.foreach { p =>
-        val in = fsOf(p).open(p)
-        try in.transferTo(out) finally in.close()
-      } finally out.close()
-      parts.foreach(p => fsOf(p).delete(p, false))
-    } finally cache.values.foreach(_.close())
+    val out = rawFs(dst, conf).create(dst, true)
+    try parts.foreach { p =>
+      val in = rawFs(p, conf).open(p)
+      try in.transferTo(out) finally in.close()
+    } finally out.close()
+    parts.foreach(p => rawFs(p, conf).delete(p, false))
   }
 
   // NIO-path overloads (sandbox/local callers), same engine underneath.

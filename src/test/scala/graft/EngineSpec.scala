@@ -115,6 +115,35 @@ class EngineSpec extends SparkTestBase {
     assert(sitesOf("spark.sql.legacy.parquet.nanosAsLong") == Seq("graft/core/Engine.scala"))
   }
 
+  test("the reload-script rewriter and the gates import nothing from Spark") {
+    // script-sized text and control logic runs as plain Scala: a session,
+    // plan compiles and jobs cost seconds on a cold JVM for a MB-sized script
+    Seq("graft/rewrite/Rewriter.scala", "graft/premigration/Gates.scala").foreach { f =>
+      val text = java.nio.file.Files.readString(java.nio.file.Paths.get("src/main/scala", f))
+      assert(!text.contains("org.apache.spark"), s"$f uses Spark")
+    }
+  }
+
+  test("control-file writes replace the file whole and leave no temp sibling") {
+    import scala.jdk.CollectionConverters._
+    import graft.core.Ctl
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = java.nio.file.Files.createTempDirectory("graft_ctl")
+    val f = dir.resolve("ExtractedTables.out").toString
+    Ctl.write(conf, f, "old line\nsecond\n")
+    Ctl.write(conf, f, "new\n")
+    assert(Ctl.readLines(conf, f) == Seq("new"))
+    def visible = java.nio.file.Files.list(dir).iterator().asScala
+      .map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet
+    assert(visible == Set("ExtractedTables.out"), visible)
+    // a temp sibling left by a killed write is neither read nor in the way
+    java.nio.file.Files.writeString(dir.resolve(".ExtractedTables.out.tmp"), "trunc")
+    assert(Ctl.readLines(conf, f) == Seq("new"))
+    Ctl.write(conf, f, "newer\n")
+    assert(Ctl.readLines(conf, f) == Seq("newer"))
+    assert(visible == Set("ExtractedTables.out"), visible)
+  }
+
   test("identity assignment is dense, unique, and order-stable") {
     val df = Tables.load(spark, sfDir, "customer").orderBy("c_custkey")
     val withId = graft.core.Identity.assign(df, "rid", startAt = 100L)

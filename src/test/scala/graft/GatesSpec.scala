@@ -42,10 +42,18 @@ class GatesSpec extends SparkTestBase {
   }
 
   test("evaluate produces the full gate relation") {
-    val df = Gates.evaluate(spark, Map("version" -> "SAP IQ/16.1.04", "readonly" -> "On"),
+    val gates = Gates.evaluate(Map("version" -> "SAP IQ/16.1.04", "readonly" -> "On"),
       Seq.empty, "solo", () => true)
-    val rows = df.collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    val rows = gates.map(g => g.gate -> g.pass).toMap
     assert(rows == Map("mpx_coordinator" -> true, "version" -> true, "readonly" -> true))
+  }
+
+  test("evaluate starts no Spark job and sorts by gate") {
+    var gates = Seq.empty[Gates.GateResult]
+    assert(jobsOf { gates = Gates.evaluate(Map("version" -> "SAP IQ/16.0.110"), mpx, "w1",
+      () => true) } == 0)
+    assert(gates.map(_.gate) == Seq("mpx_coordinator", "readonly", "version"))
+    assert(gates.map(_.pass) == Seq(false, false, false))
   }
 
   test("option audit: full-cardinality intersections + empty-intersection fallthrough") {

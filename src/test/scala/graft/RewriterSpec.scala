@@ -4,7 +4,7 @@ import graft.rewrite.{ReloadFixture, Rewriter}
 
 class RewriterSpec extends SparkTestBase {
 
-  lazy val out = Rewriter.rewrite(spark, ReloadFixture.lines).collect().sortBy(_.line_no)
+  lazy val out = Rewriter.rewrite(ReloadFixture.lines).sortBy(_.line_no)
 
   test("segmentation assigns one stmt_id per go-delimited statement") {
     // fixture has 12 `go` lines → statements 0..11; every line belongs to
@@ -122,8 +122,8 @@ class RewriterSpec extends SparkTestBase {
       "go",
       "CREATE TABLE \"DBA\".\"orders2\" (y INTEGER)",
       "go")
-    val res = Rewriter.rewrite(spark, script,
-      rules = Rewriter.defaultRules ++ assembled).collect().sortBy(_.line_no)
+    val res = Rewriter.rewrite(script,
+      rules = Rewriter.defaultRules ++ assembled).sortBy(_.line_no)
     assert(res.filter(_.text.contains("audit_log")).forall(_.commented))
     assert(res.filter(_.text.contains("v_audit2")).forall(_.commented))
     assert(res.filter(_.text.contains("orders2")).forall(l => !l.commented))
@@ -173,7 +173,6 @@ class RewriterSpec extends SparkTestBase {
 
   test("segmentation invariants hold on randomized scripts (C1 property)") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
-    import spark.implicits._
     val lineGen = Gen.frequency(
       5 -> Gen.alphaNumStr.map(s => s"STATEMENT $s"),
       2 -> Gen.const("go"),
@@ -181,12 +180,9 @@ class RewriterSpec extends SparkTestBase {
       1 -> Gen.const(""),
       1 -> Gen.const("-- comment"))
     val prop = Prop.forAll(Gen.listOfN(40, lineGen)) { lines =>
-      val df = lines.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("line_no", "text")
-      val seg = Rewriter.segment(df)
-        .select("line_no", "stmt_id", "is_go").collect().sortBy(_.getLong(0))
-      val stmtIds = seg.map(_.getLong(1))
-      val gos = seg.map(_.getInt(2))
+      val seg = Rewriter.rewrite(lines).sortBy(_.line_no)
+      val stmtIds = seg.map(_.stmt_id)
+      val gos = lines.map(l => if (l.trim.equalsIgnoreCase("go")) 1 else 0)
       // monotone non-decreasing, steps of exactly the preceding go count
       val monotone = stmtIds.zip(stmtIds.tail).forall { case (a, b) => b == a || b == a + 1 }
       val firstIsZero = stmtIds.headOption.forall(_ == 0)
@@ -196,6 +192,14 @@ class RewriterSpec extends SparkTestBase {
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(50), prop)
     assert(res.passed, res.status.toString)
+  }
+
+  test("--onlyschema writes both scripts without starting a Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_onlyschema").toString
+    assert(jobsOf(graft.cli.Main.onlySchema(spark, dir)) == 0)
+    val (main, fk) = Rewriter.serialize(out.toSeq)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/AutoUpdated_Reload.sql")) == main)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/Foreign_Key_Constraint.sql")) == fk)
   }
 
   test("serialization brackets with sentinels and prefixes comments") {

@@ -11,7 +11,7 @@ class SchemaScriptSpec extends SparkTestBase {
     val script = SchemaScript.render(spark, sfDir)
     // go-delimited: 10 CREATE TABLE + 2 FK statements
     assert(script.count(_.trim.equalsIgnoreCase("go")) == 12)
-    val rewritten = Rewriter.rewrite(spark, script).collect().toSeq
+    val rewritten = Rewriter.rewrite(script)
     // FK statements split out by the rule engine
     assert(rewritten.exists(_.is_fk))
     val created = SchemaScript.replay(spark, rewritten, "graft_replay")

@@ -426,6 +426,8 @@ class TransferCliSpec extends SparkTestBase {
     val e1 = intercept[IllegalArgumentException](
       graft.extract.Extract.extractLob(dup, s"$dir/dup", 9001))
     assert(e1.getMessage.contains("unique"))
+    // the planes ran beside the id check, but no manifest commits them
+    assert(!Files.exists(Paths.get(s"$dir/dup.manifest.json")))
     val withNull = Seq((java.lang.Long.valueOf(1L), Array[Byte](1)),
       (null.asInstanceOf[java.lang.Long], Array[Byte](2))).toDF("id", "payload")
     assertThrows[IllegalArgumentException](
@@ -438,6 +440,23 @@ class TransferCliSpec extends SparkTestBase {
       .orderBy("id").collect()
     assert(back.map(_.getLong(0)).toSeq == Seq(-5L, 3L))
     assert(java.util.Arrays.equals(back(0).getAs[Array[Byte]]("payload"), Array[Byte](7, 8)))
+  }
+
+  test("a re-extract of a LOB table removes stale per-row files and counts what is on disk") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_lobstale").toString
+    val df = Seq((1L, Array[Byte](1)), (2L, null.asInstanceOf[Array[Byte]]), (3L, Array[Byte](3)))
+      .toDF("id", "payload")
+    val lob = Paths.get(s"$dir/t.lob2")
+    Files.createDirectories(lob)
+    Files.write(lob.resolve("9004_row999.2"), Array[Byte](9))
+    assert(graft.extract.Extract.extractLob(df, s"$dir/t", 9004) == 3)
+    val onDisk = Files.list(lob).iterator().asScala.map(_.getFileName.toString)
+      .filterNot(_.endsWith(".crc")).toSet
+    assert(onDisk == Set("9004_row1.2", "9004_row3.2"), onDisk)
+    val m = graft.extract.Extract.readManifest(spark.sparkContext.hadoopConfiguration, s"$dir/t").get
+    assert(m.lobFiles == Map(2 -> onDisk.size.toLong))
   }
 
   test("a lost LOB file fails the load via the manifest's per-column census") {
@@ -538,12 +557,13 @@ class TransferCliSpec extends SparkTestBase {
   }
 
   test("transfer leaves the process-wide FileSystem's checksums enabled") {
+    import scala.jdk.CollectionConverters._
     import org.apache.hadoop.conf.Configuration
     import org.apache.hadoop.fs.Path
     val dir = Files.createTempDirectory("graft_crc")
     val src = dir.resolve("payload.bin")
     Files.write(src, Array[Byte](1, 2, 3, 4))
-    Transfer.copyChunked(src, dir.resolve("up"), 2) // raw plane: checksums off on ITS instance
+    Transfer.copyChunked(src, dir.resolve("up"), 2) // through the cached FS's raw plane
     // the CACHED local FS (what Spark and everyone else shares) must still
     // write .crc siblings — the old code mutated it process-wide
     val cached = new Path(dir.toUri).getFileSystem(new Configuration())
@@ -552,6 +572,9 @@ class TransferCliSpec extends SparkTestBase {
     out.write(42); out.close()
     assert(Files.exists(dir.resolve(".probe.txt.crc")),
       "cached FileSystem stopped writing checksums — transfer mutated the shared instance")
+    // and the copy itself wrote raw bytes: no checksum sibling uploaded
+    assert(Files.list(dir.resolve("up")).iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("payload.bin.part0", "payload.bin.part1"))
   }
 
   test("failed promote rename reports !ok, restores previous data, and clears staging") {
