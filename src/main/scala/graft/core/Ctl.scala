@@ -15,6 +15,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * the stale-batch cleanup guarding the batches+spill==iq_tables
   * invariant — works wherever the manifests do, instead of half-working
   * through java.nio on local paths only.
+  *
+  * Locally the layer is [[LocalFs]]: a write's temp file and its `.crc`
+  * fork no `chmod` (about 5 ms a write with the stock local FileSystem),
+  * and its `rename` refuses an existing target as HDFS does, which
+  * [[write]] handles.
   */
 object Ctl {
 

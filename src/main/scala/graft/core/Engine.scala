@@ -259,6 +259,18 @@ object Engine {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // local files set their mode through java.nio, not a forked `chmod`
+      // per create and mkdirs (see LocalFs)
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
+      // Source.parquet forks a session per call; per-session artifact
+      // isolation would give each fork its own class loader, and the
+      // codegen cache is keyed by loader, so each fork would compile
+      // identical classes again. Nothing here adds session artifacts.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // the cache's default 100 classes are split across its segments; one
+      // migration compiles about 80, so a default-sized cache has evicted
+      // most of them before the next migration needs them
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // events.parquet `ts` in TIMESTAMP(NANOS) reads as raw longs, which
       // Tables.load and EventStream rescale; Spark 4 rejects it otherwise
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -17,6 +17,9 @@ import org.apache.spark.sql.graftbridge.SerializableHadoopConf
   * configuration (shipped via [[SerializableHadoopConf]]), so the sink
   * writes to hdfs:///object-store paths the same as to file:// — executors
   * writing java.nio local paths would scatter files across worker disks.
+  * On `file:` that FileSystem is [[graft.core.LocalFs]], so a cell's file
+  * and its `.crc` cost no forked `chmod` each (about 5 ms a cell with the
+  * stock local FileSystem).
   *
   * rowid() has no Spark equivalent with identical stability; we use the
   * row's own key column (the engine's documented deviation, SURVEY §7.4).

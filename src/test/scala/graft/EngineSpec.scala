@@ -115,6 +115,32 @@ class EngineSpec extends SparkTestBase {
     assert(sitesOf("spark.sql.legacy.parquet.nanosAsLong") == Seq("graft/core/Engine.scala"))
   }
 
+  /** Classes the codegen cache compiled while `f` ran. */
+  private def compiles(f: => Unit): Long = {
+    val before = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  test("a second Source.parquet session reuses the first one's compiled classes") {
+    val check = graft.premigration.Checks.all.find(_.name == "orders_without_lines").get
+    val first = compiles(check.count(graft.sources.Source.parquet(spark, sfDir)))
+    val second = compiles(check.count(graft.sources.Source.parquet(spark, sfDir)))
+    assert(second == 0, s"second session compiled $second classes (first: $first)")
+  }
+
+  test("a second migration of the same tables compiles no class") {
+    def migrate(): Long = compiles {
+      val out = java.nio.file.Files.createTempDirectory("graft_codegen").toString
+      graft.cli.Main.premigration(spark, sfDir, out)
+      graft.cli.Main.fullExtraction(spark, sfDir, out)
+      graft.cli.Main.fullLoad(spark, out)
+    }
+    val first = migrate()
+    val second = migrate()
+    assert(second == 0, s"second run compiled $second classes (first: $first)")
+  }
+
   test("the reload-script rewriter and the gates import nothing from Spark") {
     // script-sized text and control logic runs as plain Scala: a session,
     // plan compiles and jobs cost seconds on a cold JVM for a MB-sized script

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.core.Config
+import graft.core.{Config, Ctl}
 import graft.transfer.Transfer
 
 class TransferCliSpec extends SparkTestBase {
@@ -52,6 +52,14 @@ class TransferCliSpec extends SparkTestBase {
     Files.delete(a.resolve("f3"))
     assert(Transfer.validate(Transfer.listing(spark, a.toString),
       Transfer.listing(spark, b.toString)) == ((2L, 2L, true)))
+    // the listing itself: name-sorted (file_name, size_bytes), no Spark job
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val listed = Transfer.listing(spark, b.toString)
+    assert(listed.schema.map(f => (f.name, f.dataType, f.nullable)) ==
+      Seq(("file_name", StringType, true), ("size_bytes", LongType, false)))
+    var rows = Seq.empty[(String, Long)]
+    assert(jobsOf { rows = listed.collect().map(r => (r.getString(0), r.getLong(1))).toSeq } == 0)
+    assert(rows == Seq(("f1", 2L), ("f2", 1L), ("f4", 3L)))
   }
 
   test("config validation mirrors the reference's gates") {
@@ -554,6 +562,73 @@ class TransferCliSpec extends SparkTestBase {
     val extracted = Seq("nation", "region", "supplier").toDF("t")
     val loaded = (okNames ++ r2.map(_.tableName)).toSeq.toDF("t")
     assert(Loader.unloadedTables(extracted, loaded, "t").count() == 0)
+  }
+
+  /** A path's permission bits, sticky bit included, in octal. */
+  private def mode(p: java.nio.file.Path): String =
+    Integer.toOctalString(Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff)
+
+  test("the session's file: FileSystem is LocalFs and sets the stock local FileSystem's modes") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    def modesOf(fs: FileSystem): Seq[String] = {
+      val dir = Files.createTempDirectory("graft_fsmode")
+      def path(name: String) = new Path(dir.resolve(name).toUri)
+      val out = fs.create(path("f"), true)
+      out.write(1); out.close()
+      fs.mkdirs(path("d"))
+      fs.create(path("g"), true).close()
+      fs.setPermission(path("g"), new FsPermission(Integer.parseInt("600", 8).toShort))
+      fs.mkdirs(path("t"))
+      fs.setPermission(path("t"), new FsPermission(Integer.parseInt("1777", 8).toShort))
+      Seq("f", ".f.crc", "d", "g", "t").map(n => mode(dir.resolve(n)))
+    }
+    val stockConf = new Configuration()
+    stockConf.set("fs.file.impl", classOf[LocalFileSystem].getName)
+    val uri = new java.net.URI("file:///")
+    // newInstance: the FS cache ignores the conf, so a cached instance could
+    // come from whichever code opened a local path first
+    val fs = FileSystem.newInstance(uri, spark.sparkContext.hadoopConfiguration)
+    val stock = FileSystem.newInstance(uri, stockConf)
+    try {
+      assert(fs.getClass == classOf[graft.core.LocalFs] && fs.isInstanceOf[LocalFileSystem])
+      assert(stock.getClass == classOf[LocalFileSystem])
+      val expected = Seq("644", "644", "755", "600", "1777")
+      assert(modesOf(stock) == expected)
+      assert(modesOf(fs) == expected)
+    } finally { fs.close(); stock.close() }
+  }
+
+  test("LocalFs refuses a rename onto an existing file and keeps both files") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val fs = FileSystem.newInstance(new java.net.URI("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    try {
+      val dir = Files.createTempDirectory("graft_fsrename")
+      Files.writeString(dir.resolve("a"), "a")
+      Files.writeString(dir.resolve("b"), "b")
+      def path(name: String) = new Path(dir.resolve(name).toUri)
+      assert(!fs.rename(path("a"), path("b")))
+      assert(Files.readString(dir.resolve("a")) == "a")
+      assert(Files.readString(dir.resolve("b")) == "b")
+      assert(fs.rename(path("a"), path("c")))
+      assert(Files.readString(dir.resolve("c")) == "a" && !Files.exists(dir.resolve("a")))
+    } finally fs.close()
+  }
+
+  test("extraction and load leave every file rw-r--r-- and every dir rwxr-xr-x") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft_modes")
+    val out = root.resolve("out")
+    Ctl.mkdirs(spark.sparkContext.hadoopConfiguration, out.toString)
+    graft.cli.Main.fullExtraction(spark, sfDir, out.toString)
+    graft.cli.Main.fullLoad(spark, out.toString)
+    val entries = Files.walk(out).iterator().asScala.toSeq
+    assert(entries.exists(_.getFileName.toString.endsWith(".crc")))
+    val odd = entries.filterNot(p => mode(p) == (if (Files.isDirectory(p)) "755" else "644"))
+      .map(p => s"${mode(p)} ${root.relativize(p)}")
+    assert(odd.isEmpty, odd.mkString("\n"))
   }
 
   test("transfer leaves the process-wide FileSystem's checksums enabled") {
