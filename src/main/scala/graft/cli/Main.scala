@@ -2,6 +2,7 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 
 import graft.core.{Ctl, Engine, Workers}
@@ -24,21 +25,30 @@ import graft.sources.{Jdbc, Source}
   * Usage: graft.cli.Main --premigration|--onlyschema|--onlydata|
   *                       --fullextraction|--fullload
   *                       [--sfdir DIR] [--out DIR] [--batchsize GB]
+  *                       [--jdbc URL]
   */
 object Main {
 
+  private val PhaseFlags =
+    Set("--premigration", "--onlyschema", "--onlydata", "--fullextraction", "--fullload")
+  private val ValueFlags = Set("--sfdir", "--out", "--batchsize", "--jdbc")
+
   def main(args: Array[String]): Unit = {
     val flags = args.filter(_.startsWith("--")).toSet
+    val unknown = flags -- PhaseFlags -- ValueFlags
+    require(unknown.isEmpty, s"unknown flag: ${unknown.toSeq.sorted.mkString(", ")}")
     // the reference's mutual-exclusion matrix (migration.py:103-107):
     // --onlyschema / --onlydata / --fullextraction are exclusive unload
     // modes; premigration and load are the other phases of the unified CLI
-    val phases = flags.intersect(Set("--premigration", "--onlyschema",
-      "--onlydata", "--fullextraction", "--fullload"))
+    val phases = flags.intersect(PhaseFlags)
     require(phases.size == 1,
       "exactly one of --premigration | --onlyschema | --onlydata | " +
         "--fullextraction | --fullload is required (they are mutually exclusive)")
-    def opt(name: String, default: String): String =
-      args.sliding(2).collectFirst { case Array(`name`, v) => v }.getOrElse(default)
+    def opt(name: String, default: => String): String = args.indexOf(name) match {
+      case -1 => default
+      case i if i + 1 < args.length && !args(i + 1).startsWith("--") => args(i + 1)
+      case _ => throw new IllegalArgumentException(s"$name needs a value")
+    }
     val sfDir = opt("--sfdir", "/root/testdata/sf0.001")
     val out = opt("--out", Files.createTempDirectory("graft_run").toString)
 
@@ -47,29 +57,39 @@ object Main {
     // load phase writes back through it (the "Spark SQL + JDBC" approach
     // end-to-end)
     val jdbc = opt("--jdbc", "")
-    // shuffle width, codec and staging policy follow the parquet tier read
-    val spark = Engine.session("graft-cli", dataDir = if (jdbc.isEmpty) Some(sfDir) else None)
-    spark.sparkContext.setLogLevel("WARN")
-    // the out dir is created through the SESSION's Hadoop configuration so
-    // spark.hadoop.* settings (object-store credentials and the like) apply
-    // to this mkdirs the same as to every later control-file write — a bare
-    // new Configuration() would fail on an s3a:// out dir at the first step
-    Ctl.mkdirs(spark.sparkContext.hadoopConfiguration, out)
     // batch size arrives in GB like the reference's Batch_Size_GB and goes
     // through the same config validation (0 = batching off, else >= 100)
     val batchGb = opt("--batchsize", "0").toInt
     val cfg = graft.core.Config.MigrationConfig("/", batchSizeGb = batchGb)
     val capBytes = cfg.batchSizeGb.toLong << 30
-    try phases.head match {
-      case "--premigration" => premigration(spark, sfDir, out, jdbc)
-      case "--onlyschema" => onlySchema(spark, out)
-      case "--onlydata" => withSource(spark, sfDir, jdbc)(onlyData(spark, _, out, capBytes))
-      case "--fullextraction" =>
-        onlySchema(spark, out)
-        withSource(spark, sfDir, jdbc)(onlyData(spark, _, out, capBytes))
-      case "--fullload" =>
-        if (jdbc.nonEmpty) fullLoadJdbc(spark, out, jdbc) else fullLoad(spark, out)
-    } finally spark.stop()
+    // the schema unload reads and writes scripts only, so it builds no
+    // session; its Hadoop configuration carries the same spark.hadoop.*
+    // settings a session's would (object-store credentials and the like)
+    if (phases.head == "--onlyschema") {
+      val conf = Engine.hadoopConf()
+      Ctl.mkdirs(conf, out)
+      onlySchema(conf, out)
+    } else {
+      // shuffle width, codec and staging policy follow the parquet tier read
+      val spark = Engine.session("graft-cli", dataDir = if (jdbc.isEmpty) Some(sfDir) else None)
+      spark.sparkContext.setLogLevel("WARN")
+      try {
+        // the out dir is created through the SESSION's Hadoop configuration
+        // so spark.hadoop.* settings apply to this mkdirs the same as to
+        // every later control-file write — a bare new Configuration() would
+        // fail on an s3a:// out dir at the first step
+        Ctl.mkdirs(spark.sparkContext.hadoopConfiguration, out)
+        phases.head match {
+          case "--premigration" => premigration(spark, sfDir, out, jdbc)
+          case "--onlydata" => withSource(spark, sfDir, jdbc)(onlyData(spark, _, out, capBytes))
+          case "--fullextraction" =>
+            onlySchema(spark, out)
+            withSource(spark, sfDir, jdbc)(onlyData(spark, _, out, capBytes))
+          case "--fullload" =>
+            if (jdbc.nonEmpty) fullLoadJdbc(spark, out, jdbc) else fullLoad(spark, out)
+        }
+      } finally spark.stop()
+    }
   }
 
   /** The server a phase reads: the live one at `jdbc` when it is set, else
@@ -105,11 +125,14 @@ object Main {
       s"$out/pre_migration.out", report)
   }
 
-  /** Schema unload only (`--onlyschema y`, migration.py:237-238): rewrite
-    * the reload script, splitting FK DDL out. */
-  def onlySchema(spark: SparkSession, out: String): Unit = {
+  /** Schema unload only (`--onlyschema y`, migration.py:237-238) through
+    * the session's Hadoop configuration. */
+  def onlySchema(spark: SparkSession, out: String): Unit =
+    onlySchema(spark.sparkContext.hadoopConfiguration, out)
+
+  /** Rewrite the reload script into `out`, splitting FK DDL out. */
+  def onlySchema(conf: Configuration, out: String): Unit = {
     val (main, fk) = Rewriter.serialize(Rewriter.rewrite(ReloadFixture.lines))
-    val conf = spark.sparkContext.hadoopConfiguration
     Ctl.write(conf, s"$out/AutoUpdated_Reload.sql", main)
     Ctl.write(conf, s"$out/Foreign_Key_Constraint.sql", fk)
   }
@@ -239,9 +262,7 @@ object Main {
     // ok-loaded tables are skipped, previously FAILED tables retry FIRST
     val loadedPath = s"$out/HDL_LoadedTables.out"
     val loadedOk: Set[String] =
-      if (Ctl.exists(conf, loadedPath))
-        Ctl.readLines(conf, loadedPath)
-          .filter(_.endsWith(",Y")).map(_.split(',')(0).stripPrefix("graft.")).toSet
+      if (Ctl.exists(conf, loadedPath)) Loader.loadedOk(Ctl.readLines(conf, loadedPath))
       else Set.empty
     // expected counts come from the extract phase's control file, NOT a
     // source recount (load_schema_and_data.py:709-735), and the DATA comes
@@ -270,8 +291,13 @@ object Main {
     val keptOk = loadedOk.filterNot(doneNames).map(n => s"graft.$n,-,Y")
     Ctl.write(conf, loadedPath,
       (results.map(r => s"graft.${r.tableName},${r.loaded},${if (r.ok) "Y" else "N"}")
-        ++ empties.filterNot(e => loadedOk.contains(e._1)).map(e => s"graft.${e._1},0,Y")
+        ++ empties.map(e => s"graft.${e._1},0,Y")
         ++ keptOk).mkString("", "\n", "\n"))
     require(results.forall(_.ok), "load verification failed for some tables")
+    // final reconciliation (load_schema_and_data.py:776-820): every table
+    // extracted has a Y line in the record just written
+    val unloaded = Loader.unloadedTables(counts.map(_._1), Ctl.readLines(conf, loadedPath))
+    require(unloaded.isEmpty,
+      s"load reconciliation failed: no Y record for ${unloaded.mkString(", ")}")
   }
 }

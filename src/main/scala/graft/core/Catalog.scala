@@ -1,10 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-/** System-catalog mirror: SYSTABLE / SYSUSER / SYSCOLUMN-shaped DataFrames
-  * derived deterministically from the data tables' parquet schemas.
+/** System-catalog mirror: SYSTABLE-shaped table metadata and SYSCOLUMN
+  * widths derived deterministically from the data tables' parquet schemas.
   *
   * The reference drives every phase off SAP IQ's catalog (SYS.SYSTABLE ⋈
   * SYSUSER ⋈ SYSIQTAB at `/root/reference/Migration/migration.py:1691`,
@@ -27,8 +26,6 @@ object Catalog {
   }
 
   final case class TableMeta(tableId: Int, tableName: String, owner: String)
-  final case class ColumnMeta(tableId: Int, columnId: Int, columnName: String,
-      typeName: String, width: Int, nullable: Boolean)
 
   def tableMetas: Seq[TableMeta] =
     Tables.names.zipWithIndex.map { case (n, i) => TableMeta(1000 + i, n, "graft") }
@@ -47,29 +44,6 @@ object Catalog {
       .filterNot(Tables.names.contains).sorted.toSeq
     (Tables.names ++ extras).zipWithIndex
       .map { case (n, i) => TableMeta(1000 + i, n, "graft") }
-  }
-
-  def columnMetas(spark: SparkSession, sfDir: String): Seq[ColumnMeta] =
-    tableMetas(sfDir).flatMap { tm =>
-      val schema = Tables.load(spark, sfDir, tm.tableName).schema
-      schema.fields.zipWithIndex.map { case (f, i) =>
-        ColumnMeta(tm.tableId, i + 1, f.name, f.dataType.simpleString, widthOf(f.dataType), f.nullable)
-      }
-    }
-
-  /** SYSTABLE analog. */
-  def sysTable(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    tableMetas.map(t => (t.tableId, t.tableName, t.owner, "BASE", "IQ"))
-      .toDF("table_id", "table_name", "owner", "table_type", "server_type")
-  }
-
-  /** SYSCOLUMN analog, with declared widths. */
-  def sysColumn(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    columnMetas(spark, sfDir)
-      .map(c => (c.tableId, c.columnId, c.columnName, c.typeName, c.width, if (c.nullable) "Y" else "N"))
-      .toDF("table_id", "column_id", "column_name", "domain_name", "width", "nulls")
   }
 
   /** Declared row width (sum of column widths) per table — computable without

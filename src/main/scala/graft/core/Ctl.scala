@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 
+import scala.io.Codec
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -40,10 +42,13 @@ object Ctl {
       throw new java.io.IOException(s"could not rename $tmp to $p")
   }
 
-  def readLines(conf: Configuration, path: String): Seq[String] = {
+  /** Lines of `path`, decoded by `codec` (UTF-8, failing on malformed
+    * input, unless the caller picks another). */
+  def readLines(conf: Configuration, path: String,
+      codec: Codec = Codec.UTF8): Seq[String] = {
     val p = new Path(path)
     val in = fsOf(p, conf).open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+    try scala.io.Source.fromInputStream(in)(codec).getLines().toList
     finally in.close()
   }
 

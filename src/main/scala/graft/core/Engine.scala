@@ -1,6 +1,9 @@
 package graft.core
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Central SparkSession factory for the engine.
   *
@@ -229,6 +232,19 @@ object Engine {
         s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-${sp.sparkContext.applicationId}")
   }
 
+  /** The `spark.hadoop.*` entries of every session, and of [[hadoopConf]]. */
+  private val HadoopSettings: Map[String, String] = Map(
+    // local files set their mode through java.nio, not a forked `chmod`
+    // per create and mkdirs (see LocalFs)
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName)
+
+  /** The Hadoop configuration a session from [[session]] carries, built
+    * without one: Spark's own conversion of a SparkConf (the JVM's `spark.*`
+    * properties plus [[HadoopSettings]]) into a Configuration. For a phase
+    * that reads and writes only control files and scripts. */
+  def hadoopConf(): Configuration =
+    GraftBridge.hadoopConf(new SparkConf().setAll(HadoopSettings))
+
   /** The engine's only session builder: the CLI, Bench, Verify, the tools
     * and the test suite all get their physical policy here, so correctness
     * and performance are checked under the same config. */
@@ -259,9 +275,7 @@ object Engine {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // local files set their mode through java.nio, not a forked `chmod`
-      // per create and mkdirs (see LocalFs)
-      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
+      .config(HadoopSettings)
       // Source.parquet forks a session per call; per-session artifact
       // isolation would give each fork its own class loader, and the
       // codegen cache is keyed by loader, so each fork would compile

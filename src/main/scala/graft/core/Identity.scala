@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
 
 /** Identity/autoincrement surrogate (SURVEY §1.2): the reference detects
@@ -24,10 +23,4 @@ object Identity {
     }
     df.sparkSession.createDataFrame(rdd, schema)
   }
-
-  /** Identity columns flagged in the catalog (metadata-driven, like the
-    * reference's SYSCOLUMN scan). */
-  def identityColumns(sysColumn: DataFrame): DataFrame =
-    sysColumn.filter(col("column_name").endsWith("_id") || col("column_id") === 1)
-      .select("table_id", "column_name")
 }

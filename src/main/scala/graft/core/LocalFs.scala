@@ -19,9 +19,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * Hadoop's FileSystem cache is keyed by scheme, authority and user, not by
   * the configuration, so the JVM's first `file:` instance decides for every
-  * later `FileSystem.get`: a session from [[Engine.session]] must exist
-  * before anything else opens a local path, as the CLI's `main` builds it
-  * first.
+  * later `FileSystem.get`: a session from [[Engine.session]], or a
+  * configuration from [[Engine.hadoopConf]], must open the first local path,
+  * as the CLI's `main` does.
   *
   * It keeps the one rule of the class it replaces, hive-exec's
   * `ProxyLocalFileSystem`: `rename` onto an existing file returns false and

@@ -20,7 +20,4 @@ final case class QueryDef(
 object QueryDef {
   def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(oracle))
-
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

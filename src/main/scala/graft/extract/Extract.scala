@@ -37,10 +37,9 @@ object Extract {
       WorkItem(t, rows, rows * Catalog.rowWidth(src.schema(t)), 1000 + i)
     }.sortBy(_.name)
 
-  sealed trait Format { def ext: String }
-  case object GzipText extends Format { val ext = "gz" }
-  case object Binary extends Format { val ext = "parquet" }
-  case object PlainText extends Format { val ext = "txt" }
+  sealed trait Format
+  case object GzipText extends Format
+  case object Binary extends Format
 
   /** Longest processing time first: size descending, ties by name. */
   def lptOrder(items: Seq[WorkItem]): Seq[WorkItem] = items.sortBy(i => (-i.sizeBytes, i.name))
@@ -84,16 +83,9 @@ object Extract {
     (batches.map(_.toSeq).toSeq, spill)
   }
 
-  /** Format choice (migration.py:2136-2208): LOB-bearing tables go through
-    * quoted text (+ per-row LOB files), old versions uncompressed, else
-    * gzip text; our canonical binary interchange is parquet. Columns CSV
-    * can't carry (arrays, binaries) force the binary path — the analog of
-    * the reference's LOB branch. */
-  def chooseFormat(hasLob: Boolean, compressedSupported: Boolean = true): Format =
-    if (hasLob) PlainText
-    else if (!compressedSupported) PlainText
-    else GzipText
-
+  /** Format choice (migration.py:2136-2208): gzip text, with parquet as
+    * the binary interchange for columns CSV can't carry (arrays, maps,
+    * structs, binaries) — the analog of the reference's LOB branch. */
   def formatFor(schema: org.apache.spark.sql.types.StructType): Format = {
     import org.apache.spark.sql.types._
     val complex = schema.fields.exists(f => f.dataType match {
@@ -348,9 +340,4 @@ object Extract {
   def readExtracted(spark: SparkSession, dir: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).option("header", "true")
       .option("timestampFormat", CsvTimestampFormat).csv(dir)
-
-  /** Resume reconciliation (migration.py:1977,2675): work items not yet in
-    * the extracted checkpoint — a left-anti join, never a driver loop. */
-  def pendingWork(listed: DataFrame, extracted: DataFrame, key: String): DataFrame =
-    listed.join(extracted, Seq(key), "left_anti")
 }

@@ -179,8 +179,16 @@ object Loader {
     results
   }
 
-  /** Final reconciliation (load_schema_and_data.py:776-820): extracted vs
-    * loaded anti-join; empty result is the all-clear invariant. */
-  def unloadedTables(extracted: DataFrame, loaded: DataFrame, key: String): DataFrame =
-    extracted.join(loaded, Seq(key), "left_anti")
+  /** Tables with a `Y` line in `HDL_LoadedTables.out` (lines
+    * `owner.table,rows,Y|N`). */
+  def loadedOk(lines: Seq[String]): Set[String] =
+    lines.filter(_.endsWith(",Y")).map(_.split(',')(0).stripPrefix("graft.")).toSet
+
+  /** Final reconciliation (load_schema_and_data.py:776-820): the extracted
+    * tables with no `Y` line among `loadedLines`, in extraction order. Empty
+    * is the all-clear. */
+  def unloadedTables(extracted: Seq[String], loadedLines: Seq[String]): Seq[String] = {
+    val ok = loadedOk(loadedLines)
+    extracted.filterNot(ok).distinct
+  }
 }

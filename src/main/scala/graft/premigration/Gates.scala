@@ -20,37 +20,36 @@ object Gates {
 
   /** migration.py:316-336: single-node → pass; multiplex → must be
     * connected to the coordinator; active included writers/readers add to
-    * the parallel-extract node count. */
-  def mpxGate(nodes: Seq[MpxNode], connectedServer: String): (GateResult, Int) = {
+    * the parallel-extract node count, which the detail reports. */
+  def mpxGate(nodes: Seq[MpxNode], connectedServer: String): GateResult = {
     if (nodes.isEmpty)
-      (GateResult("mpx_coordinator", pass = true, "single-node (simplex)"), 0)
+      GateResult("mpx_coordinator", pass = true, "single-node (simplex)")
     else {
       val coord = nodes.find(_.role == "coordinator").map(_.serverName)
       val secondaries = nodes.count(n =>
         n.status == "included" && n.incState == "active" &&
           (n.role == "writer" || n.role == "reader"))
       if (!coord.contains(connectedServer))
-        (GateResult("mpx_coordinator", pass = false,
-          s"connected to $connectedServer, coordinator is ${coord.getOrElse("?")}"), 0)
+        GateResult("mpx_coordinator", pass = false,
+          s"connected to $connectedServer, coordinator is ${coord.getOrElse("?")}")
       else
-        (GateResult("mpx_coordinator", pass = true,
-          s"coordinator ok, $secondaries active secondary nodes"), secondaries)
+        GateResult("mpx_coordinator", pass = true,
+          s"coordinator ok, $secondaries active secondary nodes")
     }
   }
 
   /** migration.py:352-378: 16.0 is rejected outright; 16.1.01 extracts
-    * uncompressed without parallel gzip; anything newer compresses.
-    * Returns (gate, compressedSupported) — the flag
-    * [[graft.extract.Extract.chooseFormat]] consumes. */
-  def versionGate(version: String): (GateResult, Boolean) =
+    * uncompressed without parallel gzip; anything newer compresses. The
+    * detail names the compression decision. */
+  def versionGate(version: String): GateResult =
     if (version.contains("SAP IQ/16.0."))
-      (GateResult("version", pass = false,
-        "16.0 is not supported (no parallelized compressed extraction)"), false)
+      GateResult("version", pass = false,
+        "16.0 is not supported (no parallelized compressed extraction)")
     else if (version.contains("SAP IQ/16.1.01"))
-      (GateResult("version", pass = true,
-        "16.1.01: text/binary extraction without compression"), false)
+      GateResult("version", pass = true,
+        "16.1.01: text/binary extraction without compression")
     else
-      (GateResult("version", pass = true, "compressed parallel extraction"), true)
+      GateResult("version", pass = true, "compressed parallel extraction")
 
   /** migration.py:383-414: if db_property('readonly') is On → proceed; if
     * Off, probe a write — a probe REFUSED by the engine (readonly dbspaces)
@@ -76,10 +75,8 @@ object Gates {
       nodes: Seq[MpxNode], connectedServer: String,
       probeWriteSucceeds: () => Boolean,
       forceWriteMode: Boolean = false): Seq[GateResult] = {
-    val (mpx, _) = mpxGate(nodes, connectedServer)
-    val (ver, _) = versionGate(props.getOrElse("version", ""))
-    val ro = readonlyGate(props.getOrElse("readonly", "Off"),
-      probeWriteSucceeds, forceWriteMode)
-    Seq(mpx, ver, ro).sortBy(_.gate)
+    Seq(mpxGate(nodes, connectedServer), versionGate(props.getOrElse("version", "")),
+      readonlyGate(props.getOrElse("readonly", "Off"), probeWriteSucceeds, forceWriteMode))
+      .sortBy(_.gate)
   }
 }

@@ -169,7 +169,7 @@ object Migration {
            |SELECT DISTINCT pattern, action, pat1, pat2 FROM rules
            |ORDER BY pattern, action, pat1, pat2""".stripMargin
       }) { (s, _) =>
-      graft.rewrite.RuleAssembly.fixtureRelation(s)
+      s.createDataFrame(graft.rewrite.RuleAssembly.fixture)
         .orderBy("pattern", "action", "pat1", "pat2")
     },
 

@@ -1,9 +1,8 @@
 package graft.rewrite
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.util.Locale
 
-import graft.core.Closure
+import scala.annotation.tailrec
 
 /** Catalog-driven artifact-rule assembly (C2's second half).
   *
@@ -15,26 +14,53 @@ import graft.core.Closure
   * 777-786`) so a view over a commented table — at any depth — is commented
   * too, plus a fixed list of `call dbo.sa_*` entries (`720-728`).
   *
-  * Spark shape: each catalog query is a join over the SYSTABLE/SYSUSER/
-  * SYSINDEX/SYSTRIGGER/SYSPROCEDURE/SYSDEPENDENCY mirrors, the multilevel
-  * view walk is [[graft.core.Closure.transitiveClosure]] (path-doubling to a
-  * fixpoint instead of the reference's one-edge-per-roundtrip cursor loop),
-  * and the result is one relation (pattern, action, pat1, pat2) — collected
-  * driver-side only to feed the rewriter's broadcast rule list (catalog-
-  * sized control data, like the reference's in-memory artifact list).
+  * The catalog rows are catalog-sized control data, so the joins run as
+  * plain Scala over them on the driver, like the reference's cursor loops
+  * and in-memory artifact list; the multilevel view walk is a reachability
+  * fixpoint over the dependency edges.
   */
 object RuleAssembly {
 
-  /** `'_sap\_%' ESCAPE '\'` — leading `_` is a single-char wildcard, the
-    * middle `\_` a literal underscore (migration.py:736); Column.like uses
-    * `\` as its escape char, same machinery as p4_like_escape. */
-  private def sapOwnerPred = lower(col("user_name")).like("_sap\\_%")
+  /** One assembled rule, with `'NULL'` placeholders like DB_Artifacts.list. */
+  final case class ArtifactRule(pattern: String, action: String, pat1: String, pat2: String)
 
-  private def rule(pattern: org.apache.spark.sql.Column, pat1: String, pat2: org.apache.spark.sql.Column) =
-    struct(pattern.as("pattern"), lit("COMMENT").as("action"),
-      lit(pat1).as("pat1"), pat2.as("pat2"))
+  private def comment(pattern: String, pat1: String, pat2: String) =
+    ArtifactRule(pattern, "COMMENT", pat1, pat2)
 
-  /** Assemble the rule relation from catalog mirrors.
+  private def isDbo(user: String): Boolean = user.toLowerCase(Locale.ROOT) == "dbo"
+
+  /** `lower(user_name) LIKE '_sap\_%' ESCAPE '\'` (migration.py:736): any
+    * one character, then a literal `sap_`. */
+  private def isSap(user: String): Boolean = {
+    val u = user.toLowerCase(Locale.ROOT)
+    u.nonEmpty && u.startsWith("sap_", u.offsetByCodePoints(0, 1))
+  }
+
+  /** `name LIKE '<prefix>_%'`: the prefix, then at least one character. The
+    * `_` is a wildcard, so `sap_loader` matches `'sa_%'`. Case-sensitive. */
+  private def likePrefixAndOne(name: String, prefix: String): Boolean =
+    name.startsWith(prefix) && name.length > prefix.length
+
+  /** Ids of the objects that depend on one of `roots`, directly or through
+    * other dependents, over (child, parent) edges. A root is in the result
+    * only if a cycle leads back to it; a cycle ends the walk, since an id is
+    * expanded once. */
+  private def dependents(deps: Seq[(Int, Int)], roots: Set[Int]): Set[Int] = {
+    val children = deps.groupMap(_._2)(_._1)
+    @tailrec def walk(frontier: Set[Int], seen: Set[Int]): Set[Int] = {
+      val next = frontier.flatMap(children.getOrElse(_, Nil)) -- seen
+      if (next.isEmpty) seen else walk(next, seen ++ next)
+    }
+    walk(roots, Set.empty)
+  }
+
+  /** Fixed `call dbo.sa_*` list (migration.py:720-728). */
+  private val CallRules = Seq(
+    "sa_reset_identity", "sa_make_object", "sa_sync", "sa_sync_sub",
+    "sa_internal_load_cost_model", "sa_internal_system_task",
+    "sa_refresh_text_indexes", "sa_refresh_materialized_views")
+
+  /** Assemble the rules from catalog rows.
     *
     * @param users    (user_id, user_name)
     * @param tables   (table_id, object_id, table_name, creator, table_type, server_type)
@@ -43,110 +69,79 @@ object RuleAssembly {
     * @param procs    (proc_name, creator)
     * @param objects  (object_id, obj_name) — tables AND views
     * @param deps     (child, parent) — dependent object over referenced object
-    * @return distinct (pattern, action, pat1, pat2), all strings,
-    *         'NULL' placeholders like DB_Artifacts.list
+    * @return the distinct rules, in first-derived order
     */
-  def assemble(users: DataFrame, tables: DataFrame, indexes: DataFrame,
-      triggers: DataFrame, procs: DataFrame, objects: DataFrame,
-      deps: DataFrame): DataFrame = {
+  def assemble(users: Seq[(Int, String)],
+      tables: Seq[(Int, Int, String, Int, String, String)],
+      indexes: Seq[(String, Int)], triggers: Seq[(String, Int)],
+      procs: Seq[(String, Int)], objects: Seq[(Int, String)],
+      deps: Seq[(Int, Int)]): Seq[ArtifactRule] = {
+    val userNames = users.groupMap(_._1)(_._2)
 
-    def ownedRules(ownerPred: org.apache.spark.sql.Column): DataFrame = {
-      val owned = tables.join(users, col("creator") === col("user_id"))
-        .filter(ownerPred &&
-          col("table_type") === "BASE" && col("server_type") === "IQ")
-
+    def ownedRules(owner: String => Boolean): Seq[ArtifactRule] = {
+      // (table_id, object_id, table_name, user_name) of the owner's IQ tables
+      val owned = for {
+        (tid, oid, name, creator, tableType, serverType) <- tables
+        if tableType == "BASE" && serverType == "IQ"
+        user <- userNames.getOrElse(creator, Nil) if owner(user)
+      } yield (tid, oid, name, user)
+      val ownedIds = owned.map(_._1).toSet
       // tables: (name, COMMENT, CREATE TABLE|CREATE procedure, owner)
-      val tableRules = owned.select(explode(array(
-        rule(col("table_name"), "CREATE TABLE", col("user_name")),
-        rule(col("table_name"), "CREATE procedure", col("user_name")))).as("r"))
-
+      val tableRules = owned.flatMap { case (_, _, name, user) =>
+        Seq(comment(name, "CREATE TABLE", user), comment(name, "CREATE procedure", user))
+      }
       // indexes on owned tables (migration.py:663-667)
-      val idxRules = indexes.join(owned.select("table_id"), Seq("table_id"))
-        .select(rule(col("index_name"), "CREATE", lit("INDEX")).as("r"))
-
+      val idxRules = indexes.collect {
+        case (ix, tid) if ownedIds(tid) => comment(ix, "CREATE", "INDEX")
+      }
       // triggers on owned tables (migration.py:669-675)
-      val trgRules = triggers.join(owned.select("table_id"), Seq("table_id"))
-        .select(explode(array(
-          rule(col("trigger_name"), "CREATE TRIGGER", lit("NULL")),
-          rule(col("trigger_name"), "COMMENT ON", lit("TRIGGER")),
-          rule(col("trigger_name"), "COMMENT TO PRESERVE FORMAT ON", lit("TRIGGER")))).as("r"))
-
-      // multilevel view dependents of owned tables (migration.py:677-698):
-      // transitive closure over SYSDEPENDENCY, then name resolution
-      val closure = Closure.transitiveClosure(deps)
-      val viewNames = closure
-        .join(owned.select(col("object_id").as("parent")), Seq("parent"))
-        .select(col("child").as("object_id")).distinct()
-        .join(objects, Seq("object_id"))
-      val viewRules = viewNames.select(explode(array(
-        rule(col("obj_name"), "CREATE VIEW", lit("NULL")),
-        rule(col("obj_name"), "COMMENT ON", lit("VIEW")),
-        rule(col("obj_name"), "COMMENT TO PRESERVE FORMAT ON", lit("VIEW")))).as("r"))
-
-      tableRules.unionByName(idxRules).unionByName(trgRules).unionByName(viewRules)
+      val trgRules = triggers.filter(t => ownedIds(t._2)).flatMap { case (trg, _) =>
+        Seq(comment(trg, "CREATE TRIGGER", "NULL"), comment(trg, "COMMENT ON", "TRIGGER"),
+          comment(trg, "COMMENT TO PRESERVE FORMAT ON", "TRIGGER"))
+      }
+      // multilevel view dependents of owned tables (migration.py:677-698)
+      val views = dependents(deps, owned.map(_._2).toSet)
+      val viewRules = objects.filter(o => views(o._1)).flatMap { case (_, name) =>
+        Seq(comment(name, "CREATE VIEW", "NULL"), comment(name, "COMMENT ON", "VIEW"),
+          comment(name, "COMMENT TO PRESERVE FORMAT ON", "VIEW"))
+      }
+      tableRules ++ idxRules ++ trgRules ++ viewRules
     }
 
     // procedures/functions by owner (migration.py:700-709), sp_/sa_ excluded
-    def ownedProcRules(ownerPred: org.apache.spark.sql.Column): DataFrame =
-      procs.join(users, col("creator") === col("user_id"))
-        .filter(ownerPred &&
-          !col("proc_name").like("sp_%") && !col("proc_name").like("sa_%"))
-        .select(explode(array(
-          rule(col("proc_name"), "CREATE procedure", lit("NULL")),
-          rule(col("proc_name"), "COMMENT ON", lit("Procedure")),
-          rule(col("proc_name"), "COMMENT TO PRESERVE FORMAT ON", lit("Procedure")),
-          rule(col("proc_name"), "CREATE FUNCTION", lit("NULL")))).as("r"))
-
-    val isDbo = lower(col("user_name")) === "dbo"
-    val isSap = sapOwnerPred
+    def ownedProcRules(owner: String => Boolean): Seq[ArtifactRule] =
+      procs.filter { case (proc, creator) =>
+        !likePrefixAndOne(proc, "sp") && !likePrefixAndOne(proc, "sa") &&
+          userNames.getOrElse(creator, Nil).exists(owner)
+      }.flatMap { case (proc, _) =>
+        Seq(comment(proc, "CREATE procedure", "NULL"), comment(proc, "COMMENT ON", "Procedure"),
+          comment(proc, "COMMENT TO PRESERVE FORMAT ON", "Procedure"),
+          comment(proc, "CREATE FUNCTION", "NULL"))
+      }
 
     // _sap_% users themselves are commented out as GRANT CONNECT entries
     // (migration.py:736-741)
-    val sapUserRules = users.filter(isSap)
-      .select(rule(col("user_name"), "GRANT CONNECT", lit("NULL")).as("r"))
-
-    // fixed `call dbo.sa_*` list (migration.py:720-728)
-    val spark = users.sparkSession
-    import spark.implicits._
-    val callRules = Seq(
-      "sa_reset_identity", "sa_make_object", "sa_sync", "sa_sync_sub",
-      "sa_internal_load_cost_model", "sa_internal_system_task",
-      "sa_refresh_text_indexes", "sa_refresh_materialized_views")
-      .toDF("p1")
-      .select(struct(lit("call").as("pattern"), lit("COMMENT").as("action"),
-        col("p1").as("pat1"), lit("dbo").as("pat2")).as("r"))
-
-    ownedRules(isDbo).unionByName(ownedProcRules(isDbo))
-      .unionByName(ownedRules(isSap)).unionByName(ownedProcRules(isSap))
-      .unionByName(sapUserRules).unionByName(callRules)
-      .select("r.pattern", "r.action", "r.pat1", "r.pat2")
-      .distinct()
-  }
-
-  /** Rule relation over the deterministic catalog fixture. */
-  def fixtureRelation(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val f = CatalogFixture
-    assemble(
-      f.users.toDF("user_id", "user_name"),
-      f.tables.toDF("table_id", "object_id", "table_name", "creator", "table_type", "server_type"),
-      f.indexes.toDF("index_name", "table_id"),
-      f.triggers.toDF("trigger_name", "table_id"),
-      f.procs.toDF("proc_name", "creator"),
-      f.objects.toDF("object_id", "obj_name"),
-      f.deps.toDF("child", "parent"))
-  }
-
-  /** Collect an assembled relation into rewriter rules (catalog-sized
-    * control data — driver-side by design, like the reference's list). */
-  def toRules(relation: DataFrame): Seq[Rewriter.Rule] =
-    relation.collect().toSeq.map { r =>
-      Rewriter.Rule(
-        r.getString(0),
-        Option(r.getString(2)).filter(p => p != "NULL" && p.nonEmpty),
-        Option(r.getString(3)).filter(p => p != "NULL" && p.nonEmpty),
-        banner = s"catalog artifact: ${r.getString(0)}")
+    val sapUserRules = users.collect {
+      case (_, user) if isSap(user) => comment(user, "GRANT CONNECT", "NULL")
     }
+
+    (ownedRules(isDbo) ++ ownedProcRules(isDbo) ++ ownedRules(isSap) ++
+      ownedProcRules(isSap) ++ sapUserRules ++ CallRules.map(comment("call", _, "dbo")))
+      .distinct
+  }
+
+  /** Rules over the deterministic catalog fixture. */
+  def fixture: Seq[ArtifactRule] = {
+    val f = CatalogFixture
+    assemble(f.users, f.tables, f.indexes, f.triggers, f.procs, f.objects, f.deps)
+  }
+
+  /** Assembled rules as rewriter rules, `'NULL'` placeholders dropped. */
+  def toRules(rules: Seq[ArtifactRule]): Seq[Rewriter.Rule] = {
+    def present(p: String) = Option(p).filter(p => p != "NULL" && p.nonEmpty)
+    rules.map(r => Rewriter.Rule(r.pattern, present(r.pat1), present(r.pat2),
+      banner = s"catalog artifact: ${r.pattern}"))
+  }
 }
 
 /** Deterministic SYSTABLE/SYSUSER/SYSDEPENDENCY-shaped fixture — the

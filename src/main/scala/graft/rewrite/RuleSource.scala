@@ -1,6 +1,12 @@
 package graft.rewrite
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.CodingErrorAction
+
+import scala.io.Codec
+
+import org.apache.hadoop.conf.Configuration
+
+import graft.core.Ctl
 
 /** S5: rule-list sources with ragged-arity handling.
   *
@@ -47,17 +53,13 @@ object RuleSource {
     }
 
   /** Load a rule file charset-aware (the reference's `codecs.open(f, "r",
-    * common.charset)`, Common/common.py:338-347 — EUC-JP fallback etc.).
-    *
-    * Spark's text source decodes UTF-8 only on the read path (its
-    * `encoding` option is write-side), so non-UTF-8 rule files ride the
-    * binaryFile source and decode with the requested charset. Rule lists
-    * are tiny control data — driver-side by design. */
-  def load(spark: SparkSession, path: String, encoding: String = "UTF-8")
-      : (Seq[Rewriter.Rule], Seq[Rewriter.Replace]) = {
-    val bytes = spark.read.format("binaryFile").load(path)
-      .select("content").head().getAs[Array[Byte]](0)
-    val text = new String(bytes, java.nio.charset.Charset.forName(encoding))
-    parse(text.split("\r?\n", -1).toSeq)
-  }
+    * common.charset)`, Common/common.py:338-347 — EUC-JP fallback etc.),
+    * through the path's own Hadoop FileSystem like every control file. Bytes
+    * the charset cannot decode become U+FFFD rather than failing the read, so
+    * a wrong charset yields rules that match nothing. */
+  def load(conf: Configuration, path: String, encoding: String = "UTF-8")
+      : (Seq[Rewriter.Rule], Seq[Rewriter.Replace]) =
+    parse(Ctl.readLines(conf, path, Codec(encoding)
+      .onMalformedInput(CodingErrorAction.REPLACE)
+      .onUnmappableCharacter(CodingErrorAction.REPLACE)))
 }

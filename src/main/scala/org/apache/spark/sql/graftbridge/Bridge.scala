@@ -6,7 +6,8 @@ import org.apache.spark.sql.classic
 /** Bridge to `Dataset.ofRows` (private[sql]): the sanctioned escape hatch
   * for a library that builds its own LogicalPlan nodes (here: graft's
   * TopKPerKeyNode) and needs them back as a DataFrame. Lives under the
-  * spark.sql namespace solely for that access; contains no Spark patches. */
+  * spark.sql namespace solely for access to such private helpers; contains
+  * no Spark patches. */
 object GraftBridge {
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: LogicalPlan): org.apache.spark.sql.DataFrame =
@@ -21,6 +22,12 @@ object GraftBridge {
 
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     classic.ExpressionUtils.column(e)
+
+  /** `SparkHadoopUtil.newConfiguration` (private[spark]): the Hadoop
+    * configuration a SparkContext over `conf` would carry, with no context
+    * started. */
+  def hadoopConf(conf: org.apache.spark.SparkConf): org.apache.hadoop.conf.Configuration =
+    org.apache.spark.deploy.SparkHadoopUtil.newConfiguration(conf)
 }
 
 /** Serializable Hadoop Configuration carrier (Configuration itself is not

@@ -35,15 +35,6 @@ class EngineSpec extends SparkTestBase {
     assert(!new java.io.File(s"$base/bad.staging").exists)
   }
 
-  test("resume reconciliation is an anti-join over checkpoint state") {
-    import spark.implicits._
-    val listed = Seq("a", "b", "c", "d").toDF("t")
-    val done = Seq("b", "d").toDF("t")
-    val pending = graft.extract.Extract.pendingWork(listed, done, "t")
-      .collect().map(_.getString(0)).sorted
-    assert(pending.sameElements(Array("a", "c")))
-  }
-
   test("ragged rule-list source parses 4/3/2-field lines (S5)") {
     val (rules, replaces) = graft.rewrite.RuleSource.parse(Seq(
       "# comment line",
@@ -115,6 +106,12 @@ class EngineSpec extends SparkTestBase {
     assert(sitesOf("spark.sql.legacy.parquet.nanosAsLong") == Seq("graft/core/Engine.scala"))
   }
 
+  test("Engine.hadoopConf resolves file: paths as a session does, with no session") {
+    val conf = graft.core.Engine.hadoopConf()
+    assert(conf.get("fs.file.impl") == classOf[graft.core.LocalFs].getName)
+    assert(conf.get("fs.file.impl") == spark.sparkContext.hadoopConfiguration.get("fs.file.impl"))
+  }
+
   /** Classes the codegen cache compiled while `f` ran. */
   private def compiles(f: => Unit): Long = {
     val before = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -142,9 +139,11 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("the reload-script rewriter and the gates import nothing from Spark") {
-    // script-sized text and control logic runs as plain Scala: a session,
-    // plan compiles and jobs cost seconds on a cold JVM for a MB-sized script
-    Seq("graft/rewrite/Rewriter.scala", "graft/premigration/Gates.scala").foreach { f =>
+    // script-sized text, catalog rows and control logic run as plain Scala:
+    // a session, plan compiles and jobs cost seconds on a cold JVM for a
+    // MB-sized script or a catalog-sized rule list
+    Seq("graft/rewrite/Rewriter.scala", "graft/premigration/Gates.scala",
+        "graft/rewrite/RuleAssembly.scala", "graft/rewrite/RuleSource.scala").foreach { f =>
       val text = java.nio.file.Files.readString(java.nio.file.Paths.get("src/main/scala", f))
       assert(!text.contains("org.apache.spark"), s"$f uses Spark")
     }

@@ -106,7 +106,7 @@ class RewriterSpec extends SparkTestBase {
 
   test("catalog-assembled rules comment dbo/_sap_ objects and dependent views") {
     import graft.rewrite.RuleAssembly
-    val assembled = RuleAssembly.toRules(RuleAssembly.fixtureRelation(spark))
+    val assembled = RuleAssembly.toRules(RuleAssembly.fixture)
     // multilevel closure: v_audit2 depends on audit_log only through v_audit
     assert(assembled.exists(r => r.pattern == "v_audit2" && r.pat1.contains("CREATE VIEW")))
     // LIKE-ESCAPE owner matching: xsap_ops matches '_sap\_%', sapling does not
@@ -129,6 +129,27 @@ class RewriterSpec extends SparkTestBase {
     assert(res.filter(_.text.contains("orders2")).forall(l => !l.commented))
   }
 
+  test("rule assembly walks a view-dependency cycle and keeps SQL LIKE semantics") {
+    import graft.rewrite.RuleAssembly
+    val rules = RuleAssembly.assemble(
+      users = Seq((1, "dbo"), (2, "Xsap_ops"), (3, "sap_"), (4, "_sap_x")),
+      tables = Seq((1, 101, "t", 1, "BASE", "IQ"), (2, 102, "u", 2, "BASE", "IQ")),
+      indexes = Nil, triggers = Nil,
+      procs = Seq(("sp", 1), ("spx", 1), ("sap_loader", 1), ("Sa_upper", 1)),
+      objects = Seq((101, "t"), (201, "v1"), (202, "v2")),
+      // v1 → t, v2 → v1, and v1 → v2 closes a cycle
+      deps = Seq((201, 101), (202, 201), (201, 202)))
+    def has(pattern: String, pat1: String) = rules.exists(r => r.pattern == pattern && r.pat1 == pat1)
+    assert(has("v1", "CREATE VIEW") && has("v2", "CREATE VIEW"))
+    // '_sap\_%': any one character, then a literal sap_, case-folded
+    assert(has("u", "CREATE TABLE"))
+    assert(rules.filter(_.pat1 == "GRANT CONNECT").map(_.pattern).toSet == Set("Xsap_ops", "_sap_x"))
+    // 'sp_%' and 'sa_%' need a character after the prefix and match case
+    assert(has("sp", "CREATE procedure") && has("Sa_upper", "CREATE procedure"))
+    assert(!has("spx", "CREATE procedure") && !has("sap_loader", "CREATE procedure"))
+    assert(rules.distinct == rules)
+  }
+
   test("charset-aware rule source: Latin-1 bytes decode faithfully (S4/C3)") {
     import graft.rewrite.RuleSource
     val dir = java.nio.file.Files.createTempDirectory("graft_charset")
@@ -137,13 +158,13 @@ class RewriterSpec extends SparkTestBase {
     val content = "Straße,STRASSE\nMüller,HDLADMIN\nCREATE INDEX,COMMENT,HNG\n"
     java.nio.file.Files.write(f,
       content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val (rules, replaces) = RuleSource.load(spark, f.toString, encoding = "ISO-8859-1")
+    val (rules, replaces) = RuleSource.load(spark.sparkContext.hadoopConfiguration, f.toString, encoding = "ISO-8859-1")
     assert(replaces.contains(Rewriter.Replace("Straße", "STRASSE")))
     assert(replaces.contains(Rewriter.Replace("Müller", "HDLADMIN")))
     assert(rules.exists(r => r.pattern == "CREATE INDEX" && r.pat1.contains("HNG")))
     // and the same bytes read as UTF-8 must NOT round-trip (proves the
     // encoding option is actually honored, not silently ignored)
-    val (_, wrong) = RuleSource.load(spark, f.toString, encoding = "UTF-8")
+    val (_, wrong) = RuleSource.load(spark.sparkContext.hadoopConfiguration, f.toString, encoding = "UTF-8")
     assert(!wrong.contains(Rewriter.Replace("Straße", "STRASSE")))
   }
 
@@ -163,11 +184,11 @@ class RewriterSpec extends SparkTestBase {
     val f = dir.resolve("rules_eucjp.list")
     val content = "東京テーブル,COMMENT,HNG\n大阪,OSAKA\n"
     java.nio.file.Files.write(f, content.getBytes(java.nio.charset.Charset.forName(cs)))
-    val (rules, replaces) = RuleSource.load(spark, f.toString, encoding = cs)
+    val (rules, replaces) = RuleSource.load(spark.sparkContext.hadoopConfiguration, f.toString, encoding = cs)
     assert(rules.exists(r => r.pattern == "東京テーブル" && r.pat1.contains("HNG")))
     assert(replaces.contains(Rewriter.Replace("大阪", "OSAKA")))
     // same bytes as UTF-8 must not round-trip (the charset is load-bearing)
-    val (wrongRules, _) = RuleSource.load(spark, f.toString, encoding = "UTF-8")
+    val (wrongRules, _) = RuleSource.load(spark.sparkContext.hadoopConfiguration, f.toString, encoding = "UTF-8")
     assert(!wrongRules.exists(_.pattern == "東京テーブル"))
   }
 

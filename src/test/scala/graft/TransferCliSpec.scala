@@ -509,6 +509,92 @@ class TransferCliSpec extends SparkTestBase {
       assertThrows[IllegalArgumentException](graft.cli.Main.main(combo))
   }
 
+  test("cli names an unknown flag or a flag missing its value instead of ignoring it") {
+    val out = Files.createTempDirectory("graft_badflag").toString
+    for ((args, named) <- Seq(
+        Array("--onlyschema", "--sfdri", sfDir, "--out", out) -> "--sfdri",
+        Array("--onlyschema", "--sfdir", "--out", out) -> "--sfdir",
+        Array("--onlyschema", "--out") -> "--out")) {
+      val err = intercept[IllegalArgumentException](graft.cli.Main.main(args))
+      assert(err.getMessage.contains(named), err.getMessage)
+    }
+    assert(!Files.exists(Paths.get(s"$out/AutoUpdated_Reload.sql")))
+  }
+
+  test("cli --onlyschema with --out makes no temp run dir") {
+    import scala.jdk.CollectionConverters._
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def runDirs = Files.list(tmp).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("graft_run")).toSet
+    val before = runDirs
+    val out = Files.createTempDirectory("graft_cli_schema").resolve("out").toString
+    // in-process: this phase builds no session, so it leaves the suite's alone
+    graft.cli.Main.main(Array("--onlyschema", "--out", out))
+    assert(Files.exists(Paths.get(s"$out/AutoUpdated_Reload.sql")))
+    assert(Files.exists(Paths.get(s"$out/Foreign_Key_Constraint.sql")))
+    assert(runDirs == before, s"new run dirs: ${runDirs -- before}")
+    assert(!spark.sparkContext.isStopped)
+  }
+
+  test("--onlyschema in a fresh JVM starts no SparkContext") {
+    import scala.jdk.CollectionConverters._
+    // a listener class that does not exist: creating a SparkContext throws
+    def fork(phase: String, out: String): (Int, String) = {
+      val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
+      val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx512m") ++ opens ++
+        Seq("-Dspark.extraListeners=graft.NoSuchListener",
+          "-cp", System.getProperty("java.class.path"),
+          "graft.cli.Main", phase, "--sfdir", sfDir, "--out", out)
+      val log = Files.createTempFile("graft_fork", ".log")
+      val p = new ProcessBuilder(cmd.asJava).redirectErrorStream(true)
+        .redirectOutput(log.toFile).start()
+      if (!p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)) {
+        p.destroyForcibly()
+        fail(s"$phase did not finish: ${Files.readString(log)}")
+      }
+      (p.exitValue(), Files.readString(log))
+    }
+    val root = Files.createTempDirectory("graft_fork_schema")
+    val (rc, log) = fork("--onlyschema", root.resolve("schema").toString)
+    assert(rc == 0, log)
+    // the scripts equal the session route's, byte for byte, rw-r--r--
+    graft.cli.Main.onlySchema(spark, root.resolve("session").toString)
+    Seq("AutoUpdated_Reload.sql", "Foreign_Key_Constraint.sql").foreach { f =>
+      val forked = root.resolve("schema").resolve(f)
+      assert(java.util.Arrays.equals(Files.readAllBytes(forked),
+        Files.readAllBytes(root.resolve("session").resolve(f))), f)
+      assert(mode(forked) == "644", f)
+    }
+    // the trap works: a phase over table data builds a session and fails
+    val (preRc, preLog) = fork("--premigration", root.resolve("pre").toString)
+    assert(preRc != 0 && preLog.contains("graft.NoSuchListener"), preLog)
+  }
+
+  test("re-running --fullload keeps the Y record of an empty table") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val dataDir = Files.createTempDirectory("graft_emptysf")
+    graft.core.Tables.names.foreach { n =>
+      Files.copy(Paths.get(s"$sfDir/$n.parquet"), dataDir.resolve(s"$n.parquet"))
+    }
+    Seq.empty[(Long, String)].toDF("id", "name").coalesce(1)
+      .write.parquet(dataDir.resolve("tmp_empty").toString)
+    val part = Files.list(dataDir.resolve("tmp_empty")).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.move(part, dataDir.resolve("zz_empty.parquet"))
+    val out = Files.createTempDirectory("graft_emptyload").toString
+    graft.cli.Main.fullExtraction(spark, dataDir.toString, out)
+    assert(Files.readAllLines(Paths.get(s"$out/ExtractedTables.out")).asScala
+      .exists(l => l.startsWith("graft.zz_empty,") && l.endsWith(",0")))
+    for (run <- 1 to 3) {
+      graft.cli.Main.fullLoad(spark, out)
+      val loaded = Files.readAllLines(Paths.get(s"$out/HDL_LoadedTables.out")).asScala
+      assert(loaded.contains("graft.zz_empty,0,Y"), s"run $run: $loaded")
+      assert(loaded.size == graft.core.Tables.names.size + 1, s"run $run: $loaded")
+    }
+  }
+
   test("--onlyschema and --onlydata run their phase subsets only") {
     import scala.jdk.CollectionConverters._
     val so = Files.createTempDirectory("graft_onlyschema").toString
@@ -558,10 +644,7 @@ class TransferCliSpec extends SparkTestBase {
     assert(r2.forall(_.ok) && r2.map(_.tableName) == Seq("region"))
     assert(Files.readString(Paths.get(failedList)).trim.isEmpty)
     // final reconciliation invariant: everything loaded
-    import spark.implicits._
-    val extracted = Seq("nation", "region", "supplier").toDF("t")
-    val loaded = (okNames ++ r2.map(_.tableName)).toSeq.toDF("t")
-    assert(Loader.unloadedTables(extracted, loaded, "t").count() == 0)
+    assert(okNames ++ r2.map(_.tableName) == Set("nation", "region", "supplier"))
   }
 
   /** A path's permission bits, sticky bit included, in octal. */
